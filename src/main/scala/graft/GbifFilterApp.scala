@@ -32,8 +32,10 @@ object GbifFilterApp {
       argv(i) match {
         case "-t" | "--tag" => tag = true
         case "--single-file" => singleFile = true
-        case "--backbone" => backbone = argv(i + 1); i += 1
-        case "--occurrence" => occurrence = argv(i + 1); i += 1
+        case flag @ ("--backbone" | "--occurrence") =>
+          require(i + 1 < argv.length, s"$flag needs a parquet path")
+          if (flag == "--backbone") backbone = argv(i + 1) else occurrence = argv(i + 1)
+          i += 1
         case p => positional += p
       }
       i += 1

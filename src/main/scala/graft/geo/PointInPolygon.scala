@@ -76,11 +76,15 @@ object PointInPolygon {
       while (i < n) {
         val x1 = ring(2 * i); val y1 = ring(2 * i + 1)
         val x2 = ring(2 * i + 2); val y2 = ring(2 * i + 3)
-        if (onSegment(lon, lat, x1, y1, x2, y2)) return true
-        // ray casting: horizontal ray towards +x
-        if ((y1 > lat) != (y2 > lat)) {
-          val xCross = x1 + (lat - y1) / (y2 - y1) * (x2 - x1)
-          if (lon < xCross) inside = !inside
+        // a point outside the edge's closed latitude span can neither lie
+        // on the edge nor be crossed by it, so most edges stop here
+        if ((lat >= y1 || lat >= y2) && (lat <= y1 || lat <= y2)) {
+          if (onSegment(lon, lat, x1, y1, x2, y2)) return true
+          // ray casting: horizontal ray towards +x
+          if ((y1 > lat) != (y2 > lat)) {
+            val xCross = x1 + (lat - y1) / (y2 - y1) * (x2 - x1)
+            if (lon < xCross) inside = !inside
+          }
         }
         i += 1
       }
@@ -89,13 +93,11 @@ object PointInPolygon {
     inside
   }
 
+  /** Collinear and in the longitude span; the caller checked latitude. */
   private def onSegment(px: Double, py: Double,
-      x1: Double, y1: Double, x2: Double, y2: Double): Boolean = {
-    val cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-    if (cross != 0.0) return false
-    px >= math.min(x1, x2) && px <= math.max(x1, x2) &&
-      py >= math.min(y1, y2) && py <= math.max(y1, y2)
-  }
+      x1: Double, y1: Double, x2: Double, y2: Double): Boolean =
+    (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1) == 0.0 &&
+      px >= math.min(x1, x2) && px <= math.max(x1, x2)
 
   /** Bounding box of all rings: (minLon, minLat, maxLon, maxLat).
     * Used to emit a sargable pre-filter conjunct that Parquet row-group

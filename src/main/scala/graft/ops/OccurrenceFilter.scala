@@ -9,12 +9,17 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2.3/§2.4/§2.5): the Spark-shaped version of
   * `GbifHelper.has_occurrences` (`gbif_helper.py:85-92`) and
   * `apply_spatial_filter` (`gbif_helper.py:53-58`), with the `occ_cache`
-  * memoization (C1, `apply_gbif_filter.py:109,136-141`) replaced by a
-  * `distinct()` of in-zone taxon keys.
+  * memoization (C1, `apply_gbif_filter.py:109,136-141`) replaced by one
+  * relation of distinct in-zone taxon keys, [[inZoneKeys]].
   *
   * The reference's `limit=1` probe is an EXISTS, never a count
   * (`gbif_helper.py:87-92`) — here a semi-join / distinct-key join, which
   * short-circuits per key the same way.
+  *
+  * The J2 tag join and the J4 child semi-join read [[inZoneKeys]]
+  * unmodified, so in one product plan AQE runs the scan, zone test and
+  * distinct once and reuses their stages (`ReusedExchange`); a marker
+  * column on one side would break the reuse and double the scan.
   *
   * Scale notes: the zone filter runs *before* the distinct and carries a
   * sargable bbox conjunct (GeoFunctions.zonePredicate), so at 100 TB the
@@ -44,13 +49,12 @@ object OccurrenceFilter {
     */
   def tagExistsInZone(resolved: DataFrame, occurrence: DataFrame,
       cfg: FilterConfig): DataFrame = {
-    val keys = inZoneKeys(occurrence, cfg).withColumn("_graft_in_zone", lit(true))
+    val keys = inZoneKeys(occurrence, cfg)
     resolved
       .join(keys, resolved(TaxonomyResolver.TaxidCol) === keys("taxonKey"), "left")
       .withColumn(TagCol,
-        when(col(TaxonomyResolver.TaxidCol).isNull, lit(null).cast("boolean"))
-          .otherwise(col("_graft_in_zone").isNotNull))
-      .drop("taxonKey", "_graft_in_zone")
+        when(col(TaxonomyResolver.TaxidCol).isNotNull, keys("taxonKey").isNotNull))
+      .drop(keys("taxonKey"))
   }
 
   /** J4-style spatial semi-join: keep only rows of `taxa` (keyed by

@@ -41,10 +41,6 @@ object RankResolver {
   def idsCol(target: String): String =
     s"gbif_filter_resolved_${target.toLowerCase(java.util.Locale.ROOT)}_ids"
 
-  /** Accepted children of `parents` (a 1-column DataFrame of parent taxids)
-    * at `cfg.resolveToRank`, habitat-filtered, zone-filtered.
-    * Returns (parentKey, key, canonicalName).
-    */
   /** A3 (SURVEY.md §2.5): optional per-parent children cap, the engine
     * analog of the reference's REST page limit (`gbif_helper.py:41` —
     * 1000, with a broken truncation warning we do not replicate).
@@ -61,47 +57,55 @@ object RankResolver {
       case None => children
     }
 
+  /** J3 lookup: (parentKey, key, canonicalName) of the accepted,
+    * habitat-filtered children of `parents` (a 1-column DataFrame of parent
+    * taxids) at `cfg.resolveToRank`, one row per matching lineage entry.
+    */
+  private def candidates(parents: DataFrame, backbone: DataFrame,
+      cfg: FilterConfig): DataFrame = {
+    val target = cfg.resolveToRank.getOrElse("SPECIES").toUpperCase(java.util.Locale.ROOT)
+    val habitatCond = cfg.habitat.map(h => upper(col("habitat")) === lit(h)).getOrElse(lit(true))
+    backbone
+      .filter(col("taxonomicStatus") === "ACCEPTED" &&
+        upper(col("rank")) === lit(target) && habitatCond)
+      .select(col("key"), col("canonicalName"), explode(col("higherTaxonKeys")).as("_graft_anc"))
+      // a semi-join: repeated parent keys neither fan out nor need a distinct
+      .join(parents.toDF("_graft_parent"), col("_graft_anc") === col("_graft_parent"), "left_semi")
+      .select(col("_graft_anc").as("parentKey"), col("key"), col("canonicalName"))
+  }
+
+  /** Distinct in-zone children of `parents`: (parentKey, key, canonicalName).
+    * The A3 cap applies at the children lookup, like the reference's limit;
+    * then J4: the child must itself occur in the zone.
+    */
   def childrenInZone(parents: DataFrame, backbone: DataFrame,
       occurrence: DataFrame, cfg: FilterConfig,
-      maxChildren: Option[Int] = None): DataFrame = {
-    val target = cfg.resolveToRank.getOrElse("SPECIES")
-    val habitatCond = cfg.habitat
-      .map(h => upper(col("habitat")) === lit(h))
-      .getOrElse(lit(true))
-    val cand = backbone
-      .filter(col("taxonomicStatus") === "ACCEPTED" &&
-        upper(col("rank")) === lit(target.toUpperCase(java.util.Locale.ROOT)) && habitatCond)
-      .select(col("key"), col("canonicalName"),
-        explode(col("higherTaxonKeys")).as("_graft_anc"))
-    val parentKeys = broadcast(parents.toDF("_graft_parent").distinct())
-    val joined = cand
-      .join(parentKeys, col("_graft_anc") === col("_graft_parent"), "inner")
-      .select(col("_graft_parent").as("parentKey"), col("key"), col("canonicalName"))
-      .distinct() // an ancestor may appear once per lineage entry
-    // A3 cap applies at the children lookup, like the reference's limit;
-    // then J4: child must itself occur in the zone
-    OccurrenceFilter.filterInZone(capChildren(joined, maxChildren), "key", occurrence, cfg)
-  }
+      maxChildren: Option[Int] = None): DataFrame =
+    OccurrenceFilter.filterInZone(
+      capChildren(candidates(parents, backbone, cfg).distinct(), maxChildren),
+      "key", occurrence, cfg)
 
   /** Adds the two T2 list columns to a tagged, resolved input. Parents not
     * eligible (wrong rank, tag != true, resolution off) get null lists —
     * matching the reference's `None` (`apply_gbif_filter.py:176-183`).
+    * Parents are picked by resolved rank alone and the tag gates only the
+    * final lists join, so Catalyst prunes J2 from the parents branch and the
+    * children lookup runs beside the occurrence scan, not after it.
     */
   def resolveChildren(tagged: DataFrame, backbone: DataFrame,
       occurrence: DataFrame, cfg: FilterConfig): DataFrame = {
     val target = cfg.resolveToRank.getOrElse("SPECIES")
-    val eligible = col(OccurrenceFilter.TagCol) === true &&
-      col(TaxonomyResolver.RankCol).isin(ResolvableRanks: _*) &&
+    val rankOk = col(TaxonomyResolver.RankCol).isin(ResolvableRanks: _*) &&
       col(TaxonomyResolver.RankCol) =!= lit(target.toUpperCase(java.util.Locale.ROOT))
+    val eligible = col(OccurrenceFilter.TagCol) === true && rankOk
 
-    val parents = tagged.filter(eligible)
-      .select(col(TaxonomyResolver.TaxidCol)).distinct()
-
-    val lists = childrenInZone(parents, backbone, occurrence, cfg)
+    val parents = tagged.filter(rankOk).select(col(TaxonomyResolver.TaxidCol))
+    // A1: the set drops lineage repeats; sorted (name, key) structs give
+    // canonical lists with name/id pairing kept
+    val lists = OccurrenceFilter
+      .filterInZone(candidates(parents, backbone, cfg), "key", occurrence, cfg)
       .groupBy(col("parentKey"))
-      // A1: canonical order (name, key) → deterministic lists regardless of
-      // partitioning; name/id pairing kept via one struct sort.
-      .agg(array_sort(collect_list(struct(col("canonicalName"), col("key"))))
+      .agg(array_sort(collect_set(struct(col("canonicalName"), col("key"))))
         .as("_graft_children"))
       .select(col("parentKey"),
         expr("transform(_graft_children, c -> c.canonicalName)").as(namesCol(target)),

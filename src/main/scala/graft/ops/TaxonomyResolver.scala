@@ -7,24 +7,27 @@ import org.apache.spark.sql.functions._
 /** J1 name-resolution join (SURVEY.md §2.3): the Spark-shaped version of
   * `GbifHelper.get_valid_taxid` (`gbif_helper.py:11-32`) + the per-row
   * normalization of `apply_gbif_filter.py:117-131` (P2/P3/P4) + the memo
-  * cache C1 (`id_cache`) which becomes a `distinct()` on the join keys.
+  * cache C1 (`id_cache`), which becomes a lookup built once per name.
   *
   * Semantics preserved from the reference:
   *  - a pre-supplied taxid wins over the name and passes through
   *    *unvalidated* (`gbif_helper.py:12-13`, acknowledged TODO);
   *  - names match the backbone exactly (strict mode, `gbif_helper.py:18`);
-  *    an ambiguous name — more than one candidate after the rank/kingdom
-  *    constraints — resolves to null, like GBIF strict matching;
+  *    an ambiguous name — more than one candidate row after the
+  *    rank/kingdom constraints, identical duplicate rows included —
+  *    resolves to null, like GBIF strict matching;
   *  - synonyms chase to `acceptedUsageKey` (`gbif_helper.py:22-24`);
   *  - the resolved rank is the *matched* backbone rank
   *    (`gbif_helper.py:25-29`); for taxid passthrough it is the caller's
   *    rank hint, unvalidated.
   *
-  * Scale notes: the candidate join runs on `distinct (name, rank)` keys —
-  * cardinality bounded by the backbone (~10^7 rows), not the input
-  * (~10^11 rows at 100 TB). The backbone side is projected to 6 columns
-  * before joining and broadcast when `broadcastDims` (default); with very
-  * large backbones disable it and let AQE pick a shuffle join.
+  * Plan: the kingdom-filtered backbone is semi-joined to the input's names
+  * and one hash aggregate collects each name's rows as a (taxid, rank)
+  * list; an input row resolves when exactly one entry fits its rank hint.
+  * The aggregate is bounded by the backbone rows named in the input, not by
+  * the backbone (~10^7 rows) or the input (~10^11 rows at 100 TB). The
+  * lookup is broadcast when `broadcastDims` (default); with very large
+  * inputs disable it and let AQE pick a shuffle join.
   */
 object TaxonomyResolver {
 
@@ -56,58 +59,39 @@ object TaxonomyResolver {
       .orElse(cfg.taxaRank.map(r => lit(r.toUpperCase(java.util.Locale.ROOT)).cast("string")))
       .getOrElse(lit(null).cast("string"))
 
-    val keyed = input
-      .withColumn(NameKey, nameExpr)
-      .withColumn("_graft_taxid_in", taxidExpr)
-      .withColumn(RankKey, rankExpr)
+    val keyed = input.select(col("*"),
+      nameExpr.as(NameKey), taxidExpr.as("_graft_taxid_in"), rankExpr.as(RankKey))
 
-    // C1: distinct lookup keys — the Spark version of `id_cache`
+    // C1: one lookup entry per name — the Spark version of `id_cache`
     // (`apply_gbif_filter.py:108,127-131`), without the str/int cache-miss
-    // bug (SURVEY.md §7.5.4).
+    // bug (SURVEY.md §7.5.4)
     val names = keyed
       .filter(col("_graft_taxid_in").isNull && col(NameKey).isNotNull)
-      .select(NameKey, RankKey)
-      .distinct()
+      .select(col(NameKey))
+    val bb = cfg.taxaKingdom
+      .map(k => backbone.filter(col("kingdom") === lit(k)))
+      .getOrElse(backbone)
+    // every candidate row is kept (collect_list, not a set): two identical
+    // backbone rows still make a name ambiguous
+    val lookup = bb
+      .join(names, col("canonicalName") === col(NameKey), "left_semi")
+      .groupBy(col("canonicalName").as("_lk_name"))
+      .agg(collect_list(struct(
+        when(col("taxonomicStatus") === "SYNONYM", col("acceptedKey"))
+          .otherwise(col("key")).as("taxid"),
+        upper(col("rank")).as("rank"))).as("_lk_cands"))
 
-    val bb0 = backbone.select(
-      col("key"), col("canonicalName"), upper(col("rank")).as("_bb_rank"),
-      col("kingdom"), col("taxonomicStatus"), col("acceptedKey"))
-    val bb1 = cfg.taxaKingdom
-      .map(k => bb0.filter(col("kingdom") === lit(k)))
-      .getOrElse(bb0)
-    val bb = if (broadcastDims) broadcast(bb1) else bb1
-
-    // strict match: exact canonical name, rank constraint when hinted
-    val cand = names.join(bb,
-      col(NameKey) === col("canonicalName") &&
-        (col(RankKey).isNull || col(RankKey) === col("_bb_rank")),
-      "inner")
-
-    // exactly-one-candidate = EXACT; synonym chases to acceptedKey
-    val lookup = cand
-      .groupBy(NameKey, RankKey)
-      .agg(count(lit(1)).as("_cnt"),
-        min(struct(col("key"), col("_bb_rank"), col("taxonomicStatus"),
-          col("acceptedKey"))).as("_m"))
-      .filter(col("_cnt") === 1)
-      // fresh aliases: the lookup side derives from `keyed`, so reusing the
-      // key names would make the join condition self-referential
-      .select(col(NameKey).as("_lk_name"), col(RankKey).as("_lk_rank"),
-        when(col("_m.taxonomicStatus") === "SYNONYM", col("_m.acceptedKey"))
-          .otherwise(col("_m.key")).as("_graft_name_taxid"),
-        col("_m._bb_rank").as("_graft_name_rank"))
-
+    // strict match: exactly one candidate the rank hint allows
+    val cands = filter(col("_lk_cands"),
+      c => col(RankKey).isNull || c("rank") === col(RankKey))
+    val hit = when(size(cands) === 1, cands(0))
+    val taxidIn = col("_graft_taxid_in")
     val lookupSide = if (broadcastDims) broadcast(lookup) else lookup
     keyed
-      .join(lookupSide,
-        col(NameKey) === col("_lk_name") && col(RankKey) <=> col("_lk_rank"),
-        "left")
-      .drop("_lk_name", "_lk_rank")
-      // P4 precedence-coalesce (`apply_gbif_filter.py:123`): taxid wins
-      .withColumn(TaxidCol, coalesce(col("_graft_taxid_in"), col("_graft_name_taxid")))
-      .withColumn(RankCol,
-        when(col("_graft_taxid_in").isNotNull, col(RankKey))
-          .otherwise(col("_graft_name_rank")))
-      .drop(NameKey, RankKey, "_graft_taxid_in", "_graft_name_taxid", "_graft_name_rank")
+      .join(lookupSide, col(NameKey) === col("_lk_name"), "left")
+      .select(input.columns.map(col) ++ Seq(
+        // P4 precedence-coalesce (`apply_gbif_filter.py:123`): taxid wins
+        coalesce(taxidIn, hit("taxid")).as(TaxidCol),
+        when(taxidIn.isNotNull, col(RankKey)).otherwise(hit("rank")).as(RankCol)): _*)
   }
 }

@@ -91,5 +91,19 @@ class GbifFilterAppSpec extends AnyFunSuite with SparkTestBase {
     assertThrows[IllegalArgumentException](GbifFilterApp.parseArgs(Array("a", "b")))
     assertThrows[IllegalArgumentException](
       GbifFilterApp.parseArgs(Array("a", "b", "c"))) // missing dims
+    // a path flag as the last argument is a usage error, not an index error
+    val noBackbone = intercept[IllegalArgumentException](GbifFilterApp.parseArgs(
+      Array("a", "b", "c", "--occurrence", "o", "--backbone")))
+    assert(noBackbone.getMessage.contains("--backbone needs a parquet path"))
+    val noOccurrence = intercept[IllegalArgumentException](GbifFilterApp.parseArgs(
+      Array("a", "b", "c", "--backbone", "b", "--occurrence")))
+    assert(noOccurrence.getMessage.contains("--occurrence needs a parquet path"))
+  }
+
+  test("a run leaves no cached relation in the caller's session") {
+    spark.catalog.clearCache()
+    GbifFilterApp.main(Array(tmp("config.yml"), tmp("input.csv"), tmp("out_cache"),
+      "--backbone", tmp("backbone"), "--occurrence", tmp("occ"), "--single-file"))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

@@ -2,6 +2,11 @@ package graft
 
 import graft.config.FilterConfig
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden end-to-end tests (SURVEY.md §5.2.1): re-creates the reference's
@@ -90,5 +95,40 @@ class GbifFilterJobSpec extends AnyFunSuite with SparkTestBase {
     val row = out.collect().head
     assert(row.getBoolean(out.columns.indexOf("gbif_filter_tag")),
       "occurrence at polygon vertex (0,0) must count as inside")
+  }
+
+  test("one run scans the occurrence table once, caches nothing, counts duplicate candidates") {
+    // parquet-backed occurrence, so its scan is a FileSourceScanExec; the
+    // other fixtures are local relations
+    val occPath = s"${System.getProperty("java.io.tmpdir")}/graft_job_occ_${ProcessHandle.current().pid()}"
+    GbifFixtures.occurrence(spark).write.mode("overwrite").parquet(occPath)
+    try {
+      // a second, identical "Lumbricus terrestris" row: J1 counts candidate
+      // rows, so the name is ambiguous; as a child of Lumbricus it is listed once
+      val bb = GbifFixtures.backbone(spark)
+      val input = {
+        import spark.implicits._
+        GbifFixtures.taxa(spark).union(Seq(("r8", "Lumbricus terrestris", null, null))
+          .asInstanceOf[Seq[(String, String, String, String)]].toDF("id", "name", "taxid", "rank"))
+      }
+      val out = GbifFilterJob.run(input, bb.union(bb.filter(col("key") === 2L)),
+        spark.read.parquet(occPath), cfg, tagMode = true)
+      val rows = out.collect().toSeq
+      val tags = tagMap(rows, 4)
+      assert(tags("r8") == null, "two identical candidate rows must leave the name unresolved")
+      assert(tags("r1") == true && tags("r2") == true && tags("r7") == false)
+      val r1 = rows.find(_.getString(0) == "r1").get
+      assert(r1.getSeq[String](5) == Seq("Lumbricus terrestris") && r1.getSeq[Long](6) == Seq(2L))
+
+      val plan = out.queryExecution.executedPlan // the final adaptive plan
+      val helper = new AdaptiveSparkPlanHelper {}
+      val scans = helper.collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, s"the occurrence scan must execute once:\n$plan")
+      assert(helper.collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }.nonEmpty,
+        s"the second in-zone key use must be a ReusedExchange:\n$plan")
+      assert(helper.collectWithSubqueries(plan) { case m: InMemoryTableScanExec => m }.isEmpty &&
+        out.queryExecution.withCachedData.collect { case m: InMemoryRelation => m }.isEmpty,
+        s"a product run must not read a cached relation:\n$plan")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(occPath))
   }
 }

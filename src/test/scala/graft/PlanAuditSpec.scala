@@ -568,6 +568,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     "ops/RankResolver.scala" ->
       (1, "children list per parent taxon, capped by the reference's " +
         "children limit (the a3 truncation gate)"),
+    "ops/TaxonomyResolver.scala" ->
+      (1, "J1 candidate (taxid, rank) rows per canonical name: the " +
+        "backbone rows sharing one name (homonyms, synonyms, duplicates), " +
+        "independent of input and occurrence volume"),
     "text/Vocabulary.scala" ->
       (2, "per-doc (pos, tid) token list (row-scaled: a doc's tokens " +
         "already fit its row); per-(term, block) postings bounded by " +

@@ -23,6 +23,27 @@ class PointInPolygonSpec extends AnyFunSuite {
     assert(PointInPolygon.contains(10, 10, square), "far vertex is inside")
   }
 
+  test("vertices and horizontal edges: boundary in, same latitude outside out") {
+    // a step polygon: horizontal edges at lat 0, 5 and 10, vertices at
+    // every corner, so rays run along edges and through vertices
+    val step = PointInPolygon.parsePolygon(
+      "POLYGON ((0 0, 10 0, 10 5, 5 5, 5 10, 0 10, 0 0))")
+    for ((lon, lat) <- Seq((10.0, 0.0), (10.0, 5.0), (5.0, 5.0), (5.0, 10.0), (0.0, 10.0)))
+      assert(PointInPolygon.contains(lon, lat, step), s"vertex ($lon, $lat) is inside")
+    for ((lon, lat) <- Seq((7.0, 5.0), (2.0, 10.0), (3.0, 0.0)))
+      assert(PointInPolygon.contains(lon, lat, step), s"horizontal edge ($lon, $lat) is inside")
+    assert(PointInPolygon.contains(2, 5, step), "interior at a horizontal edge's latitude")
+    for ((lon, lat) <- Seq((-1.0, 5.0), (12.0, 5.0), (-1.0, 0.0), (11.0, 0.0),
+        (-1.0, 10.0), (6.0, 10.0), (7.0, 7.0), (5.0, 10.5), (5.0, -0.5)))
+      assert(!PointInPolygon.contains(lon, lat, step), s"($lon, $lat) is outside")
+    // a diamond: rays through its side vertices and its apexes
+    val diamond = PointInPolygon.parsePolygon("POLYGON ((5 0, 10 5, 5 10, 0 5, 5 0))")
+    assert(PointInPolygon.contains(5, 10, diamond) && PointInPolygon.contains(0, 5, diamond))
+    assert(PointInPolygon.contains(5, 5, diamond) && PointInPolygon.contains(7.5, 2.5, diamond))
+    for ((lon, lat) <- Seq((4.0, 10.0), (6.0, 0.0), (-1.0, 5.0), (11.0, 5.0)))
+      assert(!PointInPolygon.contains(lon, lat, diamond), s"($lon, $lat) is outside the diamond")
+  }
+
   test("polygon with a hole (even-odd)") {
     val rings = PointInPolygon.parsePolygon(
       "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))")
