@@ -388,73 +388,120 @@ object Dedup {
     * |x∩y| ≥ ceil(τ·max(|x|,|y|))`, and if `|x∩y| ≥ α` the smallest
     * common shingle in the canonical order has rank `≤ |x|−α+1` in x and
     * `≤ |y|−α+1` in y — so it lies in BOTH prefixes. The candidate join
-    * also applies the length filter `τ·|x| ≤ |y| ≤ |x|/τ`. Verification
-    * is exact set intersection over the FULL shingle relation, and the
-    * τ threshold is evaluated in exact integers
-    * (`τd·i ≥ τn·(|x|+|y|−i)`), so the output is bit-identical to the
-    * all-shingle join's.
+    * also applies the length filter `τ·|x| ≤ |y| ≤ |x|/τ` and the PPJoin
+    * positional filter: on the row of the smallest common shingle, at
+    * 0-based positions `p_x`, `p_y`, every common shingle sits at or
+    * after those positions, so `|x∩y| ≤ min(|x|−p_x, |y|−p_y)`, and
+    * `J ≥ τ ⟺ (τd+τn)·|x∩y| ≥ τn·(|x|+|y|)` makes
+    * `(τd+τn)·min(|x|−p_x, |y|−p_y) ≥ τn·(|x|+|y|)` necessary on that
+    * row. Rows of other shared shingles may fail it; they are dropped
+    * by verification anyway.
+    *
+    * Verification: each candidate row carries both documents' canonical
+    * shingle arrays; `|x∩y|` is the size of their intersection, and the
+    * row survives only if its shingle is the FIRST element of that
+    * intersection (canonical order is kept by `array_intersect`). That
+    * shingle lies in both prefixes, so every qualifying pair is emitted
+    * exactly once — no `distinct`, no regroup. The τ threshold is
+    * evaluated in exact integers (`τd·i ≥ τn·(|x|+|y|−i)`), so the
+    * output is bit-identical to the all-shingle join's.
     *
     * Scale: the all-shingle self-join shuffles Σ df² candidate rows —
     * at 100 TB the frequent-shingle tail dominates. The prefix join
     * shuffles only prefix occurrences (the RAREST ~(1−τ) fraction of
     * each doc's shingles), cutting candidates by orders of magnitude
-    * while staying lossless — the standard exact ssjoin at scale. Costs
-    * added: one df agg (shingle-bounded, map-side combined) and one
-    * per-doc rank window (docs are small; the window never sees the
-    * corpus). τ is passed as the exact rational `tauNum/tauDen`.
+    * while staying lossless. Costs added: one df window on the shingle
+    * and one per-doc token array (a doc's shingles, row-scaled).
+    * τ is passed as the exact rational `tauNum/tauDen`.
     */
-  /** The `(_id, ngram, n_shingles)` PREFIX relation of a shingle set:
-    * each doc's first `s − ceil(τ·s) + 1` shingles in the global
-    * (df, shingle) canonical order. Shared by [[jaccardPrefixPairs]]
-    * and the `ssjoin` harness probes, so a change to the prefix-length
-    * formula can never leave the measured candidate volume describing a
-    * different relation than the shipped operator joins.
-    */
-  private[graft] def prefixShingleRelation(ng: DataFrame,
-      tauNum: Int, tauDen: Int): DataFrame = {
-    val dfc = ng.groupBy(col("ngram")).agg(count(lit(1)).as("_df"))
-    val cnt = ng.groupBy(col("_id")).agg(count(lit(1)).as("n_shingles"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_id")).orderBy(col("_df"), col("ngram"))
-    ng.join(dfc, Seq("ngram"))
-      .join(cnt, Seq("_id"))
-      .withColumn("_pos", row_number().over(w))
-      .filter(col("_pos") <= col("n_shingles")
-        - expr(s"($tauNum * n_shingles + ${tauDen - 1}) DIV $tauDen") + 1)
-      .select(col("_id"), col("ngram"), col("n_shingles"))
-  }
-
   def jaccardPrefixPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, tauNum: Int, tauDen: Int,
-      precomputedShingles: Option[DataFrame] = None): DataFrame = {
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
-      s"tau must be a rational in (0, 1], got $tauNum/$tauDen")
-    val ng = resolveShingles(df, idCol, textCol, n, precomputedShingles)
-    val cnt = ng.groupBy(col("_id")).agg(count(lit(1)).as("n_shingles"))
-    val prefix = Persisted.track(prefixShingleRelation(ng, tauNum, tauDen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // no shuffle_hash: see ngramJaccardPairs — SMJ spills, hash maps don't
-    val cand = prefix.select(col("_id").as("id_a"), col("ngram"),
-        col("n_shingles").as("n_a"))
-      .join(prefix.select(col("_id").as("id_b"), col("ngram"),
-        col("n_shingles").as("n_b")), Seq("ngram"))
-      .filter(col("id_a") < col("id_b")
-        && lit(tauDen) * col("n_b") >= lit(tauNum) * col("n_a")
-        && lit(tauDen) * col("n_a") >= lit(tauNum) * col("n_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val inter = cand
-      .join(ng.select(col("_id").as("id_a"), col("ngram")), Seq("id_a"))
-      .join(ng.select(col("_id").as("id_b"), col("ngram")), Seq("id_b", "ngram"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(cnt.select(col("_id").as("id_a"), col("n_shingles").as("n_a")), Seq("id_a"))
-      .join(cnt.select(col("_id").as("id_b"), col("n_shingles").as("n_b")), Seq("id_b"))
+      precomputedShingles: Option[DataFrame] = None): DataFrame =
+    prefixJoin(df, idCol, textCol, n, tauNum, tauDen, precomputedShingles,
+        containment = false)
       .filter(lit(tauDen.toLong) * col("n_inter")
         >= lit(tauNum.toLong) * (col("n_a") + col("n_b") - col("n_inter")))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select(col("id_a"), col("id_b"), (col("n_inter").cast("double")
+        / (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
+
+  private def requireTau(tauNum: Int, tauDen: Int): Unit =
+    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
+      s"tau must be a rational in (0, 1], got $tauNum/$tauDen")
+
+  /** `(_id, n, toks)`: each document's distinct shingles as one array in
+    * the global (df asc, shingle asc) canonical order, with its length.
+    * df is a window count on the shingle, so no lookup join is keyed on
+    * it.
+    */
+  private[graft] def canonicalTokens(ng: DataFrame): DataFrame =
+    ng.withColumn("_df", count(lit(1)).over(Window.partitionBy(col("ngram"))))
+      .groupBy(col("_id"))
+      .agg(array_sort(collect_list(struct(col("_df"), col("ngram")))).as("_st"))
+      .select(col("_id"), size(col("_st")).cast("long").as("n"),
+        col("_st.ngram").as("toks"))
+
+  /** `(_id, n, _p, ngram)`: the first `n − ceil(τ·n) + 1` entries of each
+    * [[canonicalTokens]] array with their 0-based position — the prefix
+    * the prefix joins probe with. Shared with the `ssjoin` harness
+    * probes, so a measured candidate volume is the shipped relation's.
+    */
+  private[graft] def positionedPrefix(docs: DataFrame,
+      tauNum: Int, tauDen: Int): DataFrame =
+    positioned(docs, slice(col("toks"), lit(1),
+      expr(s"CAST(n - ($tauNum * n + ${tauDen - 1}) DIV $tauDen + 1 AS INT)")))
+
+  private def positioned(docs: DataFrame, toks: Column): DataFrame =
+    docs.select(col("_id"), col("n"), posexplode(toks).as(Seq("_p", "ngram")))
+
+  /** The shared prefix ssjoin: `(id_a, id_b, n_a, n_b, n_inter)` for every
+    * pair that may reach τ, each pair once. Symmetric (Jaccard): both
+    * sides probe with their prefix, `id_a < id_b`, length and positional
+    * filter. Containment (`a` = sub, `b` = super): the sub probes with its
+    * prefix against every super position, `id_a ≠ id_b`, and
+    * `τd·min(n_a−p_a, n_b−p_b) ≥ τn·n_a`. One `ngram`-keyed join; the
+    * verify attaches both token arrays by id and keeps only the row of
+    * the pair's first common shingle (see [[jaccardPrefixPairs]]).
+    */
+  private def prefixJoin(df: DataFrame, idCol: String, textCol: String,
+      n: Int, tauNum: Int, tauDen: Int, precomputedShingles: Option[DataFrame],
+      containment: Boolean): DataFrame = {
+    requireTau(tauNum, tauDen)
+    // a fresh explode is NOT persisted: it feeds one window, and the
+    // branches above the token arrays share its exchanges
+    val ng = precomputedShingles match {
+      case Some(pre) => validateShingleArtifact(pre, n); pre
+      case None => shingles(df, idCol, textCol, n)
+    }
+    val docs = canonicalTokens(ng)
+    def side(s: String, pos: DataFrame): DataFrame = pos.select(
+      col("_id").as(s"id_$s"), col("n").as(s"n_$s"), col("_p").as(s"p_$s"), col("ngram"))
+    def toks(s: String): DataFrame =
+      docs.select(col("_id").as(s"id_$s"), col("toks").as(s"t_$s"))
+    val (tn, td) = (lit(tauNum.toLong), lit(tauDen.toLong))
+    // common shingles at or after the row's positions on both sides
+    val overlapBound = least(col("n_a") - col("p_a"), col("n_b") - col("p_b"))
+    val prefix = positionedPrefix(docs, tauNum, tauDen)
+    val (superSide, cond) =
+      if (containment)
+        (positioned(docs, col("toks")),
+          col("id_a") =!= col("id_b") && td * overlapBound >= tn * col("n_a"))
+      else
+        (prefix, col("id_a") < col("id_b")
+          && td * col("n_b") >= tn * col("n_a")
+          && td * col("n_a") >= tn * col("n_b")
+          && (td + tn) * overlapBound >= tn * (col("n_a") + col("n_b")))
+    // no shuffle_hash: see ngramJaccardPairs — SMJ spills, hash maps don't.
+    // The prefix side is on the right: both sides derive from `docs` with
+    // equal size estimates, and a broadcast then builds the right side,
+    // which for containment is the ~(1−τ) sub prefix, not every super row
+    side("b", superSide).join(side("a", prefix), Seq("ngram"))
+      .filter(cond)
+      .join(toks("a"), Seq("id_a"))
+      .join(toks("b"), Seq("id_b"))
+      .withColumn("_common", array_intersect(col("t_a"), col("t_b")))
+      .filter(element_at(col("_common"), 1) === col("ngram"))
+      .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
+        size(col("_common")).cast("long").as("n_inter"))
   }
 
   /** CHARACTER-LEVEL near-duplicate verify: [[jaccardPrefixPairs]]
@@ -534,7 +581,7 @@ object Dedup {
       maxDf: Option[Int] = None,
       maxDfFraction: Option[Double] = Some(DefaultMaxDfFraction),
       precomputedShingles: Option[DataFrame] = None): DataFrame = {
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen)
+    requireTau(tauNum, tauDen)
     val ng = resolveShingles(df, idCol, textCol, n, precomputedShingles)
     val ngF =
       if (maxDf.isEmpty && maxDfFraction.isEmpty) ng
@@ -567,36 +614,26 @@ object Dedup {
     * joining only a's prefix against ALL of b's shingles is LOSSLESS
     * (the gated query's oracle is [[containmentPairs]]' own SQL, so
     * every hash pass re-proves it). Only the SUB side can prefix:
-    * containment puts no lower bound on the super's similarity, so the
-    * super side must expose every shingle — the candidate cut is
-    * ~(1−τ) of the sub side's join volume (10× at τ = 9/10), not the
-    * symmetric join's square. No length filter exists either (any
-    * |super| is admissible).
+    * the super's own share `|a∩b|/|b|` may be arbitrarily small, so the
+    * super side exposes every shingle — the candidate cut is ~(1−τ) of
+    * the sub side's join volume (10× at τ = 9/10), not the symmetric
+    * join's square. A one-sided length filter does exist: `|b| ≥ |a∩b| ≥
+    * ceil(τ·|a|)`. The positional filter enforces it and more: on the
+    * row of the smallest common shingle, at 0-based positions `p_a`,
+    * `p_b`, `|a∩b| ≤ min(|a|−p_a, |b|−p_b)`, so
+    * `τd·min(|a|−p_a, |b|−p_b) ≥ τn·|a|` is necessary on that row.
+    * Verification is the same first-common-shingle array intersection
+    * as [[jaccardPrefixPairs]], so each ordered pair is emitted once;
+    * the threshold is exact integers (`τd·i ≥ τn·|a|`).
     */
   def containmentPrefixPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, tauNum: Int, tauDen: Int,
-      precomputedShingles: Option[DataFrame] = None): DataFrame = {
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen)
-    val ng = resolveShingles(df, idCol, textCol, n, precomputedShingles)
-    val cnt = ng.groupBy(col("_id")).agg(count(lit(1)).as("n_shingles"))
-    val pref = prefixShingleRelation(ng, tauNum, tauDen)
-    // no shuffle_hash: see ngramJaccardPairs — SMJ spills, hash maps don't
-    val cand = pref.select(col("_id").as("id_sub"), col("ngram"))
-      .join(ng.select(col("_id").as("id_super"), col("ngram")), Seq("ngram"))
-      .filter(col("id_sub") =!= col("id_super"))
-      .select(col("id_sub"), col("id_super")).distinct()
-    cand
-      .join(ng.select(col("_id").as("id_sub"), col("ngram")), Seq("id_sub"))
-      .join(ng.select(col("_id").as("id_super"), col("ngram")),
-        Seq("id_super", "ngram"))
-      .groupBy(col("id_sub"), col("id_super"))
-      .agg(count(lit(1)).as("n_inter"))
-      .join(cnt.select(col("_id").as("id_sub"), col("n_shingles").as("n_sub")),
-        Seq("id_sub"))
-      .filter(lit(tauDen.toLong) * col("n_inter")
-        >= lit(tauNum.toLong) * col("n_sub"))
-      .select(col("id_sub"), col("id_super"), col("n_inter"), col("n_sub"))
-  }
+      precomputedShingles: Option[DataFrame] = None): DataFrame =
+    prefixJoin(df, idCol, textCol, n, tauNum, tauDen, precomputedShingles,
+        containment = true)
+      .filter(lit(tauDen.toLong) * col("n_inter") >= lit(tauNum.toLong) * col("n_a"))
+      .select(col("id_a").as("id_sub"), col("id_b").as("id_super"),
+        col("n_inter"), col("n_a").as("n_sub"))
 
   /** WINNOWING fingerprint pairs (Schleimer, Wilkerson & Aiken 2003 —
     * the MOSS local fingerprinting algorithm): per document, hash every

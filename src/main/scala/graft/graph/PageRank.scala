@@ -119,9 +119,9 @@ object PageRank {
       // logical plan is truncated to a LogicalRDD either way (plan
       // growth stays bounded — the original failure mode), but eager=true
       // ran one blocking driver job PER ROUND at build time; lazy defers
-      // materialization into the caller's single action, collapsing
-      // iters-1 job submissions (measured ~2x on the 3 gated graph
-      // queries, results bit-identical)
+      // materialization into the caller's single action: iters-1 fewer
+      // job submissions, wall-clock neutral at sf0.1 (OPTIMIZATION_r17
+      // s2-3), results bit-identical
       if (it < iters) ranks = ranks.localCheckpoint(false)
     }
     ranks

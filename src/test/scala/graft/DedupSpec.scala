@@ -112,25 +112,103 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("prefix-filtered ssjoin equals the all-shingle exact join (lossless)") {
+    import DedupSpec._
     val docs = DerivedModel.table(spark, "/root/testdata/sf0.001", "documents")
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-      tau = 0.8, maxDfFraction = None)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = jaccardRows(Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
+      tau = 0.8, maxDfFraction = None))
     Persisted.unpersistAll()
-    val pref = Dedup.jaccardPrefixPairs(docs, "doc_id", "text", n = 3,
-      tauNum = 4, tauDen = 5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Persisted.unpersistAll()
-    assert(pref == exact, s"prefix ${pref.size} pairs vs exact ${exact.size}")
+    val pref = jaccardRows(Dedup.jaccardPrefixPairs(docs, "doc_id", "text", n = 3,
+      tauNum = 4, tauDen = 5))
+    assertPairsOnce(pref.map(r => (r._1, r._2)))
+    assert(pref == exact, s"prefix ${pref.size} rows vs exact ${exact.size}")
     assert(exact.nonEmpty, "test data should contain planted near-dups")
+    // containment: the sub-prefix join equals the all-shingle one row for
+    // row, intersection and sub size included
+    val exactCont = containmentRows(Dedup.containmentPairs(docs, "doc_id", "text",
+      n = 3, tauNum = 9, tauDen = 10, maxDfFraction = None))
+    Persisted.unpersistAll()
+    val prefCont = containmentRows(Dedup.containmentPrefixPairs(docs, "doc_id", "text",
+      n = 3, tauNum = 9, tauDen = 10))
+    assertPairsOnce(prefCont.map(r => (r._1, r._2)))
+    assert(prefCont == exactCont, s"prefix ${prefCont.size} rows vs exact ${exactCont.size}")
+    assert(exactCont.nonEmpty, "test data should contain contained pairs")
     // the tau=1 prefix (single rarest shingle per doc) still finds
     // exact-duplicate pairs — on the fixture corpus, which has one
     // (sf0.001 documents plant near-dups only: its tau=1 set is empty)
-    val exactDups = Dedup.jaccardPrefixPairs(corpus, "doc_id", "text", n = 3,
-      tauNum = 1, tauDen = 1)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Persisted.unpersistAll()
-    assert(exactDups == Set((1L, 2L)), s"exact-dup pair at tau=1, got $exactDups")
+    val exactDups = jaccardRows(Dedup.jaccardPrefixPairs(corpus, "doc_id", "text", n = 3,
+      tauNum = 1, tauDen = 1))
+    assert(exactDups == Seq((1L, 2L, 1.0)), s"exact-dup pair at tau=1, got $exactDups")
+  }
+
+  test("tau outside (0, 1] fails by name in the prefix and containment operators") {
+    for ((tn, td) <- Seq((0, 5), (6, 5))) {
+      val ops: Seq[() => Any] = Seq(
+        () => Dedup.jaccardPrefixPairs(corpus, "doc_id", "text", n = 3,
+          tauNum = tn, tauDen = td),
+        () => Dedup.containmentPairs(corpus, "doc_id", "text", n = 3,
+          tauNum = tn, tauDen = td),
+        () => Dedup.containmentPrefixPairs(corpus, "doc_id", "text", n = 3,
+          tauNum = tn, tauDen = td))
+      ops.foreach { op =>
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains(s"tau must be a rational in (0, 1], got $tn/$td"),
+          e.getMessage)
+      }
+    }
+  }
+
+  test("prefix ssjoins plan one ngram join, cache nothing and stay lazy") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val staged = s"${System.getProperty("java.io.tmpdir")}/graft_spec_ppjoin_" +
+      s"${ProcessHandle.current().pid()}"
+    val sc = spark.sparkContext
+    // job starts in this session, in bus order; a marker job in its own
+    // group proves every earlier start has been delivered
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        started.put(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def jobsDuring(build: => Unit): Int = {
+      started.clear()
+      build
+      sc.setJobGroup("graft-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(g => g != null && g != "graft-marker").size
+    }
+    Dedup.shingles(corpus, "doc_id", "text", n = 3).write.mode("overwrite").parquet(staged)
+    sc.addSparkListener(listener)
+    try {
+      val pre = Some(spark.read.parquet(staged))
+      for ((name, op) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "jaccard" -> (() => Dedup.jaccardPrefixPairs(corpus, "doc_id", "text",
+            n = 3, tauNum = 4, tauDen = 5, precomputedShingles = pre)),
+          "containment" -> (() => Dedup.containmentPrefixPairs(corpus, "doc_id", "text",
+            n = 3, tauNum = 9, tauDen = 10, precomputedShingles = pre)))) {
+        var out: org.apache.spark.sql.DataFrame = null
+        val jobs = jobsDuring { out = op() }
+        assert(jobs == 0, s"$name: building the DataFrame started $jobs job(s)")
+        assert(out.collect().nonEmpty, s"$name: the fixture corpus has pairs")
+        val plan = out.queryExecution.executedPlan // the final adaptive plan
+        val helper = new AdaptiveSparkPlanHelper {}
+        val ngramJoins = helper.collectWithSubqueries(plan) {
+          case j: BaseJoinExec if j.leftKeys.size == 1 &&
+            j.leftKeys.head.references.map(_.name).toSet == Set("ngram") => j
+        }
+        assert(ngramJoins.size == 1, s"$name: one join keyed on ngram alone:\n$plan")
+        assert(helper.collectWithSubqueries(plan) { case m: InMemoryTableScanExec => m }.isEmpty &&
+          out.queryExecution.withCachedData.collect { case m: InMemoryRelation => m }.isEmpty,
+          s"$name: the prefix join must not read a cached relation:\n$plan")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staged))
+    }
   }
 
   test("posting-list pair generation equals the self-join exactly") {
@@ -530,5 +608,27 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       rate
     }.toSeq
     assert(rates == rates.sorted, s"detection not monotone in J: $rates")
+  }
+}
+
+object DedupSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.scalatest.Assertions._
+
+  /** `(id_a, id_b, jaccard)` rows ordered by pair, repeats kept. */
+  def jaccardRows(df: DataFrame): Seq[(Long, Long, Double)] =
+    df.select("id_a", "id_b", "jaccard").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(r => (r._1, r._2))
+
+  /** `(id_sub, id_super, n_inter, n_sub)` rows ordered by pair, repeats kept. */
+  def containmentRows(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.select("id_sub", "id_super", "n_inter", "n_sub").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sortBy(r => (r._1, r._2))
+
+  def assertPairsOnce(pairs: Seq[(Long, Long)]): Unit = {
+    val twice = pairs.groupBy(identity).collect { case (p, ps) if ps.size > 1 => p }
+    assert(twice.isEmpty, s"pairs emitted more than once: $twice")
   }
 }

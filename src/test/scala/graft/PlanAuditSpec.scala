@@ -579,9 +579,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     "text/Chunking.scala" ->
       (1, "per-(doc, chunk) token reassembly, bounded by chunkSize"),
     "dedup/Dedup.scala" ->
-      (3, "per-doc CDC chunk list (row-scaled); the OPT-IN " +
+      (4, "per-doc CDC chunk list (row-scaled); the OPT-IN " +
         "postingListPairs arm (documented uniform-corpora-only, measured " +
-        "OOM cliff in TUNING); per-doc span list (row-scaled)"),
+        "OOM cliff in TUNING); per-doc span list (row-scaled); the prefix " +
+        "ssjoins' per-doc canonical token array (one document's shingles, " +
+        "row-scaled)"),
     "sim/Similarity.scala" ->
       (3, "meanPool partials per pooled group (chunks per doc, " +
         "row-scaled); 2x centroid re-assembly over dsub<=dim positions " +

@@ -66,18 +66,14 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       taus.foreach { case (tn, td) =>
         // double tau is exact here: shingle counts are tiny integers,
         // so distinct rationals never collide onto one double
-        val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 2,
-          tau = tn.toDouble / td, maxDfFraction = None)
-          .select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        val exact = DedupSpec.jaccardRows(Dedup.ngramJaccardPairs(docs, "doc_id",
+          "text", n = 2, tau = tn.toDouble / td, maxDfFraction = None))
         Persisted.unpersistAll()
-        val pref = Dedup.jaccardPrefixPairs(docs, "doc_id", "text", n = 2,
-          tauNum = tn, tauDen = td)
-          .select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        Persisted.unpersistAll()
+        val pref = DedupSpec.jaccardRows(Dedup.jaccardPrefixPairs(docs, "doc_id",
+          "text", n = 2, tauNum = tn, tauDen = td))
+        DedupSpec.assertPairsOnce(pref.map(r => (r._1, r._2)))
         assert(pref == exact, s"seed $seed tau $tn/$td: " +
-          s"prefix ${pref.size} vs exact ${exact.size}")
+          s"prefix ${pref.size} vs exact ${exact.size} rows")
       }
     }
   }
@@ -92,18 +88,14 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       val docs = sample(corpusGen, seed).zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       for ((tn, td) <- Seq((1, 2), (3, 4), (9, 10))) {
-        val exact = Dedup.containmentPairs(docs, "doc_id", "text", n = 2,
-          tauNum = tn, tauDen = td, maxDfFraction = None)
-          .select("id_sub", "id_super").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        val exact = DedupSpec.containmentRows(Dedup.containmentPairs(docs, "doc_id",
+          "text", n = 2, tauNum = tn, tauDen = td, maxDfFraction = None))
         Persisted.unpersistAll()
-        val pref = Dedup.containmentPrefixPairs(docs, "doc_id", "text",
-          n = 2, tauNum = tn, tauDen = td)
-          .select("id_sub", "id_super").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        Persisted.unpersistAll()
+        val pref = DedupSpec.containmentRows(Dedup.containmentPrefixPairs(docs,
+          "doc_id", "text", n = 2, tauNum = tn, tauDen = td))
+        DedupSpec.assertPairsOnce(pref.map(r => (r._1, r._2)))
         assert(pref == exact, s"seed $seed tau $tn/$td: " +
-          s"${pref.size} vs ${exact.size}")
+          s"${pref.size} vs ${exact.size} rows")
       }
     }
   }

@@ -1845,7 +1845,8 @@ object ScalePerfHarness {
     val all = ng.groupBy(col("ngram"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("c"))
       .agg(sum(expr("c * (c - 1) / 2"))).head().getDouble(0)
-    val prefCand = Dedup.prefixShingleRelation(ng, 4, 5).groupBy(col("ngram"))
+    val prefCand = Dedup.positionedPrefix(Dedup.canonicalTokens(ng), 4, 5)
+      .groupBy(col("ngram"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("c"))
       .agg(sum(expr("c * (c - 1) / 2"))).head().getDouble(0)
     println(s"[occupancy] ssjoin candidates: all-shingle=$all prefix=$prefCand " +
@@ -1871,7 +1872,8 @@ object ScalePerfHarness {
     val allB = ngB.groupBy(col("ngram"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("c"))
       .agg(sum(expr("c * (c - 1) / 2"))).head().getDouble(0)
-    val prefCandB = Dedup.prefixShingleRelation(ngB, 4, 5).groupBy(col("ngram"))
+    val prefCandB = Dedup.positionedPrefix(Dedup.canonicalTokens(ngB), 4, 5)
+      .groupBy(col("ngram"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("c"))
       .agg(sum(expr("c * (c - 1) / 2"))).head().getDouble(0)
     println(f"[occupancy] ssjoin+boilerplate candidates: " +
