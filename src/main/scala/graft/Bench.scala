@@ -1,38 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core: the target box is local[32] (driver contract);
-    // an unset env must not silently run 8x underparallelized
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions DERIVED FROM INPUT VOLUME, not core count
-      // (r17, guide §2.2): `partitions = cpus` fragmented KB-scale
-      // shuffles 32 ways and made the suite faster at 8 cores than 32;
-      // volume-derived width (5 at sf0.1) beat both (253 -> 221 s, see
-      // OPTIMIZATION_r17 "anti-scaling"). Saturates at 4x cluster width
-      // at production volumes. SPARK_GRAFT_SHUFFLE_PARTS overrides for
-      // probes.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS",
-          graft.ops.Parallelism.derivedShufflePartitions(sfDir,
-            cpus.toIntOption.getOrElse(
-              Runtime.getRuntime.availableProcessors())).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // expose cached plans' output partitioning to EnsureRequirements
-      // (tfidfKeyTerms' one-exchange plan depends on the cached
-      // repartition staying visible; see TUNING "Session")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table gates saveAsTable; keep the warehouse out of cwd
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_${ProcessHandle.current().pid()}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local[SPARK_GRAFT_CPUS, else every core] at the volume-derived
+    // shuffle width: `partitions = cpus` fragmented KB-scale shuffles 32
+    // ways and made the suite faster at 8 cores than 32; volume-derived
+    // width (5 at sf0.1) beat both (253 -> 221 s, OPTIMIZATION_r17
+    // "anti-scaling")
+    val spark = GraftSession.local(sfDir)
     // the bucket-offset cumsum windows (Chunking.packSequences,
     // Sampling.withGlobalPosition*/tokenBudgetSelect) run over
     // <= 16^prefixChars-row OFFSETS relations — single-partition BY
@@ -45,9 +20,8 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // optional subset for local investigation: SPARK_GRAFT_BENCH_ONLY=a,b
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    // optional subset for local investigation: SPARK_GRAFT_ONLY=a,b
+    val only = SparkEntry.onlyQueries
     // optional best-of-N mode (SPARK_GRAFT_BENCH_REPEAT=2): re-run each
     // query N times and report the MINIMUM — the box's in-suite variance
     // is up to ±1.4x run-over-run (261.8 vs 218.1 s for the same code,
@@ -61,10 +35,9 @@ object Bench {
     // reshuffles neighbors between code changes and makes round-over-round
     // per-query timings incomparable (a query's time includes its
     // predecessor's GC debt)
-    val selected = (only match {
-      case Some(names) => SparkEntry.queries.filter(q => names.contains(q._1))
-      case None => SparkEntry.queries
-    }).toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .toSeq.sortBy(_._1)
     // untimed warmup: spin up executors/codegen and touch table footers so
     // the first timed query isn't charged for session initialization.
     // Exercise the agg/join/window codegen paths too — queries run in
@@ -89,12 +62,15 @@ object Bench {
     // dimension's alphabetically first consumer made per-query numbers
     // incomparable round-over-round (r8 verdict item 1). The cost is
     // still REPORTED (a "staging_sec" record) so staging drift stays
-    // visible round-over-round.
+    // visible round-over-round. A failure is loud on stdout too: the
+    // queries then stage on first use, so staging cost moves onto their
+    // clocks, and the per-query numbers must say so.
     val stagingT0 = System.nanoTime()
     try SparkEntry.prepareStagedFixtures(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[bench] fixture staging failed (queries will " +
         s"stage on first use): ${e}")
+      println(s"""{"metric":"staging_failed","error":${Verify.jsonString(e.toString)}}""")
     }
     val stagingSec = (System.nanoTime() - stagingT0) / 1e9
     Persisted.unpersistAll()

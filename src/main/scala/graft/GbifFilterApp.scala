@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
   * graft.GbifFilterApp CONFIG INPUT OUTPUT \
   *   --backbone PATH --occurrence PATH [-t|--tag] [--single-file]
   * }}}
+  *
+  * Run inside a caller's session (active or default), it uses that session
+  * exactly as it finds it: no config is written and the session is not
+  * stopped. Only with no session does it build one through [[GraftSession]]:
+  * master `SPARK_MASTER`, else `local[cpus]`, and the shuffle width derived
+  * from the backbone and occurrence volume.
   */
 object GbifFilterApp {
 
@@ -49,16 +55,10 @@ object GbifFilterApp {
 
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv)
-    val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("gbif-filter")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val callers = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = callers.getOrElse(GraftSession.build(
+      sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.cpus}]"),
+      GraftSession.derivedWidth(args.backbone, args.occurrence)))
     try {
       val cfg = FilterConfig.fromYaml(
         new String(java.nio.file.Files.readAllBytes(
@@ -69,6 +69,6 @@ object GbifFilterApp {
         spark.read.parquet(args.occurrence),
         cfg, tagMode = args.tag)
       Sources.writeCsv(out, args.output, cfg.sep, singleFile = args.singleFile)
-    } finally if (preExisting.isEmpty) spark.stop() // don't kill a caller's session
+    } finally if (callers.isEmpty) spark.stop()
   }
 }

@@ -12,12 +12,14 @@ import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
   *
   * {{{
   * spark.sql.extensions=graft.GraftExtensions
-  * // or: SparkSession.builder().withExtensions(new GraftExtensions)
+  * // or, on a session builder: .withExtensions(new GraftExtensions)
   * }}}
   *
-  * This is the deployment-grade route (survives session cloning, works
-  * from spark-submit/thrift-server); the per-function `register` helpers
-  * on GeoFunctions/SimExpressions/TextExpressions remain for ad-hoc use.
+  * This is the one registration path (survives session cloning, works
+  * from spark-submit/thrift-server); [[GraftSession]] installs it on every
+  * session the engine builds. Column-API callers need none of it: the
+  * `GeoFunctions`/`SimExpressions`/`TextExpressions` builders construct
+  * the expressions directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -604,6 +604,21 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     referenceQueries ++ analyticsQueries ++ extensionQueries ++ extensionQueries2
 
+  /** The local-iteration subset of [[queries]] that Bench, Verify and
+    * VerifyUnder run: the comma-separated names in `SPARK_GRAFT_ONLY`,
+    * or None (every query) when it is unset. A name that is not a query
+    * fails by name instead of silently selecting nothing.
+    */
+  def onlyQueries: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(parseOnly)
+
+  private[graft] def parseOnly(spec: String): Set[String] = {
+    val names = spec.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
   /** Operators from the reference's own inventory (SURVEY.md §2). */
   private def referenceQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- S1/P1: scan + projection + pushed filter ---------------------

@@ -1,9 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,14 +77,9 @@ object SimHashExpr {
     out
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_simhash", exprs => SimHashExpr(exprs.head), "scala_udf")
-
   /** Direct expression construction — no session-registry mutation, no
     * dependence on `SparkSession.active` (SQL-text use goes through
-    * [[register]] / `GraftExtensions`).
+    * `GraftExtensions`).
     */
   def simhashCol(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(SimHashExpr(

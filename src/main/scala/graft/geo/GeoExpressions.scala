@@ -1,6 +1,6 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -49,21 +49,10 @@ case class PointInPolygonExpr(first: Expression, second: Expression, third: Expr
   */
 object GeoFunctions {
 
-  /** Register `point_in_polygon` in the session function registry (the
-    * public route from a custom Expression to a Column in Spark 4).
-    * Idempotent; also makes the function usable from SQL text.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "point_in_polygon",
-        exprs => PointInPolygonExpr(exprs(0), exprs(1), exprs(2)),
-        "scala_udf")
-
   /** Codegen'd point-in-polygon predicate (lat/lon columns, WKT literal).
     * Direct expression construction — no session-registry mutation, no
     * dependence on `SparkSession.active` (SQL-text use goes through
-    * [[register]] / `GraftExtensions`).
+    * `GraftExtensions`).
     */
   def pointInPolygon(lat: Column, lon: Column, wkt: String): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}

@@ -34,6 +34,13 @@ final case class MediaFeatures(doc_id: Long, byte_len: Long, width: Int,
   * Scale notes: decode is a narrow per-partition map (no shuffle); codec
   * init cost is amortized per partition, not per row — the pattern that
   * matters when partitions hold thousands of multi-MB payloads.
+  *
+  * Process-wide side effect: the first png/jpeg encode or decode in a JVM
+  * calls `javax.imageio.ImageIO.setUseCache(false)`, which is JVM-GLOBAL.
+  * Every other `ImageIO` user in that driver or executor then buffers its
+  * streams in memory instead of a disk-backed temp file. Right for the
+  * KB-scale payloads here; a process that also decodes very large images
+  * through `ImageIO` should know its stream cache is off.
   */
 object Multimodal {
 

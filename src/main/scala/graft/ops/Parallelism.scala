@@ -46,13 +46,18 @@ object Parallelism {
     * under-represent in-flight row bytes by ~10×, so 4 MB of input ≈
     * tens of MB of the widest intermediate per partition).
     */
-  def derivedShufflePartitions(inputDir: String, cpus: Int): Int = {
+  def derivedShufflePartitions(inputDir: String, cpus: Int): Int =
+    derivedShufflePartitions(Seq(inputDir), cpus)
+
+  /** The same rule over the total bytes of several inputs (the product's
+    * backbone and occurrence tables). */
+  def derivedShufflePartitions(inputs: Seq[String], cpus: Int): Int = {
     def dirBytes(f: java.io.File): Long =
       if (f.isFile) f.length
       else Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
     val targetBytes = 4L << 20
-    val byVolume = ((dirBytes(new java.io.File(inputDir)) + targetBytes - 1)
-      / targetBytes).toInt
+    val bytes = inputs.map(p => dirBytes(new java.io.File(p))).sum
+    val byVolume = ((bytes + targetBytes - 1) / targetBytes).toInt
     math.min(math.max(byVolume, 4), 4 * math.max(cpus, 1))
   }
 

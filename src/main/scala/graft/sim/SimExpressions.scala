@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -220,22 +220,10 @@ object LshBucketExpr {
 
 object SimExpressions {
 
-  /** Register `graft_dot` / `graft_dot_i8` (idempotent); also usable from
-    * SQL text.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductExpr(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_dot_i8", exprs => Int8DotExpr(exprs(0), exprs(1)), "scala_udf")
-  }
-
   /** Codegen'd dot product; casts inputs to `array<double>`. Constructs
     * the expression directly — no session-registry mutation at Column-
     * build time, no binding to whichever session happens to be active
-    * (SQL-text use goes through [[register]] / `GraftExtensions`).
+    * (SQL-text use goes through `GraftExtensions`).
     */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(DotProductExpr(

@@ -56,26 +56,11 @@ case class ShingleGenerator(child: Expression, n: Int)
 }
 
 object ShingleGenerator {
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.catalyst.expressions.Literal
-
-  /** Register `graft_shingles(text, n)` (idempotent); usable from SQL and
-    * via [[shingles]]. The shingle size must be a literal.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_shingles",
-        exprs => exprs(1) match {
-          case Literal(n: Int, _) => ShingleGenerator(exprs(0), n)
-          case other => throw new IllegalArgumentException(
-            s"graft_shingles: n must be an integer literal, got $other")
-        },
-        "scala_udf")
+  import org.apache.spark.sql.Column
 
   /** Direct expression construction — no session-registry mutation, no
     * dependence on `SparkSession.active` (SQL-text use goes through
-    * [[register]] / `GraftExtensions`).
+    * `GraftExtensions`).
     */
   def shingles(c: Column, n: Int): Column =
     org.apache.spark.sql.GraftColumnBridge.column(ShingleGenerator(

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -45,14 +45,9 @@ object RollingHashExpr {
 }
 
 object TextExpressions {
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_rolling_hash", exprs => RollingHashExpr(exprs.head), "scala_udf")
-
   /** Direct expression construction — no session-registry mutation, no
     * dependence on `SparkSession.active` (SQL-text use goes through
-    * [[register]] / `GraftExtensions`).
+    * `GraftExtensions`).
     */
   def rollingHash(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(RollingHashExpr(

@@ -356,13 +356,13 @@ object Vocabulary {
     * (`size(toks) - size(array_remove(toks, t))` — one column per term,
     * whole-stage-codegen'd), NOT an explode + shuffle. ONE global
     * aggregate carries N, SDL and every per-term df; that 1-row result
-    * is fetched to the driver (O(1) bytes at ANY corpus size — the
-    * [[graft.graph.PageRank]] `nodes.count()` precedent, not a data
-    * collect) and idf is computed with the scalar [[log2Fixed]] — the
-    * IDENTICAL op sequence [[log2FixedCols]] unrolls, so the values are
-    * bit-equal. Scoring is then a pure map-side projection against
-    * literal constants followed by a TakeOrdered: the corpus is scanned
-    * twice and NOTHING wide ever shuffles. The r16 plan scanned and
+    * is fetched to the driver (O(1) bytes — the [[graft.graph.PageRank]]
+    * `nodes.count()` precedent, not a data collect) and idf is computed
+    * with the scalar [[log2Fixed]] — the IDENTICAL op sequence
+    * [[log2FixedCols]] unrolls, so the values are bit-equal. Scoring is
+    * then a pure map-side projection against literal constants followed
+    * by a TakeOrdered: the corpus is scanned twice and NOTHING wide ever
+    * shuffles. The r16 plan scanned and
     * re-tokenized the corpus in 5 subtrees, ran 3 wide aggregations, and
     * — the dominant cost at bench scale — carried the FracBits-unrolled
     * idf chain as ~120 Project nodes that the driver re-analyzed and
@@ -371,13 +371,23 @@ object Vocabulary {
     * arithmetic is unchanged op-for-op (oracle re-proven bit-identical).
     * Query sets wider than the cap keep the exploded shape — a column
     * per term stops being a sane plan somewhere past a dozen terms.
+    *
+    * Build-time snapshot: the stats fetch runs when the DataFrame is
+    * BUILT, and N, SDL and every df enter the plan as literals. Executing
+    * the returned DataFrame again after the source changed scores against
+    * the old stats; the exploded shape recomputes them per execution. A
+    * streaming input cannot be fetched from, so it takes the exploded
+    * shape. Bound: idf is `log2Fixed(2N+2, 2df+1)`, which needs
+    * `2N+2 < 2^33`, i.e. N < 2^32 documents; a larger corpus fails at
+    * build time with log2Fixed's message. An empty corpus runs the same
+    * column expressions over no rows, so both outcomes share one schema.
     */
   private[graft] val Bm25WideTermCap = 8
 
   def bm25SearchFixed(df: DataFrame, idCol: String, textCol: String,
       query: Seq[String], k: Int): DataFrame = {
     val terms = query.distinct
-    if (terms.isEmpty || terms.size > Bm25WideTermCap)
+    if (terms.isEmpty || terms.size > Bm25WideTermCap || df.isStreaming)
       return bm25SearchFixedExploded(df, idCol, textCol, query, k)
     // tf per term as size(toks) - size(array_remove(toks, t)): ArrayRemove
     // is whole-stage-codegen'd, where the lambda form filter(toks, _ = t)
@@ -399,13 +409,11 @@ object Vocabulary {
         terms.indices.map(i =>
           sum(when(col(s"_tf$i") > 0L, 1L).otherwise(0L)).as(s"_df$i")): _*)
       .head()
-    val n = statsRow.getLong(0)
-    if (n == 0L)
-      return base.select(col(idCol), lit(0L).as("bm25_fp"),
-        lit(0L).as("distinct_terms")).filter(lit(false)).limit(k)
-    val sdl = statsRow.getLong(1)
-    val idf = terms.indices.map(i =>
-      log2Fixed(2L * n + 2L, 2L * statsRow.getLong(2 + i) + 1L))
+    // SUM over no rows is null; an empty corpus scores no rows anyway
+    def stat(i: Int): Long = if (statsRow.isNullAt(i)) 0L else statsRow.getLong(i)
+    val n = stat(0)
+    val sdl = stat(1)
+    val idf = terms.indices.map(i => log2Fixed(2L * n + 2L, 2L * stat(2 + i) + 1L))
     val termScore = terms.indices.map { i =>
       when(col(s"_tf$i") > 0L, expr(
         s"(${idf(i)}L * 22L * _tf$i * ${sdl}L) DIV " +

@@ -1,10 +1,17 @@
 package graft
 
-/** Dev tool (test scope): print the executed plan of one or more gated
-  * queries without running them — the `.explain`-and-iterate loop the
-  * plan audits grew out of.
+/** Dev tool (test scope): print the plans of gated queries without
+  * running them — the `.explain`-and-iterate loop the plan audits grew
+  * out of. With no query names it covers every gated query.
   *
-  *   sbt "Test/runMain graft.ExplainMain x_merge_purge x_dedup_winnow"
+  *   sbt "Test/runMain graft.ExplainMain <sfDir> x_merge_purge x_dedup_winnow"
+  *   sbt "Test/runMain graft.ExplainMain <sfDir> --formatted g1_point_in_polygon"
+  *
+  * The default output is the executed plan (first 4000 chars).
+  * `--formatted` prints `explain("formatted")` instead — the operator tree
+  * plus each node's details, which is where PushedFilters on scans,
+  * broadcast joins on dimensions, WholeStageCodegen spans and exchange
+  * reuse show.
   *
   * Special arg `ARRAY_WINDOWS`: sweep EVERY gated query and report each
   * logical Window whose child output carries an ArrayType column
@@ -16,28 +23,36 @@ package graft
   */
 object ExplainMain {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    require(args.nonEmpty,
+      "usage: ExplainMain <sfDir> [--formatted] [query ... | ARRAY_WINDOWS]")
+    val sfDir = args.head
+    val formatted = args.contains("--formatted")
+    val names = args.tail.filterNot(_ == "--formatted").toSeq match {
+      case Seq() => SparkEntry.queries.keys.toSeq.sorted
+      case given => given
+    }
+    val spark = GraftSession.build("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
-    for (q <- args) {
-      if (q == "ARRAY_WINDOWS") sweepArrayWindows(spark)
+    for (q <- names) {
+      if (q == "ARRAY_WINDOWS") sweepArrayWindows(spark, sfDir)
       else {
         println(s"===== $q =====")
-        println(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-          .queryExecution.executedPlan.toString.take(4000))
+        try {
+          val df = SparkEntry.queries(q)(spark, sfDir)
+          if (formatted) df.explain("formatted")
+          else println(df.queryExecution.executedPlan.toString.take(4000))
+        } catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
       }
     }
     spark.stop()
   }
 
-  private def sweepArrayWindows(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private def sweepArrayWindows(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String): Unit = {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LW}
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan
+        val plan = fn(spark, sfDir).queryExecution.optimizedPlan
         plan.collect { case w: LW =>
           val arrs = w.child.output.filter(
             _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])

@@ -106,4 +106,15 @@ class GbifFilterAppSpec extends AnyFunSuite with SparkTestBase {
       "--backbone", tmp("backbone"), "--occurrence", tmp("occ"), "--single-file"))
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("a run leaves the caller's session config as it found it") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try {
+      GbifFilterApp.main(Array(tmp("config.yml"), tmp("input.csv"), tmp("out_conf"),
+        "--backbone", tmp("backbone"), "--occurrence", tmp("occ"), "--single-file"))
+      assert(spark.conf.get(key) == "7")
+    } finally spark.conf.set(key, before)
+  }
 }

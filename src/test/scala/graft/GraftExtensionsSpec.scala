@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SparkSessionExtensions route: the shared test session is built with
-  * `withExtensions(new GraftExtensions)` (SparkTestBase), so the custom
-  * expressions must resolve from plain SQL text with no per-function
-  * registration calls.
+/** The SparkSessionExtensions route, the one registration path: every
+  * session GraftSession builds (the shared test session among them)
+  * carries `withExtensions(new GraftExtensions)`, so the custom
+  * expressions must resolve from plain SQL text.
   */
 class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
 

@@ -592,21 +592,22 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     "SparkEntry.scala" ->
       (2, "a1 children names/ids per taxon, capped like RankResolver"))
 
-  test("every collect_list/collect_set site in main is on the " +
-    "bounded-group allowlist") {
+  /** Every `src/main` Scala file as (path under the graft package root,
+    * code with comments stripped) — the source the structure guards sweep.
+    */
+  private lazy val mainCode: Seq[(String, String)] = {
     val root = new java.io.File("src/main/scala/graft")
     assert(root.isDirectory, s"sweep root missing: ${root.getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
       else Seq(f)
-    val pat = "collect_(list|set)\\(".r
-    val counts = walk(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+    walk(root).filter(_.getName.endsWith(".scala")).map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       // strip comments STRUCTURALLY, not by line prefix: prose may NAME
-      // the functions, and a prefix filter both misses a trailing
+      // the swept calls, and a prefix filter both misses a trailing
       // `// ... collect_list(...)` after code and skips real code on a
       // line that OPENS with an inline /* block */ (which would let an
-      // unbounded agg land unseen — the failure this sweep exists for).
+      // unbounded agg land unseen — the failure these sweeps exist for).
       // No source line in this repo embeds "//" or "/*" inside a string
       // literal; the SQL twins spell list()/list_sort(), never these.
       val code =
@@ -614,9 +615,16 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
           .replaceAll("(?s)/\\*.*?\\*/", " ")
           .replaceAll("(?m)//.*$", " ")
         finally src.close()
+      root.toPath.relativize(f.toPath).toString -> code
+    }
+  }
+
+  test("every collect_list/collect_set site in main is on the " +
+    "bounded-group allowlist") {
+    val pat = "collect_(list|set)\\(".r
+    val counts = mainCode.flatMap { case (f, code) =>
       val n = pat.findAllIn(code).length
-      if (n > 0) Some(root.toPath.relativize(f.toPath).toString -> n)
-      else None
+      if (n > 0) Some(f -> n) else None
     }.toMap
     val unlisted = (counts.keySet -- boundedCollectSites.keySet).toSeq.sorted
     assert(unlisted.isEmpty,
@@ -632,6 +640,23 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // anti-rot: a listed file with no sites left must be delisted
     val stale = (boundedCollectSites.keySet -- counts.keySet).toSeq.sorted
     assert(stale.isEmpty, s"allowlist entries with no sites left: $stale")
+  }
+
+  test("the session is built in one place: only GraftSession calls the session builder") {
+    val pat = "SparkSession\\s*\\.\\s*builder".r
+    val builders = mainCode.collect {
+      case (f, code) if pat.findFirstIn(code).nonEmpty => f
+    }
+    assert(builders == Seq("GraftSession.scala"),
+      s"build sessions through GraftSession, not the bare builder: $builders")
+  }
+
+  test("SPARK_GRAFT_ONLY names are trimmed; an unknown name fails by name") {
+    assert(SparkEntry.parseOnly(" s1_scan_project , x_search_bm25,") ===
+      Set("s1_scan_project", "x_search_bm25"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.parseOnly("s1_scan_project,no_such_query"))
+    assert(e.getMessage.contains("no_such_query"))
   }
 
   test("derivedShufflePartitions tracks input volume: floor 4, 4MB/partition, cap 4x cpus") {
@@ -660,5 +685,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(derivedShufflePartitions(dirOf(600L << 20), 8) === 32)
     // missing dir degrades to the floor, not an exception
     assert(derivedShufflePartitions("/nonexistent/graft", 32) === 4)
+    // several inputs size by their total: 2 x 9 MB -> 5, like one 18 MB
+    assert(derivedShufflePartitions(Seq(dirOf(9L << 20), dirOf(9L << 20)), 32) === 5)
   }
 }

@@ -37,15 +37,8 @@ object ScalePerfHarness {
     lazy val count = rest.headOption.map(_.toLong).getOrElse(100000L)
     lazy val numTables = rest.lift(1).map(_.toInt).getOrElse(8)
     lazy val planesPerTable = rest.lift(2).map(_.toInt).getOrElse(12)
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events table
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

@@ -12,29 +12,8 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkTestBase {
-  // One session across all suites — sbt forks a single test JVM.
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // expose cached plans' output partitioning to EnsureRequirements
-      // (tfidfKeyTerms' one-exchange plan depends on the cached
-      // repartition staying visible; see TUNING "Session")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      // per-pid path, like Bench/Verify: the k7 bucketed TABLE's location
-      // persists across test JVMs while the in-memory catalog does not,
-      // and recreating a table over an existing location is an error
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_test_${ProcessHandle.current().pid()}")
-      // the deployment route for the custom expressions; GraftExtensionsSpec
-      // asserts they resolve from plain SQL text
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // One session across all suites — sbt forks a single test JVM. The
+  // factory installs GraftExtensions; GraftExtensionsSpec asserts the
+  // custom expressions resolve from plain SQL text.
+  lazy val session: SparkSession = GraftSession.build("local[4]", 4)
 }

@@ -670,6 +670,28 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
       s"fixed ranking ${got.map(_._1)} != float ranking $floatOrder")
   }
 
+  test("fixed-point bm25 returns one schema for an empty and a non-empty corpus") {
+    import spark.implicits._
+    val query = Seq("spark", "data")
+    def schemaOf(docs: org.apache.spark.sql.DataFrame) = graft.text.Vocabulary
+      .bm25SearchFixed(docs, "doc_id", "text", query, 10).schema
+    val full = schemaOf(Seq((1L, "spark data")).toDF("doc_id", "text"))
+    val empty = schemaOf(Seq.empty[(Long, String)].toDF("doc_id", "text"))
+    // StructType equality includes every field's nullability
+    assert(empty == full, s"empty $empty != non-empty $full")
+  }
+
+  test("fixed-point bm25 over a streaming input builds without running a job") {
+    import spark.implicits._
+    implicit val sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val out = graft.text.Vocabulary.bm25SearchFixed(
+      stream.toDF().toDF("doc_id", "text"), "doc_id", "text", Seq("spark"), 10)
+    assert(out.isStreaming)
+    assert(out.columns.toSeq == Seq("doc_id", "bm25_fp", "distinct_terms"))
+  }
+
   test("benchmark contamination flags only docs sharing enough shingles") {
     import spark.implicits._
     val corpus = Seq(

@@ -1,14 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
-
-/** Test-side Verify twin that applies ADVERSARIAL session configs from
-  * `SPARK_GRAFT_CONF` (semicolon-separated k=v) before running the full
-  * gated-query surface — the driver's `graft.Verify` stays untouched
-  * (its session posture IS the contract). Used for robustness sweeps
-  * that re-run all oracles under postures the driver never uses:
+/** [[Verify]] under ADVERSARIAL session configs: the same dump on the
+  * same session, after applying the semicolon-separated `k=v` pairs in
+  * `SPARK_GRAFT_CONF` with `spark.conf.set` — the driver's `graft.Verify`
+  * stays untouched (its session posture IS the contract). Used for
+  * robustness sweeps that re-run all oracles under postures the driver
+  * never uses:
   *
   *  - `spark.sql.codegen.wholeStage=false;spark.sql.codegen.factoryMode=NO_CODEGEN`
   *    forces every custom Catalyst expression (PointInPolygonExpr,
@@ -20,64 +17,23 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.adaptive.enabled=false` re-plans the whole board
   *    without AQE.
   *
-  * Usage: sbt "Test/runMain graft.VerifyUnder <sfDir> <outDir>"
+  * Usage: SPARK_GRAFT_CONF='k=v;k=v' sbt "Test/runMain graft.VerifyUnder <sfDir> <outDir>"
   *        (then tools/check_oracle.py <sfDir> <outDir>)
   *
-  * The per-query loop mirrors graft.Verify exactly (unpersistAll +
-  * clearCache between queries; same JSON escaping; same
-  * SPARK_GRAFT_ONLY filter semantics).
+  * `SPARK_GRAFT_ONLY` narrows the set exactly as for Verify. Exits 1 if
+  * any query failed.
   */
 object VerifyUnder {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_${ProcessHandle.current().pid()}")
-    val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-    val withExtra = extra.split(';').filter(_.contains("=")).foldLeft(builder) {
-      (b, kv) =>
-        val Array(k, v) = kv.split("=", 2)
-        println(s"[verify-under] ${k.trim}=${v.trim}")
-        b.config(k.trim, v.trim)
-    }
-    val spark = withExtra.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    var failed = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          failed += 1
-          System.err.println(s"[verify-under] $name failed: ${e.getMessage}")
-        }
-        Persisted.unpersistAll()
-        spark.catalog.clearCache()
+    val spark = GraftSession.local(sfDir)
+    sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(';').filter(_.contains("="))
+      .foreach { kv =>
+        val Array(k, v) = kv.split("=", 2).map(_.trim)
+        println(s"[verify-under] $k=$v")
+        spark.conf.set(k, v)
       }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = Verify.dump(spark, sfDir, outDir)
     println(s"[verify-under] done, $failed failures")
     spark.stop()
     if (failed > 0) sys.exit(1)
