@@ -20,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * exactly as it finds it: no config is written and the session is not
   * stopped. Only with no session does it build one through [[GraftSession]]:
   * master `SPARK_MASTER`, else `local[cpus]`, and the shuffle width derived
-  * from the backbone and occurrence volume.
+  * from the backbone and occurrence volume (any Hadoop path or URI; see
+  * [[GraftSession.derivedWidth]]). That session keeps the Spark UI.
   */
 object GbifFilterApp {
 
@@ -56,9 +57,11 @@ object GbifFilterApp {
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv)
     val callers = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = callers.getOrElse(GraftSession.build(
-      sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.cpus}]"),
-      GraftSession.derivedWidth(args.backbone, args.occurrence)))
+    val spark = callers.getOrElse {
+      val master = sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.cpus}]")
+      GraftSession.build(master,
+        GraftSession.derivedWidth(master, Seq(args.backbone, args.occurrence)))
+    }
     try {
       val cfg = FilterConfig.fromYaml(
         new String(java.nio.file.Files.readAllBytes(

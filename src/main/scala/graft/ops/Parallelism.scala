@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
 /** Scale-adaptive parallelism floor for compute-heavy operator inputs.
@@ -47,19 +49,33 @@ object Parallelism {
     * tens of MB of the widest intermediate per partition).
     */
   def derivedShufflePartitions(inputDir: String, cpus: Int): Int =
-    derivedShufflePartitions(Seq(inputDir), cpus)
+    widthForBytes(inputBytes(Seq(inputDir), new Configuration()), 4 * math.max(cpus, 1))
 
-  /** The same rule over the total bytes of several inputs (the product's
-    * backbone and occurrence tables). */
-  def derivedShufflePartitions(inputs: Seq[String], cpus: Int): Int = {
-    def dirBytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
+  /** The rule itself: `clamp(ceil(bytes / 4 MB), 4, maxWidth)`, for
+    * `maxWidth >= 4`. */
+  def widthForBytes(bytes: Long, maxWidth: Int): Int = {
     val targetBytes = 4L << 20
-    val bytes = inputs.map(p => dirBytes(new java.io.File(p))).sum
-    val byVolume = ((bytes + targetBytes - 1) / targetBytes).toInt
-    math.min(math.max(byVolume, 4), 4 * math.max(cpus, 1))
+    val byVolume = (bytes + targetBytes - 1) / targetBytes
+    math.min(math.max(byVolume, 4L), maxWidth.toLong).toInt
   }
+
+  /** Total bytes under `inputs` — plain paths, URIs (`file:`, `hdfs://`,
+    * `s3a://`, ...) or globs, each resolved through its Hadoop FileSystem
+    * the way the reader resolves it. A path that matches nothing counts 0
+    * (the read then fails by name); any other listing error propagates.
+    * The local file system is measured raw, so every file counts, checksum
+    * files included.
+    */
+  def inputBytes(inputs: Seq[String], conf: Configuration): Long =
+    inputs.map { input =>
+      val path = new Path(input)
+      val fs = path.getFileSystem(conf) match {
+        case local: LocalFileSystem => local.getRaw
+        case other => other
+      }
+      Option(fs.globStatus(path)).toSeq.flatten
+        .map(st => fs.getContentSummary(st.getPath).getLength).sum
+    }.sum
 
   def spreadIfNarrow(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df

@@ -375,9 +375,11 @@ object Vocabulary {
     * Build-time snapshot: the stats fetch runs when the DataFrame is
     * BUILT, and N, SDL and every df enter the plan as literals. Executing
     * the returned DataFrame again after the source changed scores against
-    * the old stats; the exploded shape recomputes them per execution. A
-    * streaming input cannot be fetched from, so it takes the exploded
-    * shape. Bound: idf is `log2Fixed(2N+2, 2df+1)`, which needs
+    * the old stats; the exploded shape recomputes them per execution.
+    * Batch input only: a ranked top-k over corpus-wide statistics is no
+    * streaming query (neither shape passes Spark's streaming checks), so
+    * a streaming input fails here by name. Bound: idf is
+    * `log2Fixed(2N+2, 2df+1)`, which needs
     * `2N+2 < 2^33`, i.e. N < 2^32 documents; a larger corpus fails at
     * build time with log2Fixed's message. An empty corpus runs the same
     * column expressions over no rows, so both outcomes share one schema.
@@ -386,8 +388,9 @@ object Vocabulary {
 
   def bm25SearchFixed(df: DataFrame, idCol: String, textCol: String,
       query: Seq[String], k: Int): DataFrame = {
+    require(!df.isStreaming, "bm25SearchFixed needs a batch input, got a streaming one")
     val terms = query.distinct
-    if (terms.isEmpty || terms.size > Bm25WideTermCap || df.isStreaming)
+    if (terms.isEmpty || terms.size > Bm25WideTermCap)
       return bm25SearchFixedExploded(df, idCol, textCol, query, k)
     // tf per term as size(toks) - size(array_remove(toks, t)): ArrayRemove
     // is whole-stage-codegen'd, where the lambda form filter(toks, _ = t)

@@ -31,7 +31,7 @@ object ExplainMain {
       case Seq() => SparkEntry.queries.keys.toSeq.sorted
       case given => given
     }
-    val spark = GraftSession.build("local[4]", 4)
+    val spark = GraftSession.build("local[4]", 4, GraftSession.toolConf)
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- names) {
       if (q == "ARRAY_WINDOWS") sweepArrayWindows(spark, sfDir)

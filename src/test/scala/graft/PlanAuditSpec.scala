@@ -659,33 +659,43 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(e.getMessage.contains("no_such_query"))
   }
 
+  /** A temp dir holding one sparse file of `bytes`: its length counts,
+    * no bytes are written. */
+  private def dirOf(bytes: Long): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_dsp_").toFile
+    d.deleteOnExit()
+    val f = new java.io.File(d, "data.bin")
+    f.deleteOnExit()
+    val raf = new java.io.RandomAccessFile(f, "rw")
+    try raf.setLength(bytes) finally raf.close()
+    d.getAbsolutePath
+  }
+
   test("derivedShufflePartitions tracks input volume: floor 4, 4MB/partition, cap 4x cpus") {
-    import graft.ops.Parallelism.derivedShufflePartitions
-    def dirOf(bytes: Long): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft_dsp_").toFile
-      d.deleteOnExit()
-      val f = new java.io.File(d, "data.bin")
-      f.deleteOnExit()
-      val out = new java.io.FileOutputStream(f)
-      try {
-        val chunk = new Array[Byte](1 << 16)
-        var left = bytes
-        while (left > 0) {
-          val n = math.min(left, chunk.length.toLong).toInt
-          out.write(chunk, 0, n); left -= n
-        }
-      } finally out.close()
-      d.getAbsolutePath
-    }
+    import graft.ops.Parallelism.{derivedShufflePartitions, inputBytes, widthForBytes}
+    val d18 = dirOf(18L << 20)
     // tiny input: floor, never the core count
     assert(derivedShufflePartitions(dirOf(1L << 20), 32) === 4)
     // volume-proportional in the middle: 18 MB / 4 MB -> 5
-    assert(derivedShufflePartitions(dirOf(18L << 20), 32) === 5)
+    assert(derivedShufflePartitions(d18, 32) === 5)
     // big input saturates at 4x cluster width
     assert(derivedShufflePartitions(dirOf(600L << 20), 8) === 32)
     // missing dir degrades to the floor, not an exception
     assert(derivedShufflePartitions("/nonexistent/graft", 32) === 4)
+    // a file: URI and a glob size like the plain path
+    assert(derivedShufflePartitions(s"file:$d18", 32) === 5)
+    assert(derivedShufflePartitions(s"$d18/*.bin", 32) === 5)
     // several inputs size by their total: 2 x 9 MB -> 5, like one 18 MB
-    assert(derivedShufflePartitions(Seq(dirOf(9L << 20), dirOf(9L << 20)), 32) === 5)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    assert(widthForBytes(inputBytes(Seq(dirOf(9L << 20), dirOf(9L << 20)), conf), 32) === 5)
+  }
+
+  test("a cluster master lifts the local core cap on the derived width") {
+    assume(!sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTS"), "width override set")
+    val cap = 4 * GraftSession.cpus
+    assume(cap < 400, "more than 100 local cores")
+    val d = dirOf(400L * (4L << 20)) // 400 partitions' worth of input
+    assert(GraftSession.derivedWidth(s"local[${GraftSession.cpus}]", Seq(d)) === cap)
+    assert(GraftSession.derivedWidth("spark://driver.example:7077", Seq(s"file:$d")) === 400)
   }
 }

@@ -38,7 +38,7 @@ object ScalePerfHarness {
     lazy val numTables = rest.lift(1).map(_.toInt).getOrElse(8)
     lazy val planesPerTable = rest.lift(2).map(_.toInt).getOrElse(12)
     val cpus = GraftSession.cpus
-    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    val spark = GraftSession.build(s"local[$cpus]", cpus, GraftSession.toolConf)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

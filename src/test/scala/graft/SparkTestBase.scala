@@ -15,5 +15,5 @@ object SparkTestBase {
   // One session across all suites — sbt forks a single test JVM. The
   // factory installs GraftExtensions; GraftExtensionsSpec asserts the
   // custom expressions resolve from plain SQL text.
-  lazy val session: SparkSession = GraftSession.build("local[4]", 4)
+  lazy val session: SparkSession = GraftSession.build("local[4]", 4, GraftSession.toolConf)
 }

@@ -681,15 +681,17 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
     assert(empty == full, s"empty $empty != non-empty $full")
   }
 
-  test("fixed-point bm25 over a streaming input builds without running a job") {
+  test("fixed-point bm25 rejects a streaming input by name at build time") {
     import spark.implicits._
     implicit val sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val out = graft.text.Vocabulary.bm25SearchFixed(
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text", Seq("spark"), 10)
-    assert(out.isStreaming)
-    assert(out.columns.toSeq == Seq("doc_id", "bm25_fp", "distinct_terms"))
+    // both shapes: the narrow one (1 term) and the exploded one (no terms)
+    for (query <- Seq(Seq("spark"), Seq.empty[String])) {
+      val e = intercept[IllegalArgumentException](graft.text.Vocabulary.bm25SearchFixed(
+        stream.toDF().toDF("doc_id", "text"), "doc_id", "text", query, 10))
+      assert(e.getMessage.contains("bm25SearchFixed needs a batch input"), e.getMessage)
+    }
   }
 
   test("benchmark contamination flags only docs sharing enough shingles") {

@@ -1,9 +1,10 @@
 package graft
 
 /** [[Verify]] under ADVERSARIAL session configs: the same dump on the
-  * same session, after applying the semicolon-separated `k=v` pairs in
-  * `SPARK_GRAFT_CONF` with `spark.conf.set` — the driver's `graft.Verify`
-  * stays untouched (its session posture IS the contract). Used for
+  * same session posture, with the semicolon-separated `k=v` pairs in
+  * `SPARK_GRAFT_CONF` passed to the session builder (so static SQL and
+  * core keys are accepted too) — the driver's `graft.Verify` stays
+  * untouched (its session posture IS the contract). Used for
   * robustness sweeps that re-run all oracles under postures the driver
   * never uses:
   *
@@ -26,13 +27,13 @@ package graft
 object VerifyUnder {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.local(sfDir)
-    sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(';').filter(_.contains("="))
-      .foreach { kv =>
+    val conf = sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(';').filter(_.contains("="))
+      .map { kv =>
         val Array(k, v) = kv.split("=", 2).map(_.trim)
         println(s"[verify-under] $k=$v")
-        spark.conf.set(k, v)
-      }
+        k -> v
+      }.toMap
+    val spark = GraftSession.local(sfDir, conf)
     val failed = Verify.dump(spark, sfDir, outDir)
     println(s"[verify-under] done, $failed failures")
     spark.stop()
