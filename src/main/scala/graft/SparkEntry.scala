@@ -326,7 +326,7 @@ object SparkEntry {
       pqTrainedCache.getOrElseUpdate(dir,
         graft.sim.Similarity.pqCodebookTrained(
           DerivedModel.table(s, dir, "embeddings"), "vec_id", "embedding",
-          m = 8, ksub = 16, dim = 64, iterations = 2, deterministic = true))
+          m = 8, ksub = 16, dim = 64, iterations = 2))
     }
 
   /** The trained-PQ index relation (IVF cluster + codes per vector),
@@ -353,7 +353,7 @@ object SparkEntry {
     stagedFixture(s, dir, "kmeans_cent")(
       graft.sim.Similarity.kmeansCentroids(
         DerivedModel.table(s, dir, "embeddings"), "vec_id", "embedding",
-        numClusters = 16, iterations = 2, deterministic = true))
+        numClusters = 16, iterations = 2))
 
   /** The DSIR importance model (bucket → signed fixed-point log ratio,
     * ≤4096 rows), staged once per (sf, process): model building is the
@@ -1569,7 +1569,6 @@ object SparkEntry {
       graft.sim.Similarity.ivfTopKTrained(
         DerivedModel.table(s, dir, "embeddings"), "vec_id", "embedding",
         queryId = 0L, k = 10, numClusters = 16, nProbe = 4, trainIterations = 2,
-        deterministicTraining = true,
         precomputedCentroids = Some(kmeansCentroidsDim(s, dir)))),
 
     // SemDeDup-style semantic dedup: k-means clusters bound the pair
@@ -1580,7 +1579,6 @@ object SparkEntry {
       graft.sim.Similarity.semanticDedup(
         DerivedModel.table(s, dir, "embeddings"), "vec_id", "embedding",
         tau = 0.4, numClusters = 16, trainIterations = 2,
-        deterministicTraining = true,
         precomputedCentroids = Some(kmeansCentroidsDim(s, dir)))),
 
     // D4-style prototypicality pruning: drop the quarter of each k-means
@@ -1591,7 +1589,6 @@ object SparkEntry {
       graft.sim.Similarity.prototypesPrune(
         DerivedModel.table(s, dir, "embeddings"), "vec_id", "embedding",
         dropPerMille = 250, numClusters = 16, trainIterations = 2,
-        deterministicTraining = true,
         precomputedCentroids = Some(kmeansCentroidsDim(s, dir)))),
 
     "x_knn_topk" -> ((s, dir) =>

@@ -329,8 +329,8 @@ object Dedup {
     // do race the lazy cache (bounded recompute), but a count() barrier
     // measurably REGRESSES wall-clock here — idle cores absorb the raced
     // recompute, the barrier adds a serial pass (NOTES, r3). The
-    // exception is iterative/driver-bound state (duplicateGroups), where
-    // the raced upstream is a whole pipeline.
+    // exception is iterative/driver-bound state (duplicateGroupsAuto),
+    // where the raced upstream is a whole pipeline.
     val ng = resolveShingles(df, idCol, textCol, n, precomputedShingles)
     val ngFiltered =
       if (maxDf.isEmpty && maxDfFraction.isEmpty) ng
@@ -433,7 +433,7 @@ object Dedup {
     * df is a window count on the shingle, so no lookup join is keyed on
     * it.
     */
-  private[graft] def canonicalTokens(ng: DataFrame): DataFrame =
+  private def canonicalTokens(ng: DataFrame): DataFrame =
     ng.withColumn("_df", count(lit(1)).over(Window.partitionBy(col("ngram"))))
       .groupBy(col("_id"))
       .agg(array_sort(collect_list(struct(col("_df"), col("ngram")))).as("_st"))
@@ -442,10 +442,9 @@ object Dedup {
 
   /** `(_id, n, _p, ngram)`: the first `n − ceil(τ·n) + 1` entries of each
     * [[canonicalTokens]] array with their 0-based position — the prefix
-    * the prefix joins probe with. Shared with the `ssjoin` harness
-    * probes, so a measured candidate volume is the shipped relation's.
+    * the prefix joins probe with.
     */
-  private[graft] def positionedPrefix(docs: DataFrame,
+  private def positionedPrefix(docs: DataFrame,
       tauNum: Int, tauDen: Int): DataFrame =
     positioned(docs, slice(col("toks"), lit(1),
       expr(s"CAST(n - ($tauNum * n + ${tauDen - 1}) DIV $tauDen + 1 AS INT)")))
@@ -656,7 +655,7 @@ object Dedup {
     * `h ‖ lpad(99999999 − pos)` (min = smallest hash, then largest
     * position; fixed-width decimal compares like the integer in both
     * engines — requires docs < 10^8 grams). Two formulations, spec- and
-    * gate-pinned equal: the SHIPPED default computes each doc's
+    * gate-pinned equal: pairing computes each doc's
     * fingerprint set inside the scan ([[WinnowExpr]], one codegen
     * scalar — winnowing is a pure per-doc function, the [[SimHashExpr]]
     * argument); the relational form ([[winnowFingerprints]]: gram
@@ -666,12 +665,9 @@ object Dedup {
     * maxDf analogue to boilerplate fingerprints before pairing.
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 4, w: Int = 4, minShared: Long = 2L,
-      useExpr: Boolean = true): DataFrame = {
+      k: Int = 4, w: Int = 4, minShared: Long = 2L): DataFrame = {
     require(k >= 2 && w >= 1 && minShared >= 1)
-    val fps =
-      if (useExpr) winnowFingerprintsFast(df, idCol, textCol, k, w)
-      else winnowFingerprints(df, idCol, textCol, k, w)
+    val fps = winnowFingerprintsFast(df, idCol, textCol, k, w)
     fps.select(col(idCol).as("id_a"), col("_graft_h"))
       .join(fps.select(col(idCol).as("id_b"), col("_graft_h")), Seq("_graft_h"))
       .filter(col("id_a") < col("id_b"))
@@ -829,7 +825,7 @@ object Dedup {
     * candidate, exact-verified. Callers sweeping several thresholds
     * (dedup-aggressiveness ablations) should persist THIS relation and
     * filter per tau — re-running the full pipeline per tau costs ~2x the
-    * fused pass each time (measured, `ScalePerfHarness text`). Candidates
+    * fused pass each time (TUNING, `numHashes` / `rowsPerBand` row). Candidates
     * come from the banding, so recall below the banding's designed tau
     * range degrades: size `numHashes`/`rowsPerBand` for the LOWEST tau
     * being swept.
@@ -1090,21 +1086,12 @@ object Dedup {
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct()
 
-  private def propagateOnce(labels: DataFrame, edges: DataFrame): DataFrame = {
-    // min over {self} ∪ neighbors as ONE aggregation: the neighbor labels
-    // (dst's label keyed by src) union the node's own row, then a single
-    // min-groupBy — two shuffles per iteration instead of the three a
-    // join + groupBy + left-join-back shape costs (iteration count times
-    // stage latency is what label propagation pays at any scale)
-    val nbr = edges
-      .join(labels, edges("dst") === labels("_id"))
-      .select(col("src").as("_id"), col("group_id"))
-    nbr.unionByName(labels.select(col("_id"), col("group_id")))
-      .groupBy(col("_id")).agg(min(col("group_id")).as("group_id"))
-  }
-
-  /** [[propagateOnce]] additionally carrying each node's PREVIOUS label
-    * as `_old` through the SAME aggregation: self rows tag their label
+  /** One round of min-label propagation, computed as ONE aggregation:
+    * the neighbor labels (dst's label keyed by src) union the node's own
+    * row, then a single min-groupBy — two shuffles per round instead of
+    * the three a join + groupBy + left-join-back shape costs. The same
+    * aggregation carries each node's PREVIOUS label as `_old`: self rows
+    * tag their label
     * (`_self`), neighbor rows carry null, `max(_self)` recovers the one
     * non-null per group. Costs 8 bytes per shuffled row and nothing
     * else; the convergence probe then runs as a narrow filter over the
@@ -1127,37 +1114,6 @@ object Dedup {
       .agg(min(col("group_id")).as("group_id"), max(col("_self")).as("_old"))
   }
 
-  /** Resolve near-dup *pairs* into duplicate *groups*: connected
-    * components by min-label propagation (each node adopts the minimum
-    * label among itself and its neighbors). Returns (_id, group_id) with
-    * group_id = the component's minimum member id — the canonical
-    * "survivor".
-    *
-    * This variant unrolls a FIXED number of iterations into one lazy plan
-    * — a single Spark job, no driver-side actions. Exact when the
-    * component graph diameter <= iterations; near-dup components are
-    * shallow (pairs and small stars), so the default covers them with
-    * slack. For graphs of unknown diameter use
-    * [[duplicateGroupsConverged]].
-    */
-  def duplicateGroups(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      iterations: Int = 6): DataFrame = {
-    // pairs may be an expensive upstream plan (e.g. the full MinHash
-    // pipeline); undirectedEdges references it twice, and a lazy persist
-    // would let the two union branches RACE to populate the cache —
-    // computing the upstream twice concurrently. Materialize once, then
-    // fan out from the cache.
-    val p = Persisted.track(pairs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    p.count()
-    val edges = Persisted.track(undirectedEdges(p, idA, idB)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    var labels = edges.select(col("src").as("_id")).distinct()
-      .withColumn("group_id", col("_id"))
-    (0 until iterations).foreach(_ => labels = propagateOnce(labels, edges))
-    labels
-  }
-
   /** Convergence-checked connected components for graphs of unknown
     * diameter. Each round runs (a) one-hop min-label propagation and (b) a
     * path-halving pointer jump — every node adopts the CURRENT label of
@@ -1178,12 +1134,13 @@ object Dedup {
     * THROWS rather than silently returning a partial labeling — wrong
     * `group_id`s at scale are a data-corruption bug, not a tuning knob.
     */
-  def duplicateGroupsConverged(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIterations: Int = 24,
-      onRound: Int => Unit = _ => ()): DataFrame = {
+  private def duplicateGroupsConverged(p: DataFrame, idA: String,
+      idB: String, maxIterations: Int): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val p = Persisted.track(pairs.persist(lvl))
-    p.count() // materialize before fan-out (see duplicateGroups)
+    // `p` arrives persisted AND counted ([[duplicateGroupsAuto]]): the
+    // pairs may be an expensive upstream plan (e.g. the full MinHash
+    // pipeline), and undirectedEdges references them twice — over a lazy
+    // persist the two union branches would RACE to compute it twice
     val edges = Persisted.track(undirectedEdges(p, idA, idB).persist(lvl))
     // iteration state is localCheckpoint'ed (eager), not persist'ed: each
     // round references the previous labels three times, so without lineage
@@ -1224,7 +1181,6 @@ object Dedup {
       labels = jumped
       converged = changed == 0
       iter += 1
-      onRound(iter) // observability hook (round count in scale harnesses)
     }
     if (!converged) {
       labels.unpersist(false)
@@ -1438,7 +1394,7 @@ object Dedup {
     // yet the unpruned plan SORT-SHUFFLES the ENTIRE corpus shingle
     // relation through the SMJ — measured 9.4 GB shuffle / 125 s of the
     // 150 s probe at 10.4M docs for a 104k batch (r16 `indexrefresh`
-    // harness). A broadcast semi-join on the candidate id set makes
+    // probe, NOTES). A broadcast semi-join on the candidate id set makes
     // per-batch probe work candidate-proportional (the corpus side
     // still pays one scan, never a shuffle). Broadcast is guarded: the
     // id set is counted first (cand is persisted — cheap second pass)
@@ -1660,7 +1616,7 @@ object Dedup {
     * minhash self-joins would pay a trillion. At 100 TB the md5 span key
     * (32 hex chars) is the dominant shuffle payload; `spanKey =
     * "xxhash64"` swaps it for an 8-byte long and cuts the exchange
-    * (measured in `ScalePerfHarness spans`, see TUNING.md) at the cost
+    * (TUNING, `k` (span tokens) row) at the cost
     * of the replayable oracle (DuckDB has no xxhash64) and a 2^-64
     * collision risk per span pair — the plan is otherwise IDENTICAL,
     * which is why the md5 form stays the gated default: correctness is

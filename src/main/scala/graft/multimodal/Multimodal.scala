@@ -335,7 +335,7 @@ object Multimodal {
     * as [[graft.DerivedModel.embeddingsAugmented]]). Built distributed:
     * narrow flatMap, no shuffle. `twinOffset` must exceed the max
     * doc_id (the default matches the gates' fixed corpora and their
-    * oracle SQL; the harness's decade rungs pass a wider one).
+    * oracle SQL; a corpus with larger ids passes a wider one).
     */
   def syntheticImagesWithTwins(documents: DataFrame,
       twinOffset: Long = 1000000L): Dataset[MediaRecord] = {

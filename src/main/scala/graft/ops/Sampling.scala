@@ -42,14 +42,16 @@ object Sampling {
       .drop("_graft_sample_rn")
   }
 
-  /** The hash-sample predicate alone, for composing into other filters. */
-  def hashSamplePredicate(key: Column, sixteenths: Int): Column = {
-    val accepted = (0 until sixteenths).map(i => i.toHexString)
-    substring(md5(key.cast("string").cast("binary")), 1, 1).isin(accepted: _*)
-  }
-
   /** Content-hash sort key: a reproducible "random" total order. */
   def shuffleKey(key: Column): Column = md5(key.cast("string").cast("binary"))
+
+  /** Hex characters of [[shuffleKey]] that name a cumsum bucket in the
+    * position/budget/packing constructions ([[withGlobalPosition]],
+    * [[tokenBudgetSelect]], `Chunking.packSequences`/`lengthBatches`):
+    * 16^2 = 256 buckets, so the single-partition offsets window stays
+    * a few hundred rows while each bucket is 1/256 of the data.
+    */
+  private[graft] val PrefixChars = 2
 
   /** First 8 hex chars of floor(f·2^32), the comparison literal for
     * [[weightedSample]]: fixed-width lowercase hex compares exactly like
@@ -314,7 +316,7 @@ object Sampling {
     *
     * A single `row_number()` window over the whole table would funnel
     * 100 TB through ONE partition. Instead the rows are bucketed by the
-    * first `prefixChars` hex characters of the md5 sort key — buckets that
+    * first [[PrefixChars]] hex characters of the md5 sort key — buckets that
     * are (a) a pure function of the data (no sampled range boundaries, so
     * every recomputation and every plan branch agrees on them, unlike
     * `spark_partition_id()` after a `repartitionByRange`, whose sampled
@@ -322,20 +324,18 @@ object Sampling {
     * (md5, key) total order, and (c) uniformly sized (md5 is uniform), so
     * no bucket skews. Per-bucket ranks come from one windowed pass; bucket
     * offsets are the cumulative counts of the preceding buckets — a tiny
-    * 16^prefixChars-row relation, broadcast back. Cost: ONE hash exchange
+    * 16^PrefixChars-row relation, broadcast back. Cost: ONE hash exchange
     * of the data (the window's), one small aggregation, one broadcast
     * join. position = bucket offset + local rank − 1, which depends only
     * on the total order — deterministic at any parallelism.
     */
-  def withGlobalPosition(df: DataFrame, keyCol: String,
-      prefixChars: Int = 2): DataFrame = {
-    require(prefixChars >= 1 && prefixChars <= 8)
-    val bucket = substring(shuffleKey(col(keyCol)), 1, prefixChars)
+  def withGlobalPosition(df: DataFrame, keyCol: String): DataFrame = {
+    val bucket = substring(shuffleKey(col(keyCol)), 1, PrefixChars)
     val bucketed = df.withColumn("_graft_bkt", bucket)
     val offsets = bucketed.groupBy(col("_graft_bkt"))
       .agg(count(lit(1)).as("_graft_n"))
       // single-partition BY DESIGN: the cumsum runs over the bucket-
-      // offsets relation (<= 16^prefixChars rows), never the data — the
+      // offsets relation (<= 16^PrefixChars rows), never the data — the
       // "WindowExec: No Partition Defined" warning it logs is benign
       .withColumn("_graft_offset",
         coalesce(sum(col("_graft_n")).over(
@@ -400,7 +400,7 @@ object Sampling {
     * (the [[withGlobalPosition]] pattern, which IS required for cumsum
     * shapes where no limit can push down) was measured 5× SLOWER here —
     * 32.9 s vs 6.3 s at 20M rows × 256 B payload in one domain
-    * (`ScalePerfHarness cap`, r10): it pays two extra full passes for a
+    * (TUNING, `cap` row, r10): it pays two extra full passes for a
     * prune the optimizer already performs. Don't hand-schedule what
     * Catalyst does.
     */
@@ -429,15 +429,14 @@ object Sampling {
     * construction generalizes to a weighted cumsum over a composite
     * order: rows bucket by (exact score, md5-prefix of the id) — buckets
     * are order-convex w.r.t. (score desc, md5, id), a pure function of
-    * the data, and sized n / (|score values| * 16^prefixChars). Per-bucket
+    * the data, and sized n / (|score values| * 16^PrefixChars). Per-bucket
     * token totals (a tiny relation) broadcast back as exclusive offsets;
     * within-bucket running sums are one windowed pass partitioned by
     * bucket. Cost: one hash exchange + one small agg + one broadcast
     * join, at any corpus size.
     */
   def tokenBudgetSelect(df: DataFrame, idCol: String, tokensCol: String,
-      scoreCol: String, budget: Long, prefixChars: Int = 2): DataFrame = {
-    require(prefixChars >= 1 && prefixChars <= 8)
+      scoreCol: String, budget: Long): DataFrame = {
     require(Set[org.apache.spark.sql.types.DataType](
         org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
         org.apache.spark.sql.types.ShortType, org.apache.spark.sql.types.ByteType)
@@ -445,11 +444,11 @@ object Sampling {
       s"scoreCol $scoreCol must be integral (fixed-point) for exact replay")
     val b = df
       .withColumn("_graft_sk", shuffleKey(col(idCol)))
-      .withColumn("_graft_bkt", substring(col("_graft_sk"), 1, prefixChars))
+      .withColumn("_graft_bkt", substring(col("_graft_sk"), 1, PrefixChars))
     val offsets = b.groupBy(col(scoreCol).as("_graft_s"), col("_graft_bkt"))
       .agg(sum(col(tokensCol).cast("long")).as("_graft_t"))
       // single-partition BY DESIGN: the cumsum runs over the (score x
-      // 16^prefixChars)-row offsets relation, never the data — the
+      // 16^PrefixChars)-row offsets relation, never the data — the
       // "WindowExec: No Partition Defined" warning it logs is benign
       .withColumn("_graft_offset",
         coalesce(sum(col("_graft_t")).over(

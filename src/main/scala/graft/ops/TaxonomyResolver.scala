@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   * and one hash aggregate collects each name's rows as a (taxid, rank)
   * list; an input row resolves when exactly one entry fits its rank hint.
   * The aggregate is bounded by the backbone rows named in the input, not by
-  * the backbone (~10^7 rows) or the input (~10^11 rows at 100 TB). The
-  * lookup is broadcast when `broadcastDims` (default); with very large
-  * inputs disable it and let AQE pick a shuffle join.
+  * the backbone (~10^7 rows) or the input (~10^11 rows at 100 TB), so the
+  * lookup is always broadcast.
   */
 object TaxonomyResolver {
 
@@ -47,8 +46,8 @@ object TaxonomyResolver {
   /** Adds `_graft_taxid` (long, null = unresolved) and `_graft_rank`
     * (string) to `input`, resolving via `backbone`.
     */
-  def resolve(input: DataFrame, backbone: DataFrame, cfg: FilterConfig,
-      broadcastDims: Boolean = true): DataFrame = {
+  def resolve(input: DataFrame, backbone: DataFrame,
+      cfg: FilterConfig): DataFrame = {
     // P2 null-normalize + P3 rank-uppercase + L1 taxid parse
     val nameExpr = cfg.nameColumn.map(c => {
       val t = trim(col(c)); when(t =!= "", t)
@@ -86,9 +85,8 @@ object TaxonomyResolver {
       c => col(RankKey).isNull || c("rank") === col(RankKey))
     val hit = when(size(cands) === 1, cands(0))
     val taxidIn = col("_graft_taxid_in")
-    val lookupSide = if (broadcastDims) broadcast(lookup) else lookup
     keyed
-      .join(lookupSide, col(NameKey) === col("_lk_name"), "left")
+      .join(broadcast(lookup), col(NameKey) === col("_lk_name"), "left")
       .select(input.columns.map(col) ++ Seq(
         // P4 precedence-coalesce (`apply_gbif_filter.py:123`): taxid wins
         coalesce(taxidIn, hit("taxid")).as(TaxidCol),

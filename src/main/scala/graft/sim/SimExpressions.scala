@@ -162,8 +162,8 @@ object QuantizeInt8Expr {
   * [[DotProductExpr]]s against constant-folded `array(lit(...))`
   * literals) is semantically identical but ~50x slower: a folded array
   * literal is a `GenericArrayData` over BOXED doubles, so every element
-  * access in the generated loop unboxes (measured ~56 ns/multiply,
-  * `ScalePerfHarness`). Here the plane matrix ships as a primitive
+  * access in the generated loop unboxes (measured ~56 ns/multiply;
+  * TUNING, `numTables` / `planesPerTable` row). Here the plane matrix ships as a primitive
   * `double[][]` reference object — the generated code is two nested
   * primitive loops. Accumulation stays index-ascending per plane, so
   * buckets are bit-identical to the compositional form and to the

@@ -135,12 +135,11 @@ object Similarity {
        |ORDER BY cosine DESC, a.vec_id LIMIT $k""".stripMargin
   }
 
-  /** DuckDB replay of [[ivfTopKTrained]] with `deterministicTraining =
-    * true`: every training round (argmax assignment, ordered-fold means,
-    * empty-cluster carry-over) unrolls into rank/assign/mean/cent CTE
-    * stages, then the probe + top-k mirror [[ivfTopKSql]]. Works because
-    * the deterministic trainer folds each mean over members sorted by id
-    * — the exact op order the SQL `list(... ORDER BY vec_id)` fold states.
+  /** DuckDB replay of [[ivfTopKTrained]]: every training round (argmax
+    * assignment, ordered-fold means, empty-cluster carry-over) unrolls
+    * into rank/assign/mean/cent CTE stages, then the probe + top-k mirror
+    * [[ivfTopKSql]]. Works because the trainer folds each mean over
+    * members sorted by id — the exact op order the SQL `list(... ORDER BY vec_id)` fold states.
     */
   def ivfTopKTrainedSql(dim: Int, queryId: Long, k: Int, numClusters: Int,
       nProbe: Int, trainIterations: Int): String = {
@@ -201,9 +200,8 @@ object Similarity {
       "assignF AS MATERIALIZED (SELECT vec_id, embedding, cid AS cluster FROM rankF WHERE crn = 1)")
   }
 
-  /** DuckDB replay of [[semanticDedup]] with `deterministicTraining =
-    * true`: the training + assignment prefix is [[trainedAssignSqlCtes]],
-    * then a survivor is any vector with NO smaller-id same-cluster
+  /** DuckDB replay of [[semanticDedup]]: the training + assignment prefix
+    * is [[trainedAssignSqlCtes]], then a survivor is any vector with NO smaller-id same-cluster
     * neighbor at cosine >= tau — the same anti-join the Spark plan runs.
     */
   def semanticDedupSql(dim: Int, tau: Double, numClusters: Int,
@@ -442,7 +440,7 @@ object Similarity {
   }
 
   /** Bit-reproducible per-group mean WITHOUT materializing the group.
-    * The deterministic training branches used to build each group's
+    * The training rounds used to build each group's
     * member list via `array_sort(collect_list(struct(id, v)))` and fold
     * it left-to-right — bit-exact, but the per-group array is
     * O(corpus / k) BOXED structs held by the object-hash aggregate: a
@@ -516,11 +514,11 @@ object Similarity {
     * subspace); each round is an argmin-L2 assignment (broadcast
     * centroids, skinny `(id, s, j, dist)` ranking — vectors never ride
     * the window shuffle) and a per-(subspace, code, dim) mean; empty
-    * cells keep their previous centroid. `deterministic = true` folds
-    * each mean over members SORTED BY ID (the [[kmeansCentroids]]
-    * idiom, streamed by [[orderedGroupMeans]] — no per-group arrays),
-    * so the DuckDB oracle replays every training round
-    * ([[pqTopKTrainedSql]]).
+    * cells keep their previous centroid. Each mean folds over members
+    * SORTED BY ID (the [[kmeansCentroids]] idiom, streamed by
+    * [[orderedGroupMeans]] — no per-group arrays), so training is
+    * bit-reproducible at any partitioning and the DuckDB oracle replays
+    * every round ([[pqTopKTrainedSql]]).
     *
     * The final `.collect()` materializes `m * ksub * dsub` doubles (KBs)
     * — codebook training is an OFFLINE index-build step (run once over a
@@ -529,8 +527,7 @@ object Similarity {
     * cuts ADC quantization error where the data is far from the seeds.
     */
   def pqCodebookTrained(embeddings: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, dim: Int, iterations: Int = 2,
-      deterministic: Boolean = true): Array[Array[Array[Double]]] = {
+      m: Int, ksub: Int, dim: Int, iterations: Int = 2): Array[Array[Array[Double]]] = {
     val dsub = dim / m
     val subs = embeddings
       .withColumn("_vd", col(vecCol).cast("array<double>"))
@@ -560,14 +557,8 @@ object Similarity {
       val perDim = assigned.join(subs, Seq("_sid", "_s"))
         .select(col("_sid"), col("_s"), col("_j"),
           posexplode(col("_svec")).as(Seq("_pos", "_v")))
-      val dimMeans =
-        if (deterministic)
-          orderedGroupMeans(perDim, Seq("_s", "_j", "_pos"),
-            col("_sid"), col("_v"))
-        else
-          perDim.groupBy(col("_s"), col("_j"), col("_pos"))
-            .agg(avg(col("_v")).as("_m"))
-      val means = dimMeans
+      val means = orderedGroupMeans(perDim, Seq("_s", "_j", "_pos"),
+          col("_sid"), col("_v"))
         .groupBy(col("_s"), col("_j"))
         .agg(array_sort(collect_list(struct(col("_pos"), col("_m")))).as("_pm"))
         .select(col("_s"), col("_j"),
@@ -701,7 +692,7 @@ object Similarity {
     * form tripped the codegen size limit and ran interpreted (2.2x,
     * measured). Argmin is `least` + a first-match `when` chain over the
     * PRE-MATERIALIZED distance columns — all primitive-double codegen.
-    * Measured at 1M rows (round5/pq harness): `array_min` over
+    * Measured at 1M rows (round 5, NOTES): `array_min` over
     * (dist, idx) structs ran the interpreted struct comparator at 97.7 s;
     * the when-chain with INLINE dists still re-evaluated each dot per
     * branch (conditionals defer subexpression elimination) at 59.9 s;
@@ -864,10 +855,9 @@ object Similarity {
        |cand AS (SELECT a.vec_id FROM assigned a JOIN probed USING (cluster))""".stripMargin
   }
 
-  /** DuckDB replay of [[pqTopK]] with a [[pqCodebookTrained]] codebook
-    * (`deterministic = true`): the per-subspace training unrolls into
-    * seed/rank/assign/mean/cent CTE stages — the [[ivfTopKTrainedSql]]
-    * machinery generalized with the subspace id as an extra grouping
+  /** DuckDB replay of [[pqTopK]] with a [[pqCodebookTrained]] codebook:
+    * the per-subspace training unrolls into seed/rank/assign/mean/cent
+    * CTE stages — the [[ivfTopKTrainedSql]] machinery generalized with the subspace id as an extra grouping
     * column and argmin-L2 in place of argmax-cosine — then encode,
     * reconstruct, ADC top-R and exact re-rank mirror [[pqTopKSql]].
     */
@@ -1130,7 +1120,7 @@ object Similarity {
     // top-level expression, whereas one explode(array(struct(bucket...)))
     // containing every table's plane dots is a single oversized
     // expression that drops to interpreted eval (measured 100x slower on
-    // a 100k-vector corpus, ScalePerfHarness)
+    // a 100k-vector corpus; TUNING, `numTables` / `planesPerTable` row)
     val withBuckets = normed.select(
       Seq(col("_nid"), col("_nvec"), col("_nnorm")) ++
         (0 until numTables).map { t =>
@@ -1169,7 +1159,7 @@ object Similarity {
     * shuffles |corpus| x numTables rows, and here each row carries a
     * 1-byte-per-dim `array<tinyint>` instead of the float path's
     * 8-byte-per-dim doubles (~7x fewer exchange bytes measured,
-    * `ScalePerfHarness quant`). The ENTIRE pipeline sees the quantized
+    * TUNING, `int8 quantization` row). The ENTIRE pipeline sees the quantized
     * representation: buckets hash the quantized vector (upcast once per
     * row, dropped before the join) and the verify is the quantized cosine
     * via the codegen'd [[Int8DotExpr]] — integer dot, no per-pair upcast,
@@ -1645,36 +1635,26 @@ object Similarity {
     * plus two aggregations via posexplode, so it scales like a scan.
     * Empty clusters keep their previous centroid (left join + coalesce).
     *
-    * `deterministic = false` (default) computes means with `avg` — the
-    * throughput path, but the double accumulation order follows shuffle
-    * arrival, so two runs can differ in the last ulp. `deterministic =
-    * true` folds each mean over members SORTED BY ID: bit-reproducible
-    * index builds (and a SQL-replayable oracle). The fold streams
-    * through a (cluster, dim, id) sort-shuffle ([[orderedGroupMeans]])
-    * instead of materializing each member list — the collect_list form
-    * was a measured 64 GiB OOM at 10.4M vectors, so deterministic
-    * training now scales the same as `avg` (one extra sort). Still,
+    * Each mean folds over members SORTED BY ID, so index builds are
+    * bit-reproducible at any partitioning (and SQL-replayable); an `avg`
+    * would add in shuffle-arrival order and differ in the last ulp run
+    * to run. The fold streams through a (cluster, dim, id) sort-shuffle
+    * ([[orderedGroupMeans]]) instead of materializing each member list
+    * — the collect_list form was a measured 64 GiB OOM at 10.4M
+    * vectors, so training scales like an `avg` plus one sort. Still,
     * the coarse-quantizer PROTOCOL at 100 TB is to train on a bounded
     * deterministic sample and ship centroids as literals — training
     * cost should never be corpus-sized in the first place.
     */
   def kmeansCentroids(embeddings: DataFrame, idCol: String, vecCol: String,
-      numClusters: Int, iterations: Int = 3,
-      deterministic: Boolean = false): DataFrame = {
+      numClusters: Int, iterations: Int = 3): DataFrame = {
     var cent = ivfCentroids(embeddings, idCol, vecCol, numClusters)
     (0 until iterations).foreach { _ =>
       val assigned = assignToCentroids(embeddings, idCol, vecCol, cent)
       val perDim = assigned
         .select(col(idCol).as("_mid"), col("cluster"), posexplode(col(vecCol)))
-      val dimMeans =
-        if (deterministic)
-          orderedGroupMeans(perDim, Seq("cluster", "pos"),
-            col("_mid"), col("col"))
-        else
-          perDim
-            .groupBy(col("cluster"), col("pos"))
-            .agg(avg(col("col")).as("_m"))
-      val means = dimMeans
+      val means = orderedGroupMeans(perDim, Seq("cluster", "pos"),
+          col("_mid"), col("col"))
         .groupBy(col("cluster"))
         .agg(array_sort(collect_list(struct(col("pos"), col("_m")))).as("_pm"))
         .select(col("cluster").as("_cid"),
@@ -1709,24 +1689,28 @@ object Similarity {
       .select(col(idCol), col(vecCol), col("cluster"))
   }
 
+  /** `precomputed` = a staged `(_cid, _cvec)` relation from
+    * [[kmeansCentroids]] (same numClusters/iterations): centroid training
+    * is the offline index-build step, probes read it. Without one the
+    * centroids train here, persisted for the assignment and the probe.
+    */
+  private def centroidsOrTrain(embeddings: DataFrame, idCol: String,
+      vecCol: String, numClusters: Int, trainIterations: Int,
+      precomputed: Option[DataFrame]): DataFrame =
+    precomputed.getOrElse(graft.Persisted.track(
+      kmeansCentroids(embeddings, idCol, vecCol, numClusters, trainIterations)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+
   /** IVF ANN with k-means-trained centroids: same probe mechanics as
     * [[ivfTopK]], but the coarse quantizer is trained, so inverted lists
     * are balanced and probes recall more of the true neighborhood.
     */
   def ivfTopKTrained(embeddings: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, numClusters: Int = 16, nProbe: Int = 4,
-      trainIterations: Int = 3, deterministicTraining: Boolean = false,
+      trainIterations: Int = 3,
       precomputedCentroids: Option[DataFrame] = None): DataFrame = {
-    // precomputedCentroids = a staged `(_cid, _cvec)` relation from
-    // [[kmeansCentroids]] (same numClusters/iterations/determinism):
-    // centroid training is the offline index-build step — probes read it
-    val cent = precomputedCentroids.getOrElse {
-      val c = kmeansCentroids(embeddings, idCol, vecCol, numClusters,
-        trainIterations, deterministicTraining)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.Persisted.track(c)
-      c
-    }
+    val cent = centroidsOrTrain(embeddings, idCol, vecCol, numClusters,
+      trainIterations, precomputedCentroids)
     val assigned = assignToCentroids(embeddings, idCol, vecCol, cent)
     val query = embeddings.filter(col(idCol) === queryId)
       .select(col(vecCol).as("_qvec"))
@@ -1761,28 +1745,21 @@ object Similarity {
     *
     * Survivorship is keep-lowest-id — deterministic and replayable (the
     * oracle states it as a NOT EXISTS anti-join). Unlike
-    * [[graft.dedup.Dedup.duplicateGroups]] components, pruning is
+    * [[graft.dedup.Dedup.duplicateGroupsAuto]] components, pruning is
     * pairwise-greedy: A~B and B~C with A!~C still drops both B and C
     * (B via A, C via B) — the SemDeDup paper's own policy space; the
     * components treatment is available by feeding these clusters' pairs
     * into the dedup group machinery.
     *
-    * `deterministicTraining = true` makes the whole pipeline
-    * bit-reproducible (auditable dedup decisions — at 100 TB you want to
-    * be able to answer "why was this document dropped"); the default
-    * `avg`-trainer is the throughput path.
+    * Training is bit-reproducible ([[kmeansCentroids]]), so the whole
+    * pipeline is too (auditable dedup decisions — at 100 TB you want to
+    * be able to answer "why was this document dropped").
     */
   def semanticDedup(embeddings: DataFrame, idCol: String, vecCol: String,
       tau: Double, numClusters: Int = 16, trainIterations: Int = 2,
-      deterministicTraining: Boolean = false,
       precomputedCentroids: Option[DataFrame] = None): DataFrame = {
-    val cent = precomputedCentroids.getOrElse {
-      val c = kmeansCentroids(embeddings, idCol, vecCol, numClusters,
-        trainIterations, deterministicTraining)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.Persisted.track(c)
-      c
-    }
+    val cent = centroidsOrTrain(embeddings, idCol, vecCol, numClusters,
+      trainIterations, precomputedCentroids)
     // vectors + norms computed once per row (identical doubles to the
     // per-pair formulation — the oracle's cosine formula is unchanged);
     // persisted because the relation feeds both sides of the cluster
@@ -1823,9 +1800,9 @@ object Similarity {
     * The per-cluster cut is integer-exact: `ceil(size · dropPerMille /
     * 1000)` computed as `(size · dropPerMille + 999) div 1000` — no
     * float thresholds, so the pruning decision replays bit-for-bit.
-    * Ties in cosine break by id; with `deterministicTraining = true`
-    * (or staged deterministic centroids via `precomputedCentroids`)
-    * the whole decision is auditable: "why was this row dropped" has a
+    * Ties in cosine break by id and training is bit-reproducible (as
+    * are staged centroids via `precomputedCentroids`), so the whole
+    * decision is auditable: "why was this row dropped" has a
     * replayable answer, the same contract as [[semanticDedup]].
     *
     * Scale shape: the centroid relation broadcasts (KBs); assignment
@@ -1838,17 +1815,11 @@ object Similarity {
     */
   def prototypesPrune(embeddings: DataFrame, idCol: String, vecCol: String,
       dropPerMille: Int, numClusters: Int = 16, trainIterations: Int = 2,
-      deterministicTraining: Boolean = false,
       precomputedCentroids: Option[DataFrame] = None): DataFrame = {
     require(dropPerMille >= 0 && dropPerMille <= 1000,
       s"dropPerMille must be in [0, 1000], got $dropPerMille")
-    val cent = precomputedCentroids.getOrElse {
-      val c = kmeansCentroids(embeddings, idCol, vecCol, numClusters,
-        trainIterations, deterministicTraining)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.Persisted.track(c)
-      c
-    }
+    val cent = centroidsOrTrain(embeddings, idCol, vecCol, numClusters,
+      trainIterations, precomputedCentroids)
     val aw = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("_csim").desc, col("_cid"))
     // argmax-cosine assignment, KEEPING the winning cosine — the
@@ -1871,7 +1842,7 @@ object Similarity {
       .select(col(idCol), col("cluster"), col("proto_rank"))
   }
 
-  /** DuckDB replay of [[prototypesPrune]] with deterministic training:
+  /** DuckDB replay of [[prototypesPrune]]:
     * the [[trainedAssignSqlCtes]] prefix, the assignment cosine
     * recomputed against the final centroids (identical doubles — same
     * unrolled op sequence), the same (psim DESC, id) rank, and the same

@@ -26,15 +26,6 @@ object Layout {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Write the backbone relation bucketed by key. */
-  def writeBucketedBackbone(backbone: DataFrame, table: String,
-      buckets: Int = 64): Unit =
-    backbone.write.mode("overwrite")
-      .bucketBy(buckets, "key")
-      .sortBy("key")
-      .format("parquet")
-      .saveAsTable(table)
-
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
   /** Morton (Z-order) key of two non-negative integer columns: bit i of

@@ -114,15 +114,15 @@ object EpochLayout {
       .parquet(paths: _*)
   }
 
-  /** Fold every closed epoch with id <= `upTo` (default: all present)
-    * into one `merged=<upTo>` directory of `targetFiles` files, commit
+  /** Fold every closed epoch present into one `merged=<upTo>` directory
+    * of one file (`upTo` = the highest epoch id folded), commit
     * via the marker, and GC the absorbed inputs. Returns None when there
     * is nothing to fold. The relation [[readEpochSink]] returns is
     * IDENTICAL before and after (spec-pinned by count + content); only
     * the file count changes.
     */
-  def compactEpochSink(spark: SparkSession, sinkRoot: String,
-      upTo: Option[Long] = None, targetFiles: Int = 1): Option[CompactionReport] = {
+  def compactEpochSink(spark: SparkSession,
+      sinkRoot: String): Option[CompactionReport] = {
     val root = new File(sinkRoot)
     if (!root.isDirectory) return None
     val prior = compactedUpTo(sinkRoot)
@@ -137,9 +137,8 @@ object EpochLayout {
       if (prior.exists(id <= _)) deleteRecursively(f)
     }
     val live = liveEpochDirs(sinkRoot)
-    val target = upTo.getOrElse(
-      (live.map(_._1) ++ prior).foldLeft(Long.MinValue)(math.max))
-    val toMerge = live.filter(_._1 <= target).sortBy(_._1)
+    val target = (live.map(_._1) ++ prior).foldLeft(Long.MinValue)(math.max)
+    val toMerge = live.sortBy(_._1)
     if (toMerge.isEmpty) return None
     val inputs = prior.map(u => new File(root, s"merged=$u")).toSeq ++
       toMerge.map(_._2)
@@ -148,7 +147,7 @@ object EpochLayout {
     val tmp = new File(root, "_compact_tmp")
     val merged = spark.read.option("recursiveFileLookup", "true")
       .parquet(inputs.map(_.getAbsolutePath): _*)
-    merged.coalesce(targetFiles)
+    merged.coalesce(1)
       .write.mode("overwrite").parquet(tmp.getAbsolutePath)
     // (2) rename into place — still invisible (marker not yet switched)
     val dst = new File(root, s"merged=$target")

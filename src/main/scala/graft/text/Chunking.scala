@@ -62,18 +62,18 @@ object Chunking {
     * it exactly.
     */
   def packSequences(df: DataFrame, idCol: String, textCol: String,
-      seqTokens: Int, prefixChars: Int = 2): DataFrame = {
+      seqTokens: Int): DataFrame = {
     require(seqTokens >= 1, s"seqTokens must be >= 1, got $seqTokens")
     val L = lit(seqTokens.toLong)
     val sk = md5(col(idCol).cast("string").cast("binary"))
     val toks = df.select(col(idCol), sk.as("_graft_sk"),
-      substring(sk, 1, prefixChars).as("_graft_bkt"),
+      substring(sk, 1, graft.ops.Sampling.PrefixChars).as("_graft_bkt"),
       TextFunctions.tokens(col(textCol)).as("_graft_toks"))
       .withColumn("_graft_n", size(col("_graft_toks")).cast("long"))
     val bucketTotals = toks.groupBy(col("_graft_bkt"))
       .agg(sum(col("_graft_n")).as("_graft_bn"))
       // single-partition BY DESIGN: this window runs over the bucket-
-      // offsets relation (<= 16^prefixChars rows), never the data — the
+      // offsets relation (<= 16^PrefixChars rows), never the data — the
       // "WindowExec: No Partition Defined" warning it logs is benign
       .withColumn("_graft_boff",
         coalesce(sum(col("_graft_bn")).over(
@@ -134,14 +134,14 @@ object Chunking {
     * IS the right tool, unlike the domain cap.)
     */
   def lengthBatches(df: DataFrame, idCol: String, tokensCol: String,
-      batchSize: Int, prefixChars: Int = 2): DataFrame = {
-    require(batchSize >= 1 && prefixChars >= 1 && prefixChars <= 8)
+      batchSize: Int): DataFrame = {
+    require(batchSize >= 1)
     val b = df
       .withColumn("_graft_sk", graft.ops.Sampling.shuffleKey(col(idCol)))
-      .withColumn("_graft_bkt", substring(col("_graft_sk"), 1, prefixChars))
+      .withColumn("_graft_bkt", substring(col("_graft_sk"), 1, graft.ops.Sampling.PrefixChars))
     val offsets = b.groupBy(col(tokensCol).as("_graft_s"), col("_graft_bkt"))
       .agg(count(lit(1)).as("_graft_c"))
-      // single-partition BY DESIGN over the (length x 16^prefixChars)-row
+      // single-partition BY DESIGN over the (length x 16^PrefixChars)-row
       // offsets relation, never the data — the "WindowExec: No Partition
       // Defined" warning it logs is benign
       .withColumn("_graft_offset",

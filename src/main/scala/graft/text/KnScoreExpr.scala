@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * DECIMAL `DIV` ≡ HUGEINT `//` on positive operands; then the same
   * compare/shift/multiply loop as the unrolled columns) in one compiled
   * method — the gated oracle hashes are unchanged, measured 162.8 → 48.3 s
-  * at 1.06M docs (`ScalePerfHarness signals`).
+  * at 1.06M docs (TUNING, `KN model` row).
   */
 case class KnScoreExpr(left: Expression, right: Expression)
     extends BinaryExpression {

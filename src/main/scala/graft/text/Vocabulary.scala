@@ -264,6 +264,8 @@ object Vocabulary {
   private[graft] val MantBits = 30
   private[graft] val FracBits = 20
   private[graft] val EMax = 40
+  private val Log2FixedBound =
+    s"log2Fixed needs 0 < den <= num < 2^${63 - MantBits}, got "
 
   /** `floor`-style fixed-point `log2(num/den)` with [[FracBits]] fraction
     * bits, defined OPERATIONALLY as integer ops only (compare, multiply,
@@ -278,7 +280,7 @@ object Vocabulary {
     */
   private[graft] def log2Fixed(num: Long, den: Long): Long = {
     require(den > 0 && num >= den && num < (1L << (63 - MantBits)),
-      s"log2Fixed needs 0 < den <= num < 2^${63 - MantBits}, got $num/$den")
+      s"$Log2FixedBound$num/$den")
     var e = 0
     while (e < EMax && (den << (e + 1)) <= num) e += 1
     var m = (num << MantBits) / (den << e)
@@ -302,7 +304,7 @@ object Vocabulary {
   // right for vocab-bounded relations; at corpus-scale row counts use a
   // codegen scalar instead (the [[KnScoreExpr]] lesson: this unrolled
   // chain costs ~66 µs/row)
-  private def log2FixedCols(df: DataFrame): DataFrame = {
+  private[graft] def log2FixedCols(df: DataFrame): DataFrame = {
     val mantBits = MantBits
     val two = lit(2L << mantBits)
     var cur = df
@@ -312,8 +314,12 @@ object Vocabulary {
       .withColumn("_e", (1 to EMax).map(k =>
         when(shiftright(col("_num"), k) >= col("_den"), 1L).otherwise(0L))
         .reduce(_ + _))
-      .withColumn("_m",
-        expr(s"shiftleft(_num, $mantBits) DIV shiftleft(_den, CAST(_e AS INT))"))
+      // num << MantBits overflows int64 from num = 2^(63 - MantBits) on:
+      // fail per row with the scalar's message instead of wrapping
+      .withColumn("_m", expr(
+        s"CASE WHEN _num >= ${1L << (63 - mantBits)}L " +
+          s"THEN raise_error(concat('$Log2FixedBound', _num, '/', _den)) " +
+          s"ELSE shiftleft(_num, $mantBits) DIV shiftleft(_den, CAST(_e AS INT)) END"))
       .withColumn("_frac", lit(0L))
     for (_ <- 1 to FracBits) {
       cur = cur

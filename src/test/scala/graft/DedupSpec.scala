@@ -353,9 +353,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     // two components: {1,2,3} via chain 1-2, 2-3; {7,9}; singleton edges only
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id_a", "id_b")
-    val groups = Dedup.duplicateGroups(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(groups == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+    // default (driver union-find) and maxDriverPairs = 0 (label propagation)
+    for (maxDriverPairs <- Seq(2L * 1000 * 1000, 0L)) {
+      val groups = Dedup.duplicateGroupsAuto(pairs, maxDriverPairs = maxDriverPairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(groups == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+    }
+    Persisted.unpersistAll()
   }
 
   test("duplicateGroupsAuto: driver union-find and label-prop fallback agree") {

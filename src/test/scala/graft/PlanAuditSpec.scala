@@ -592,11 +592,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     "SparkEntry.scala" ->
       (2, "a1 children names/ids per taxon, capped like RankResolver"))
 
-  /** Every `src/main` Scala file as (path under the graft package root,
-    * code with comments stripped) — the source the structure guards sweep.
+  /** Every Scala file under `dir`'s graft package root as (path under
+    * that root, code with comments stripped) — the source the structure
+    * guards sweep.
     */
-  private lazy val mainCode: Seq[(String, String)] = {
-    val root = new java.io.File("src/main/scala/graft")
+  private def codeUnder(dir: String): Seq[(String, String)] = {
+    val root = new java.io.File(s"$dir/scala/graft")
     assert(root.isDirectory, s"sweep root missing: ${root.getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
@@ -622,7 +623,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
   test("every collect_list/collect_set site in main is on the " +
     "bounded-group allowlist") {
     val pat = "collect_(list|set)\\(".r
-    val counts = mainCode.flatMap { case (f, code) =>
+    val counts = codeUnder("src/main").flatMap { case (f, code) =>
       val n = pat.findAllIn(code).length
       if (n > 0) Some(f -> n) else None
     }.toMap
@@ -644,11 +645,20 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
 
   test("the session is built in one place: only GraftSession calls the session builder") {
     val pat = "SparkSession\\s*\\.\\s*builder".r
-    val builders = mainCode.collect {
+    val builders = codeUnder("src/main").collect {
       case (f, code) if pat.findFirstIn(code).nonEmpty => f
     }
     assert(builders == Seq("GraftSession.scala"),
       s"build sessions through GraftSession, not the bare builder: $builders")
+  }
+
+  test("test scope has two mains: diagnostics are modes of ExplainMain or VerifyUnder") {
+    val pat = "def\\s+main\\s*\\(|extends\\s+App\\b".r
+    val mains = codeUnder("src/test").collect {
+      case (f, code) if pat.findFirstIn(code).nonEmpty => f
+    }
+    assert(mains == Seq("ExplainMain.scala", "VerifyUnder.scala"),
+      s"add a mode to ExplainMain or VerifyUnder, not a new main: $mains")
   }
 
   test("SPARK_GRAFT_ONLY names are trimmed; an unknown name fails by name") {

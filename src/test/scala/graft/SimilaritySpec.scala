@@ -458,11 +458,24 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(overlap >= 7, s"quantized recall too low: $overlap/10")
   }
 
+  test("k-means and PQ training are bit-identical at any partitioning") {
+    val emb = DerivedModel.table(spark, dir, "embeddings")
+    def centroids(parts: Int) = Similarity.kmeansCentroids(emb.repartition(parts),
+        "vec_id", "embedding", numClusters = 8, iterations = 2).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits))
+      .toMap
+    def codebook(parts: Int) = Similarity.pqCodebookTrained(emb.repartition(parts),
+        "vec_id", "embedding", m = 8, ksub = 16, dim = 64, iterations = 2)
+      .map(_.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq).toSeq
+    val (c1, cb1) = (centroids(1), codebook(1))
+    assert(c1.size == 8 && centroids(7) == c1, "k-means differs at 7 partitions")
+    assert(cb1.size == 8 && codebook(7) == cb1, "PQ codebook differs at 7 partitions")
+  }
+
   test("semanticDedup matches the driver-side reference on its clusters") {
     val emb = DerivedModel.table(spark, dir, "embeddings")
     val survivors = Similarity.semanticDedup(emb, "vec_id", "embedding",
-        tau = 0.4, numClusters = 8, trainIterations = 1,
-        deterministicTraining = true)
+        tau = 0.4, numClusters = 8, trainIterations = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     Persisted.unpersistAll()
 
@@ -507,8 +520,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     "edge fractions") {
     val emb = DerivedModel.table(spark, dir, "embeddings")
     val full = Similarity.prototypesPrune(emb, "vec_id", "embedding",
-        dropPerMille = 0, numClusters = 8, trainIterations = 1,
-        deterministicTraining = true)
+        dropPerMille = 0, numClusters = 8, trainIterations = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     Persisted.unpersistAll()
     val n = emb.count()
@@ -520,8 +532,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
         s"cluster $c ranks not contiguous: $ranks")
     }
     val pruned = Similarity.prototypesPrune(emb, "vec_id", "embedding",
-        dropPerMille = 250, numClusters = 8, trainIterations = 1,
-        deterministicTraining = true)
+        dropPerMille = 250, numClusters = 8, trainIterations = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     Persisted.unpersistAll()
     // same clustering (same deterministic training), so the full run's
@@ -537,8 +548,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
         s"cluster $c: expected ranks ${cut + 1}..$sz, got ${kept.toSeq}")
     }
     val none = Similarity.prototypesPrune(emb, "vec_id", "embedding",
-        dropPerMille = 1000, numClusters = 8, trainIterations = 1,
-        deterministicTraining = true).count()
+        dropPerMille = 1000, numClusters = 8, trainIterations = 1).count()
     Persisted.unpersistAll()
     assert(none == 0L, "dropPerMille=1000 drops every row")
   }

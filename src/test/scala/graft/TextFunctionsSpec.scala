@@ -629,6 +629,19 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("log2FixedCols fails by name at num = 2^33 and equals log2Fixed below") {
+    import spark.implicits._
+    import graft.text.Vocabulary
+    val bound = 1L << (63 - Vocabulary.MantBits)
+    def cols(num: Long) = Vocabulary.log2FixedCols(Seq((num, 3L)).toDF("_num", "_den"))
+      .select("_idf_fp").as[Long].collect().toSeq
+    assert(cols(bound - 1) == Seq(Vocabulary.log2Fixed(bound - 1, 3L)))
+    val msgs = Iterator.iterate[Throwable](intercept[Exception](cols(bound)))(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains(s"log2Fixed needs 0 < den <= num < 2^33, got $bound/3")),
+      s"no named failure in: $msgs")
+  }
+
   test("fixed-point bm25 matches an exact integer driver-side replay") {
     import spark.implicits._
     val corpus = Map(
