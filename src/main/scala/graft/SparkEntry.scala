@@ -1459,14 +1459,14 @@ object SparkEntry {
     // which DedupSpec cross-checks); hash-matched against the DuckDB
     // XXH64 bit-replay oracle (SimHashOracle)
     "x_dedup_simhash" -> ((s, dir) =>
-      graft.dedup.Dedup.simhash64Fast(
+      graft.dedup.Dedup.simhash64(
         DerivedModel.table(s, dir, "documents"), "doc_id", "text")
         .select(col("_id").as("doc_id"), col("simhash"))),
 
     // byte-block banding over the simhashes: candidate pairs within 3 bits
     "x_dedup_simhash_pairs" -> ((s, dir) =>
       graft.dedup.Dedup.simhashPairs(
-        graft.dedup.Dedup.simhash64Fast(
+        graft.dedup.Dedup.simhash64(
           DerivedModel.table(s, dir, "documents"), "doc_id", "text"),
         maxHamming = 3)),
 
@@ -1476,7 +1476,7 @@ object SparkEntry {
     // pair set as x_dedup_simhash_pairs — equivalence under the hash gate
     "x_dedup_simhash_split" -> ((s, dir) =>
       graft.dedup.Dedup.simhashPairsSplit(
-        graft.dedup.Dedup.simhash64Fast(
+        graft.dedup.Dedup.simhash64(
           DerivedModel.table(s, dir, "documents"), "doc_id", "text"),
         maxHamming = 3, bucketLimit = 2)),
 
@@ -3000,7 +3000,7 @@ object SparkEntry {
 
     // data-quality profile: per-column completeness/cardinality/range in
     // ONE aggregation pass (single global agg + driver-side unpivot);
-    // exact distinct = Expand price, approx form documented for 100 TB
+    // exact distinct = Expand price
     "x_quality_profile" -> ((s, dir) =>
       graft.ops.Profile.profile(
         DerivedModel.table(s, dir, "orders")
@@ -3324,7 +3324,7 @@ object SparkEntry {
       "SELECT row_id, name, taxid, rank FROM taxa"),
 
     "x_geo_grid_join" -> withCtes(DerivedSql.occurrence,
-      graft.geo.GridJoin.pointsPerZoneCtes())(
+      graft.geo.GridJoin.pointsPerZoneCtes)(
       graft.geo.GridJoin.pointsPerZoneSelect),
 
     "k4_partitioned_prune" -> withCtes(DerivedSql.occurrence)(

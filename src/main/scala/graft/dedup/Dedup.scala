@@ -294,33 +294,18 @@ object Dedup {
     * Jaccard is computed over the FILTERED shingle universe on both the
     * numerator and denominator, so it stays exact over that universe.
     *
-    * Pair generation has two spec-pinned-equal forms (per-doc shingles
-    * are distinct by construction, so both emit the identical exact
-    * intersection counts):
-    *
-    *  - `postingListPairs = false` (DEFAULT): the shingle self-join.
-    *    SMJ streams one side and spills the other side's per-key block
-    *    (ExternalAppendOnlyUnsafeRowArray), so a frequent shingle's d²
-    *    pair block degrades to disk instead of dying — the skew-safe
-    *    posture for real (boilerplate-heavy) corpora.
-    *  - `postingListPairs = true`: group each shingle's posting list
-    *    once and expand the id pairs in-line — ONE shuffle of the
-    *    shingle relation instead of two join sides. Measured FASTER on
-    *    uniform corpora (25.2 s vs 41.3 s at 1.04M docs, a wash at
-    *    10.4M — TUNING maxDf row), but `collect_list` must materialize
-    *    a frequent shingle's FULL d-element posting as one row and
-    *    expand d² structs in one expression eval in one task — a
-    *    giant-row cliff exactly on the shingles the maxDf guard exists
-    *    for (measured r12 `ssjoinskew`: java.lang.OutOfMemoryError at
-    *    64g on a df=10,400 boilerplate corpus where the SMJ self-join
-    *    completes in 935 s — TUNING skew row). Flip it only on corpora
-    *    known to be near-uniform (or with a tight absolute `maxDf`
-    *    capping every posting).
+    * Pairs come from the shingle self-join. SMJ streams one side and
+    * spills the other side's per-key block (ExternalAppendOnlyUnsafeRowArray),
+    * so a frequent shingle's d² pair block degrades to disk instead of
+    * dying — the skew-safe posture for real (boilerplate-heavy) corpora.
+    * Not a posting-list form (`collect_list` per shingle, pairs expanded
+    * in-line): faster on uniform corpora, it dies with
+    * java.lang.OutOfMemoryError at 64g on a boilerplate corpus where this
+    * join completes (TUNING `ssjoinskew` row).
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, tau: Double, maxDf: Option[Int] = None,
       maxDfFraction: Option[Double] = Some(DefaultMaxDfFraction),
-      postingListPairs: Boolean = false,
       precomputedShingles: Option[DataFrame] = None): DataFrame = {
     // the shingle relation feeds both join sides and the per-doc counts —
     // without persist Spark recomputes the explode 4x (no exchange reuse
@@ -348,24 +333,12 @@ object Dedup {
     // spills and completes. SMJ is the spill-safe default here and
     // everywhere a shingle relation joins itself.
     val inter =
-      if (postingListPairs)
-        ngFiltered.groupBy(col("ngram"))
-          .agg(collect_list(col("_id")).as("_ids"))
-          .filter(size(col("_ids")) > 1)
-          .select(explode(expr(
-            "flatten(transform(_ids, (a, i) -> " +
-              "transform(slice(_ids, i + 2, size(_ids)), " +
-              "b -> struct(least(a, b) AS id_a, greatest(a, b) AS id_b))))"))
-            .as("_p"))
-          .groupBy(col("_p.id_a").as("id_a"), col("_p.id_b").as("id_b"))
-          .agg(count(lit(1)).as("n_inter"))
-      else
-        ngFiltered.select(col("_id").as("id_a"), col("ngram"))
-          .join(ngFiltered.select(col("_id").as("id_b"), col("ngram")),
-            Seq("ngram"))
-          .filter(col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("n_inter"))
+      ngFiltered.select(col("_id").as("id_a"), col("ngram"))
+        .join(ngFiltered.select(col("_id").as("id_b"), col("ngram")),
+          Seq("ngram"))
+        .filter(col("id_a") < col("id_b"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("n_inter"))
     inter
       .join(cnt.select(col("_id").as("id_a"), col("n_shingles").as("n_a")), Seq("id_a"))
       .join(cnt.select(col("_id").as("id_b"), col("n_shingles").as("n_b")), Seq("id_b"))
@@ -506,7 +479,7 @@ object Dedup {
   /** CHARACTER-LEVEL near-duplicate verify: [[jaccardPrefixPairs]]
     * candidates at a loose token-set threshold, confirmed with exact
     * Levenshtein edit distance under a RELATIVE cap
-    * (`distDen·lev ≤ distNum·max(len_a, len_b)`, exact integers).
+    * (`10·lev ≤ max(len_a, len_b)`, exact integers).
     *
     * Why both levels: token-set Jaccard is permutation-blind — a
     * shuffled bag of the same words scores 1.0 — while edit distance
@@ -529,7 +502,6 @@ object Dedup {
     */
   def editDistanceNearDup(df: DataFrame, idCol: String, textCol: String,
       n: Int, tauNum: Int, tauDen: Int,
-      distNum: Int = 1, distDen: Int = 10,
       precomputedCandidates: Option[DataFrame] = None): DataFrame = {
     // candidates are a stageable pair relation (the minhash-pairs
     // staging pattern): a deployment persists them once and re-verifies
@@ -554,8 +526,7 @@ object Dedup {
       .join(texts.select(col("_tid").as("id_b"), col("_txt").as("_tb"),
         col("_len").as("_lb")), Seq("id_b"))
       .withColumn("edit_dist", levenshtein(col("_ta"), col("_tb")).cast("long"))
-      .filter(lit(distDen.toLong) * col("edit_dist")
-        <= lit(distNum.toLong) * greatest(col("_la"), col("_lb")))
+      .filter(lit(10L) * col("edit_dist") <= greatest(col("_la"), col("_lb")))
       .select(col("id_a"), col("id_b"), col("edit_dist"))
   }
 
@@ -654,20 +625,20 @@ object Dedup {
     * rightmost-min tie-break rides ONE orderable string
     * `h ‖ lpad(99999999 − pos)` (min = smallest hash, then largest
     * position; fixed-width decimal compares like the integer in both
-    * engines — requires docs < 10^8 grams). Two formulations, spec- and
-    * gate-pinned equal: pairing computes each doc's
-    * fingerprint set inside the scan ([[WinnowExpr]], one codegen
-    * scalar — winnowing is a pure per-doc function, the [[SimHashExpr]]
-    * argument); the relational form ([[winnowFingerprints]]: gram
-    * explode + `ROWS BETWEEN CURRENT ROW AND w−1 FOLLOWING` per-doc
-    * window) is what the DuckDB oracle replays. The fingerprint join is
+    * engines — requires docs < 10^8 grams). Pairing computes each doc's
+    * fingerprint set inside the scan ([[winnowFingerprints]]: one codegen
+    * scalar, [[WinnowExpr]] — winnowing is a pure per-doc function, the
+    * [[SimHashExpr]] argument); the DuckDB oracle replays the relational
+    * form (gram explode + `ROWS BETWEEN CURRENT ROW AND w−1 FOLLOWING`
+    * per-doc window, [[winnowFingerprintsSql]]), which DedupSpec also
+    * keeps as a Spark reference. The fingerprint join is
     * a content-keyed equi-join; at web scale apply the stop-shingle
     * maxDf analogue to boilerplate fingerprints before pairing.
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 4, minShared: Long = 2L): DataFrame = {
     require(k >= 2 && w >= 1 && minShared >= 1)
-    val fps = winnowFingerprintsFast(df, idCol, textCol, k, w)
+    val fps = winnowFingerprints(df, idCol, textCol, k, w)
     fps.select(col(idCol).as("id_a"), col("_graft_h"))
       .join(fps.select(col(idCol).as("id_b"), col("_graft_h")), Seq("_graft_h"))
       .filter(col("id_a") < col("id_b"))
@@ -676,44 +647,17 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Distinct selected fingerprints per doc, SCAN-SPEED form: the whole
-    * winnowing selection as one codegen scalar ([[WinnowExpr]]) — no
-    * occurrence explode, no per-doc window shuffle. */
-  def winnowFingerprintsFast(df: DataFrame, idCol: String, textCol: String,
+  /** Distinct selected fingerprints per doc: the whole winnowing
+    * selection as one codegen scalar ([[WinnowExpr]]) — no occurrence
+    * explode, no per-doc window shuffle. */
+  def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame =
     df.select(col(idCol),
       explode(WinnowExpr.fingerprintsCol(col(textCol), k, w)).as("_graft_h"))
 
-  /** Distinct selected fingerprints per doc, RELATIONAL form (gram
-    * occurrence explode + per-doc window min) — the formulation the
-    * DuckDB oracle replays; spec-pinned equal to the expression form. */
-  def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
-      k: Int, w: Int): DataFrame = {
-    val occ = Persisted.track(df
-      .select(col(idCol), TextFunctions.tokens(col(textCol)).as("_graft_toks"))
-      .withColumn("_graft_n", size(col("_graft_toks")).cast("long"))
-      .filter(col("_graft_n") >= k + w - 1)
-      .select(col(idCol), col("_graft_n"), posexplode(transform(
-        sequence(lit(0), (col("_graft_n") - k).cast("int")),
-        i => md5(array_join(slice(col("_graft_toks"), i + 1, lit(k)), " ")
-          .cast("binary")))))
-      .withColumnRenamed("pos", "_graft_pos")
-      .withColumnRenamed("col", "_graft_h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val win = Window.partitionBy(col(idCol)).orderBy(col("_graft_pos"))
-      .rowsBetween(Window.currentRow, w - 1)
-    occ
-      .withColumn("_graft_wk", concat(col("_graft_h"),
-        lpad((lit(99999999L) - col("_graft_pos")).cast("string"), 8, "0")))
-      .withColumn("_graft_sel", min(col("_graft_wk")).over(win))
-      // full windows only: the tail frames see < w grams
-      .filter(col("_graft_pos") <= col("_graft_n") - k - (w - 1))
-      .select(col(idCol), substring(col("_graft_sel"), 1, 32).as("_graft_h"))
-      .distinct()
-  }
-
-  /** DuckDB twin of [[winnowFingerprints]] (the relational form) over
-    * the rows of `table` matching `pred`: `(idCol, fingerprint)`. */
+  /** DuckDB twin of [[winnowFingerprints]] (the relational form: gram
+    * occurrence explode + per-doc window min) over the rows of `table`
+    * matching `pred`: `(idCol, fingerprint)`. */
   def winnowFingerprintsSql(table: String, idCol: String, textCol: String,
       k: Int, w: Int, pred: String = "TRUE"): String =
     s"""WITH _t AS (
@@ -899,7 +843,8 @@ object Dedup {
     * Output: one row per occupied bin `j_bucket = ⌊buckets·J⌋` (exact
     * integer: `(buckets·i) DIV (n_a+n_b−i)`), with `n_pairs`,
     * `n_detected`, and `det_permille = (1000·n_detected) DIV n_pairs`.
-    * Pairs below `floorNum/floorDen` exact Jaccard are out of scope (the
+    * Pairs below 1/5 exact Jaccard ([[CurveFloorNum]]/[[CurveFloorDen]])
+    * are out of scope (the
     * truth-set join below the floor is the quadratic tail nobody audits).
     *
     * Scale: the banding side is signature agg + band equi-join (the
@@ -910,8 +855,7 @@ object Dedup {
     * estimates it with the usual 1/√pairs error.
     */
   def lshDetectionCurve(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 2,
-      floorNum: Int = 1, floorDen: Int = 5, buckets: Int = 20,
+      n: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 2, buckets: Int = 20,
       precomputedSignatures: Option[DataFrame] = None,
       precomputedTruth: Option[DataFrame] = None): DataFrame = {
     require(numPerms % rowsPerBand == 0, "numPerms must divide into bands")
@@ -921,7 +865,7 @@ object Dedup {
     // the banding join itself — the thing being audited — runs per call.
     // Artifacts are VALIDATED against the call's parameters: a signature
     // relation built at a different numPerms, or truth bins built with
-    // different floor/buckets, would produce a silently wrong curve.
+    // different buckets, would produce a silently wrong curve.
     precomputedSignatures.foreach { sg =>
       val cols = sg.columns.toSet
       require(cols.contains("_id")
@@ -939,14 +883,10 @@ object Dedup {
       // accepted on the caller's contract
       val md = t.schema("j_bucket").metadata
       if (md.contains("graft.lshCurve.buckets"))
-        require(md.getLong("graft.lshCurve.buckets") == buckets.toLong
-            && md.getLong("graft.lshCurve.floorNum") == floorNum.toLong
-            && md.getLong("graft.lshCurve.floorDen") == floorDen.toLong,
+        require(md.getLong("graft.lshCurve.buckets") == buckets.toLong,
           s"precomputedTruth was binned with buckets=" +
-            s"${md.getLong("graft.lshCurve.buckets")}, floor=" +
-            s"${md.getLong("graft.lshCurve.floorNum")}/" +
-            s"${md.getLong("graft.lshCurve.floorDen")}; this call asked for " +
-            s"buckets=$buckets, floor=$floorNum/$floorDen")
+            s"${md.getLong("graft.lshCurve.buckets")}; this call asked for " +
+            s"buckets=$buckets")
     }
     val (sig, truth) = (precomputedSignatures, precomputedTruth) match {
       case (Some(s), Some(t)) => (s, t)
@@ -957,7 +897,7 @@ object Dedup {
           Persisted.track(lshCurveSignatures(ng, numPerms)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
         val t = precomputedTruth.getOrElse(
-          lshCurveTruthBins(ng, floorNum, floorDen, buckets))
+          lshCurveTruthBins(ng, buckets))
         (s, t)
     }
     val numBands = numPerms / rowsPerBand
@@ -994,22 +934,24 @@ object Dedup {
     ng.groupBy(col("_id")).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** The exact-Jaccard floor of [[lshDetectionCurve]]'s truth set,
+    * shared with its DuckDB twin. */
+  private val CurveFloorNum = 1
+  private val CurveFloorDen = 5
+
   /** [[lshDetectionCurve]]'s truth artifact over a shingle relation:
-    * exact-Jaccard pairs at or above `floorNum/floorDen`, integer-binned
+    * exact-Jaccard pairs at or above the 1/5 floor, integer-binned
     * to `j_bucket = ⌊buckets·J⌋` (the ngramJaccardPairs intersection
     * shape, integers end to end). This is the audit's real cost — the
     * unguarded Σdf² all-shingle self-join — which is exactly why it
     * stages as a build-once artifact; at 100 TB run it on a hash-sample
     * ([[graft.ops.Sampling.hashSample]]).
     */
-  def lshCurveTruthBins(ng: DataFrame, floorNum: Int = 1,
-      floorDen: Int = 5, buckets: Int = 20): DataFrame = {
-    // stamp the binning parameters as column metadata (parquet-durable)
-    // so lshDetectionCurve can require-check a staged artifact's
+  def lshCurveTruthBins(ng: DataFrame, buckets: Int = 20): DataFrame = {
+    // stamp the bin count as column metadata (parquet-durable) so
+    // lshDetectionCurve can require-check a staged artifact's
     // compatibility instead of trusting the caller
     val binMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.lshCurve.floorNum", floorNum.toLong)
-      .putLong("graft.lshCurve.floorDen", floorDen.toLong)
       .putLong("graft.lshCurve.buckets", buckets.toLong)
       .build()
     val cnt = ng.groupBy(col("_id")).agg(count(lit(1)).as("n_shingles"))
@@ -1023,8 +965,8 @@ object Dedup {
       .join(cnt.select(col("_id").as("id_a"), col("n_shingles").as("n_a")), Seq("id_a"))
       .join(cnt.select(col("_id").as("id_b"), col("n_shingles").as("n_b")), Seq("id_b"))
       .withColumn("_union", col("n_a") + col("n_b") - col("n_inter"))
-      .filter(lit(floorDen.toLong) * col("n_inter")
-        >= lit(floorNum.toLong) * col("_union"))
+      .filter(lit(CurveFloorDen.toLong) * col("n_inter")
+        >= lit(CurveFloorNum.toLong) * col("_union"))
       .select(col("id_a"), col("id_b"),
         expr(s"($buckets * n_inter) DIV _union").as("j_bucket", binMeta))
   }
@@ -1033,8 +975,7 @@ object Dedup {
     * shingles, identical per-seed md5 minima, identical band-tuple
     * equi-join, identical integer bins. */
   def lshDetectionCurveSql(n: Int = 3, numPerms: Int = 16,
-      rowsPerBand: Int = 2, floorNum: Int = 1, floorDen: Int = 5,
-      buckets: Int = 20): String = {
+      rowsPerBand: Int = 2, buckets: Int = 20): String = {
     require(n == 3, "the SQL twin unrolls word trigrams")
     val numBands = numPerms / rowsPerBand
     val sigCols = (0 until numPerms).map(i =>
@@ -1069,7 +1010,7 @@ object Dedup {
        |  FROM inter
        |  JOIN sig ca ON id_a = ca.doc_id
        |  JOIN sig cb ON id_b = cb.doc_id
-       |  WHERE $floorDen * i >= $floorNum * (ca.n + cb.n - i))
+       |  WHERE $CurveFloorDen * i >= $CurveFloorNum * (ca.n + cb.n - i))
        |SELECT j_bucket, CAST(count(*) AS BIGINT) AS n_pairs,
        |  CAST(sum(CASE WHEN d.id_a IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
        |    AS n_detected,
@@ -1081,9 +1022,9 @@ object Dedup {
 
   // ---------------- duplicate groups (connected components) ----------------
 
-  private def undirectedEdges(pairs: DataFrame, idA: String, idB: String): DataFrame =
-    pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
+  private def undirectedEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
 
   /** One round of min-label propagation, computed as ONE aggregation:
@@ -1114,13 +1055,17 @@ object Dedup {
       .agg(min(col("group_id")).as("group_id"), max(col("_self")).as("_old"))
   }
 
+  /** Round cap of [[duplicateGroupsConverged]]: with pointer jumping a
+    * component of diameter up to ~2^24 converges within it. */
+  private val MaxLabelRounds = 24
+
   /** Convergence-checked connected components for graphs of unknown
     * diameter. Each round runs (a) one-hop min-label propagation and (b) a
     * path-halving pointer jump — every node adopts the CURRENT label of
     * its label. Propagation alone moves the component minimum one hop per
     * round (linear in the diameter — a 10M-link duplicate chain would need
     * 10M rounds); the jump halves label-path depth each round, making
-    * convergence LOGARITHMIC in the diameter, so `maxIterations = 24`
+    * convergence LOGARITHMIC in the diameter, so [[MaxLabelRounds]] = 24
     * covers any component a physical corpus can produce (diameter up to
     * ~2^24 after the combined step).
     *
@@ -1130,18 +1075,17 @@ object Dedup {
     * label equals its component
     * minimum (labels only decrease, the minimum is stable, and a fixpoint
     * of one-hop min-propagation forces equal labels across each
-    * component). If `maxIterations` is exhausted before the fixpoint this
+    * component). If the rounds are exhausted before the fixpoint this
     * THROWS rather than silently returning a partial labeling — wrong
     * `group_id`s at scale are a data-corruption bug, not a tuning knob.
     */
-  private def duplicateGroupsConverged(p: DataFrame, idA: String,
-      idB: String, maxIterations: Int): DataFrame = {
+  private def duplicateGroupsConverged(p: DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // `p` arrives persisted AND counted ([[duplicateGroupsAuto]]): the
     // pairs may be an expensive upstream plan (e.g. the full MinHash
     // pipeline), and undirectedEdges references them twice — over a lazy
     // persist the two union branches would RACE to compute it twice
-    val edges = Persisted.track(undirectedEdges(p, idA, idB).persist(lvl))
+    val edges = Persisted.track(undirectedEdges(p).persist(lvl))
     // iteration state is localCheckpoint'ed (eager), not persist'ed: each
     // round references the previous labels three times, so without lineage
     // TRUNCATION the logical plan grows 3^k — by round ~10 the plan tree
@@ -1152,7 +1096,7 @@ object Dedup {
       .localCheckpoint(true)
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxLabelRounds) {
       // _old (the pre-round label) rides the propagation agg, so the
       // fixpoint check below needs no join against the previous labels
       val propagated = propagateOnceWithOld(labels, edges).localCheckpoint(true)
@@ -1185,8 +1129,9 @@ object Dedup {
     if (!converged) {
       labels.unpersist(false)
       throw new IllegalStateException(
-        s"duplicateGroupsConverged: no fixpoint after $maxIterations rounds " +
-          "(component diameter beyond ~2^24?) — raise maxIterations")
+        s"duplicateGroupsConverged: no fixpoint after $MaxLabelRounds rounds " +
+          "(component diameter beyond ~2^24?) — the pair set is not a " +
+          "duplicate graph a physical corpus produces")
     }
     Persisted.track(labels.select(col("_id"), col("group_id")))
   }
@@ -1200,12 +1145,11 @@ object Dedup {
     * fall back to [[duplicateGroupsConverged]] — convergence-checked, NOT
     * a fixed iteration count: huge pair sets are exactly where long
     * duplicate chains (large component diameter) appear, so a fixed
-    * unroll would silently mislabel at scale. Both paths return
-    * (_id, group_id = component minimum).
+    * unroll would silently mislabel at scale. `pairs` carries the ids as
+    * `(id_a, id_b)`; both paths return (_id, group_id = component minimum).
     */
-  def duplicateGroupsAuto(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxDriverPairs: Long = 2L * 1000 * 1000,
-      fallbackMaxIterations: Int = 24): DataFrame = {
+  def duplicateGroupsAuto(pairs: DataFrame,
+      maxDriverPairs: Long = 2L * 1000 * 1000): DataFrame = {
     val p = Persisted.track(pairs
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     if (p.count() <= maxDriverPairs) {
@@ -1213,7 +1157,7 @@ object Dedup {
       import spark.implicits._
       // collect as Dataset[(Long, Long)] — Tuple2 is @specialized on Long,
       // so this lands as unboxed pairs, not driver-heavy boxed Rows
-      val edges = p.select(col(idA).cast("long"), col(idB).cast("long"))
+      val edges = p.select(col("id_a").cast("long"), col("id_b").cast("long"))
         .as[(Long, Long)].collect()
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
@@ -1235,7 +1179,7 @@ object Dedup {
       val nodeSet = scala.collection.mutable.LongMap.empty[Unit]
       edges.foreach { case (a, b) => nodeSet(a) = (); nodeSet(b) = () }
       nodeSet.keysIterator.map(x => (x, find(x))).toSeq.toDF("_id", "group_id")
-    } else duplicateGroupsConverged(p, idA, idB, fallbackMaxIterations)
+    } else duplicateGroupsConverged(p)
   }
 
   /** End-to-end near-dup removal: MinHash near-dup pairs -> connected
@@ -1427,28 +1371,10 @@ object Dedup {
   // ---------------- SimHash ----------------
 
   /** 64-bit SimHash over distinct tokens: per bit, the sign of the sum of
-    * +/-1 contributions from each token's xxhash64 bit. One groupBy with 64
-    * integer sums — constant-width state, scan-speed at scale.
+    * +/-1 contributions from each token's xxhash64 bit. One codegen'd
+    * scan-speed expression per row ([[SimHashExpr]]), no token shuffle.
     */
-  def simhash64(df0: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val df = graft.ops.Parallelism.spreadIfNarrow(df0)
-    val tok = df.select(col(idCol).as("_id"),
-      explode(array_distinct(TextFunctions.tokens(col(textCol)))).as("token"))
-      .withColumn("_h", xxhash64(col("token")))
-    val bitSums = (0 until 64).map(b =>
-      sum(when(shiftright(col("_h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"_b$b"))
-    val fingerprint = (0 until 64).map(b =>
-      when(col(s"_b$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L)))
-      .reduce((x, y) => x.bitwiseOR(y))
-    tok.groupBy(col("_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("_id"), fingerprint.as("simhash"))
-  }
-
-  /** [[simhash64]] as a single codegen'd scan-speed expression (see
-    * [[SimHashExpr]]) — bit-identical output, no token shuffle.
-    */
-  def simhash64Fast(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // the whole-doc hash expression rides the scan stage — floor its
     // parallelism on narrow inputs (see ops.Parallelism)
     graft.ops.Parallelism.spreadIfNarrow(df)

@@ -8,16 +8,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash of a text column as ONE scalar expression.
   *
-  * [[Dedup.simhash64]] expresses the same fingerprint relationally
-  * (explode distinct tokens -> 64 conditional sums -> bit pack), which
-  * costs a shuffle of every token in the corpus. But SimHash is a pure
+  * The same fingerprint can be expressed relationally (explode distinct
+  * tokens -> 64 conditional sums -> bit pack), which costs a shuffle of
+  * every token in the corpus. But SimHash is a pure
   * per-document function — so this expression computes it in a single
   * pass inside the scan: tokenize, hash each distinct token once
   * (the SAME `xxhash64` (seed 42) Spark's built-in applies, via
   * [[XxHash64Function]], so the two formulations are bit-identical),
   * accumulate the 64 bit counters in a local array, pack. No shuffle,
-  * no state — scan speed at any corpus size. The relational form remains
-  * as the cross-check (`DedupSpec` pins them equal).
+  * no state — scan speed at any corpus size. [[Dedup.simhash64]] ships
+  * this form; the relational one is `DedupSpec`'s reference (pinned equal).
   */
 case class SimHashExpr(child: Expression) extends UnaryExpression {
 

@@ -13,10 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * gram-hash / window-min / rightmost-tie selection runs inside the
   * scan, returning the DISTINCT selected md5 hex strings (sorted, for
   * determinism). The relational formulation ([[Dedup
-  * .winnowFingerprints]]) costs an occurrence explode plus a per-doc
+  * .winnowFingerprintsSql]]) costs an occurrence explode plus a per-doc
   * window SHUFFLE of every gram; this form shuffles nothing until the
   * fingerprint equi-join, and is what the gated query ships
-  * (`DedupSpec` pins the two formulations equal; the DuckDB oracle
+  * (`DedupSpec` pins it equal to a relational Spark reference; the DuckDB oracle
   * replays the relational form, so gate hashes prove the equivalence
   * on every run).
   */

@@ -45,24 +45,25 @@ object GridJoin {
       "-170L + (id DIV 5) * 60L + id AS lon0",
       "-170L + (id DIV 5) * 60L + id + 40L + (id % 11) AS lon1")
 
-  /** Points-in-zones via the cell equi-join: returns per-zone
-    * (zone_id, n_points, n_taxa). `cellDeg` must divide the 10ths-degree
-    * domain sanely; 10° default.
+  /** Grid cell width in degrees, shared with the DuckDB twin. */
+  private val CellDeg = 10
+
+  /** Points-in-zones via the cell equi-join over [[CellDeg]]° cells:
+    * returns per-zone (zone_id, n_points, n_taxa).
     */
   def pointsPerZone(points: DataFrame, latCol: String, lonCol: String,
-      taxonCol: String, zonesDf: DataFrame, cellDeg: Int = 10): DataFrame = {
-    require(cellDeg >= 1 && cellDeg <= 90, "cellDeg in [1, 90]")
+      taxonCol: String, zonesDf: DataFrame): DataFrame = {
     val zc = zonesDf
       .withColumn("clat", explode(expr(
-        s"sequence((lat0 + 90L) DIV ${cellDeg}L, (lat1 + 90L) DIV ${cellDeg}L)")))
+        s"sequence((lat0 + 90L) DIV ${CellDeg}L, (lat1 + 90L) DIV ${CellDeg}L)")))
       .withColumn("clon", explode(expr(
-        s"sequence((lon0 + 180L) DIV ${cellDeg}L, (lon1 + 180L) DIV ${cellDeg}L)")))
+        s"sequence((lon0 + 180L) DIV ${CellDeg}L, (lon1 + 180L) DIV ${CellDeg}L)")))
     val pc = points.select(col(taxonCol), col(latCol).as("_lat"),
         col(lonCol).as("_lon"))
       .withColumn("clat", expr(
-        s"CAST(floor((_lat + 90.0D) / ${cellDeg}.0D) AS BIGINT)"))
+        s"CAST(floor((_lat + 90.0D) / ${CellDeg}.0D) AS BIGINT)"))
       .withColumn("clon", expr(
-        s"CAST(floor((_lon + 180.0D) / ${cellDeg}.0D) AS BIGINT)"))
+        s"CAST(floor((_lon + 180.0D) / ${CellDeg}.0D) AS BIGINT)"))
     pc.join(broadcast(zc), Seq("clat", "clon"))
       .filter(col("_lat") >= col("lat0") && col("_lat") <= col("lat1") &&
         col("_lon") >= col("lon0") && col("_lon") <= col("lon1"))
@@ -75,7 +76,7 @@ object GridJoin {
     * CTE: the CTE chain for `withCtes`, paired with
     * [[pointsPerZoneSelect]] as the body.
     */
-  def pointsPerZoneCtes(cellDeg: Int = 10): String =
+  val pointsPerZoneCtes: String =
     s"""zones AS (
        |  SELECT range AS zone_id,
        |    -80 + (range % 5) * 32 AS lat0,
@@ -85,16 +86,16 @@ object GridJoin {
        |  FROM range(25)),
        |zc AS (
        |  SELECT zone_id, lat0, lat1, lon0, lon1,
-       |    unnest(generate_series((lat0 + 90) // $cellDeg, (lat1 + 90) // $cellDeg)) AS clat
+       |    unnest(generate_series((lat0 + 90) // $CellDeg, (lat1 + 90) // $CellDeg)) AS clat
        |  FROM zones),
        |zcc AS (
        |  SELECT zone_id, lat0, lat1, lon0, lon1, clat,
-       |    unnest(generate_series((lon0 + 180) // $cellDeg, (lon1 + 180) // $cellDeg)) AS clon
+       |    unnest(generate_series((lon0 + 180) // $CellDeg, (lon1 + 180) // $CellDeg)) AS clon
        |  FROM zc),
        |pc AS (
        |  SELECT taxonKey, decimalLatitude AS lat, decimalLongitude AS lon,
-       |    CAST(floor((decimalLatitude + 90.0) / $cellDeg.0) AS BIGINT) AS clat,
-       |    CAST(floor((decimalLongitude + 180.0) / $cellDeg.0) AS BIGINT) AS clon
+       |    CAST(floor((decimalLatitude + 90.0) / ${CellDeg}.0) AS BIGINT) AS clat,
+       |    CAST(floor((decimalLongitude + 180.0) / ${CellDeg}.0) AS BIGINT) AS clon
        |  FROM occurrence),
        |cand AS (
        |  SELECT z.zone_id, p.taxonKey

@@ -13,10 +13,8 @@ import org.apache.spark.sql.functions._
   * task, then a 1-row-to-N-rows `stack` unpivot on the driver-side
   * result. The exact `count(DISTINCT)` per column makes Catalyst plan an
   * Expand (input × #profiled-columns before the partial agg) — the
-  * documented price of exact cardinality; at 100 TB swap
-  * `approxDistinct = true` to profile with HLL partial states instead
-  * (no Expand, engine-specific counts — which is why the GATED query
-  * uses the exact form).
+  * price of exact cardinality, which the gated query needs (HLL partial
+  * states would avoid the Expand but give engine-specific counts).
   *
   * min/max are surfaced as strings so one schema fits every column type;
   * callers profile numeric-exact columns (ints, strings, cents) — a raw
@@ -28,17 +26,13 @@ object Profile {
   /** Long-format profile: one row per profiled column —
     * (col_name, total, non_null, n_distinct, min_val, max_val).
     */
-  def profile(df: DataFrame, cols: Seq[String],
-      approxDistinct: Boolean = false): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     // clear error instead of agg(mmAggs.head, ...) NoSuchElementException
     // (r16 ADVICE). NOTE the two-subtree split below scans df TWICE — the
     // deliberate trade for keeping both subtrees sort-free (a profile
     // input is a base-table scan; callers profiling an expensive derived
     // plan should persist it first).
     require(cols.nonEmpty, "profile: cols must be non-empty")
-    def nd(c: String): Column =
-      if (approxDistinct) approx_count_distinct(col(c))
-      else countDistinct(col(c))
     // Two aggregation subtrees, not one: min/max over STRING columns have
     // immutable agg buffers, and one of them inside the count(DISTINCT)
     // Expand rewrite knocks the ENTIRE keyed aggregate off the hash path
@@ -51,7 +45,7 @@ object Profile {
     // schema, no corpus-sized sort at any scale.
     val cntAggs = count(lit(1)).as("__total") +: cols.flatMap(c => Seq(
       count(col(c)).as(s"__${c}__nn"),
-      nd(c).as(s"__${c}__nd")))
+      countDistinct(col(c)).as(s"__${c}__nd")))
     val mmAggs = cols.flatMap(c => Seq(
       min(col(c)).cast("string").as(s"__${c}__min"),
       max(col(c)).cast("string").as(s"__${c}__max")))

@@ -270,7 +270,7 @@ object Sampling {
        |  substr(md5(CAST(d.$keyCol AS VARCHAR)), 1, 8) <
        |    lpad(lower(to_hex(_thr)), 8, '0')""".stripMargin
 
-  /** Deterministic train/val/test split: assign each row a split label by
+  /** Deterministic train/val/test split: add a `split` label column by
     * where the first 8 hex chars of md5(key) fall in `[0, 2^32)` —
     * `[0, train)` / `[train, train+val)` / the rest. Membership is a pure
     * function of the key (auditable, engine-agnostic, stable under
@@ -281,12 +281,11 @@ object Sampling {
     * scaling-law ablations nest.
     */
   def datasetSplit(df: DataFrame, keyCol: String,
-      trainFrac: Double = 0.8, valFrac: Double = 0.1,
-      splitCol: String = "split"): DataFrame = {
+      trainFrac: Double = 0.8, valFrac: Double = 0.1): DataFrame = {
     require(trainFrac >= 0.0 && valFrac >= 0.0 && trainFrac + valFrac <= 1.0,
       s"datasetSplit: bad fractions train=$trainFrac val=$valFrac")
     val h = substring(shuffleKey(col(keyCol)), 1, 8)
-    df.withColumn(splitCol,
+    df.withColumn("split",
       when(h < lit(weightThresholdHex(trainFrac)), "train")
         .when(h < lit(weightThresholdHex(trainFrac + valFrac)), "val")
         .otherwise("test"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * 2009) — the standard score-free combiner for heterogeneous retrieval
   * arms, and the retrieval shape RAG-style corpus queries run at scale.
   *
-  * RRF(d) = Σ_arms 1 / (k0 + rank_arm(d)), here as exact fixed-point
+  * RRF(d) = Σ_arms 1 / (k0 + rank_arm(d)) with k0 = [[K0]], here as exact fixed-point
   * integers: `RrfScale DIV (k0 + rank)` (both operands positive, DIV =
   * floor in Spark and DuckDB alike), so the fused ranking replays
   * bit-for-bit in the oracle. Raw arm scores never mix — only ranks —
@@ -29,20 +29,23 @@ object HybridSearch {
     */
   val RrfScale: Long = 1L << 20
 
+  /** RRF's rank offset (the paper's k = 60), shared with the DuckDB twin. */
+  private val K0 = 60
+
   /** Fuse `arms` — each a (top-k DataFrame, its deterministic total
     * ordering) pair sharing the id column `idCol` — into the RRF top-k.
     * Each arm must be a RANKING: one row per id (a duplicate id would
     * contribute once per occurrence). Output: (idCol, rrf_fp, n_arms),
     * ranked (rrf_fp desc, id).
     */
-  def rrfFuse(arms: Seq[(DataFrame, Seq[Column])], idCol: String, k: Int,
-      k0: Int = 60): DataFrame = {
+  def rrfFuse(arms: Seq[(DataFrame, Seq[Column])], idCol: String,
+      k: Int): DataFrame = {
     require(arms.nonEmpty)
     val contribs = arms.map { case (df, order) =>
       df.select(col(idCol),
           row_number().over(Window.orderBy(order: _*)).cast("long").as("_rrf_rank"))
         .select(col(idCol),
-          expr(s"$RrfScale DIV (${k0.toLong} + _rrf_rank)").as("_rrf_c"))
+          expr(s"$RrfScale DIV ($K0 + _rrf_rank)").as("_rrf_c"))
     }
     contribs.reduce(_ unionByName _)
       .groupBy(col(idCol))
@@ -59,7 +62,7 @@ object HybridSearch {
     * hash compare).
     */
   def rrfFuseSql(arms: Seq[(String, String, String)], k: Int,
-      k0: Int = 60, outIdCol: String = "doc_id"): String = {
+      outIdCol: String = "doc_id"): String = {
     val armCtes = arms.zipWithIndex.map { case ((sql, _, _), i) =>
       s"arm$i AS MATERIALIZED (\n$sql)"
     }
@@ -68,7 +71,7 @@ object HybridSearch {
         s"row_number() OVER (ORDER BY $orderBy) AS rnk FROM arm$i)"
     }
     val union = arms.indices
-      .map(i => s"SELECT $outIdCol, $RrfScale // ($k0 + rnk) AS c FROM r$i")
+      .map(i => s"SELECT $outIdCol, $RrfScale // ($K0 + rnk) AS c FROM r$i")
       .mkString("\nUNION ALL\n")
     s"""WITH ${(armCtes ++ rankCtes).mkString(",\n")},
        |u AS ($union)

@@ -269,7 +269,7 @@ object Similarity {
 
   /** Symmetric per-vector int8 quantization: `q[i] = floor(x[i] * scale +
     * 0.5)` with `scale = 127 / max|x|` (1.0 for an all-zero vector), kept
-    * as `array<tinyint>` plus the scale. Stored/shuffled quantized, an
+    * as `qvec: array<tinyint>` plus the scale `qscale`. Stored/shuffled quantized, an
     * embedding column shrinks 4x (1 byte vs float32) — at 100 TB that is
     * 4x fewer shuffle bytes through every ANN candidate join, with cosine
     * preserved to ~1/127 per axis (quantization is per-vector symmetric,
@@ -279,16 +279,15 @@ object Similarity {
     * op order, identical in DuckDB — the oracle replays quantization and
     * the quantized scores exactly ([[quantizedTopKSql]]).
     */
-  def withQuantizedVec(df: DataFrame, vecCol: String, qvecCol: String = "qvec",
-      scaleCol: String = "qscale"): DataFrame = {
+  def withQuantizedVec(df: DataFrame, vecCol: String): DataFrame = {
     // one codegen'd pass per row (the transform/array_max HOF formulation
     // is CodegenFallback — interpreted per element)
     val q = org.apache.spark.sql.GraftColumnBridge.column(QuantizeInt8Expr(
       org.apache.spark.sql.GraftColumnBridge.expression(
         col(vecCol).cast("array<double>"))))
     df.withColumn("_graft_q8", q)
-      .withColumn(scaleCol, col("_graft_q8.qscale"))
-      .withColumn(qvecCol, col("_graft_q8.qvec"))
+      .withColumn("qscale", col("_graft_q8.qscale"))
+      .withColumn("qvec", col("_graft_q8.qvec"))
       .drop("_graft_q8")
   }
 
@@ -1081,12 +1080,18 @@ object Similarity {
       org.apache.spark.sql.GraftColumnBridge.expression(vec.cast("array<double>")),
       planes.map(_.toSeq).toSeq))
 
+  /** Banding of [[lshCosinePairs]] and [[lshCosinePairsQuantized]]:
+    * tables, hyperplanes per table, and the seed of table 0's planes. */
+  private val LshTables = 8
+  private val LshPlanesPerTable = 12
+  private val LshSeed = 42L
+
   /** Bucketed cosine near-duplicate pairs — the 100 TB path that replaces
     * [[cosineNearDupPairs]]'s exact O(n^2) nested-loop join with a
     * candidates-then-verify plan, the same shape as MinHash+LSH for text:
     *
-    *  1. candidates: `numTables` independent sign-LSH bucketings of
-    *     `planesPerTable` hyperplanes each; vectors sharing a (table,
+    *  1. candidates: [[LshTables]] independent sign-LSH bucketings of
+    *     [[LshPlanesPerTable]] hyperplanes each; vectors sharing a (table,
     *     bucket) cell become candidates via a plain EQUI-join — pair
     *     count is bounded by bucket occupancy, never n^2;
     *  2. verify: exact cosine (codegen'd [[DotProductExpr]], identical op
@@ -1094,9 +1099,9 @@ object Similarity {
     *     precision is exact.
     *
     * Recall is the banding guarantee: a pair at angle theta shares one
-    * table's bucket with p = (1 - theta/pi)^planesPerTable, so the miss
-    * probability is (1 - p)^numTables — e.g. a near-identical pair at
-    * cosine 0.9998 is missed with prob ~2e-10 at the defaults, while a
+    * table's bucket with p = (1 - theta/pi)^12, so the miss
+    * probability is (1 - p)^8 — e.g. a near-identical pair at
+    * cosine 0.9998 is missed with prob ~2e-10, while a
     * pair exactly AT a low threshold has materially lower recall. This is
     * the inherent LSH trade: the method needs a similarity GAP between
     * duplicates and background (real embedding near-dup corpora have
@@ -1105,8 +1110,7 @@ object Similarity {
     * [[graft.DerivedModel.embeddingsAugmented]].
     */
   def lshCosinePairs(embeddings: DataFrame, idCol: String, vecCol: String,
-      tau: Double, numTables: Int = 8, planesPerTable: Int = 12,
-      seed: Long = 42L, dim: Option[Int] = None): DataFrame = {
+      tau: Double, dim: Option[Int] = None): DataFrame = {
     val d = resolveDim(embeddings, vecCol, dim, "lshCosinePairs")
     // vectors + norms computed once per row (same doubles as per-pair, so
     // the verify cosine is bit-identical to the exact formulation); the
@@ -1123,11 +1127,11 @@ object Similarity {
     // a 100k-vector corpus; TUNING, `numTables` / `planesPerTable` row)
     val withBuckets = normed.select(
       Seq(col("_nid"), col("_nvec"), col("_nnorm")) ++
-        (0 until numTables).map { t =>
-          val planes = hyperplanes(d, planesPerTable, seed + t)
+        (0 until LshTables).map { t =>
+          val planes = hyperplanes(d, LshPlanesPerTable, LshSeed + t)
           lshBucket(col("_nvec"), planes).as(s"_b$t")
         }: _*)
-    // vectors travel THROUGH the bucket self-join (shuffled numTables x,
+    // vectors travel THROUGH the bucket self-join (shuffled LshTables x,
     // i.e. |corpus| x tables wide rows) and the cosine threshold sits
     // INSIDE the join condition — candidates that fail tau are verified
     // in codegen and never materialized. The alternative (skinny
@@ -1136,7 +1140,7 @@ object Similarity {
     // orders of magnitude more bytes than |corpus| x tables.
     val bucketed = withBuckets
       .select(col("_nid"), col("_nvec"), col("_nnorm"),
-        explode(array((0 until numTables).map(t =>
+        explode(array((0 until LshTables).map(t =>
           struct(lit(t).as("tbl"), col(s"_b$t").as("bucket"))): _*)).as("tb"))
       .select(col("_nid"), col("_nvec"), col("_nnorm"),
         col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
@@ -1156,7 +1160,7 @@ object Similarity {
 
   /** [[lshCosinePairs]] with the int8-quantized payload — the composition
     * the 100 TB shuffle-byte measurement motivates: the bucket self-join
-    * shuffles |corpus| x numTables rows, and here each row carries a
+    * shuffles |corpus| x [[LshTables]] rows, and here each row carries a
     * 1-byte-per-dim `array<tinyint>` instead of the float path's
     * 8-byte-per-dim doubles (~7x fewer exchange bytes measured,
     * TUNING, `int8 quantization` row). The ENTIRE pipeline sees the quantized
@@ -1169,13 +1173,12 @@ object Similarity {
     * or re-rank survivors with full-precision vectors.
     */
   def lshCosinePairsQuantized(embeddings: DataFrame, idCol: String, vecCol: String,
-      tau: Double, numTables: Int = 8, planesPerTable: Int = 12,
-      seed: Long = 42L, dim: Option[Int] = None): DataFrame = {
+      tau: Double, dim: Option[Int] = None): DataFrame = {
     val d = resolveDim(embeddings, vecCol, dim, "lshCosinePairsQuantized")
     // buckets are computed BEFORE the persist (unlike the float path,
     // whose bucket input is the already-persisted verify vector): the
     // bucket input here is a per-row upcast the verify never needs, so
-    // persisting buckets (numTables longs) instead of the upcast (dim
+    // persisting buckets (LshTables longs) instead of the upcast (dim
     // doubles) keeps the cache int8-sized and computes the upcast once
     val withBuckets = graft.Persisted.track(
       withQuantizedVec(embeddings, vecCol)
@@ -1185,14 +1188,14 @@ object Similarity {
           col("qvec").cast("array<double>").as("_qd"))
         .select(
           Seq(col("_nid"), col("_nq"), col("_nnorm")) ++
-            (0 until numTables).map { t =>
-              val planes = hyperplanes(d, planesPerTable, seed + t)
+            (0 until LshTables).map { t =>
+              val planes = hyperplanes(d, LshPlanesPerTable, LshSeed + t)
               lshBucket(col("_qd"), planes).as(s"_b$t")
             }: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val bucketed = withBuckets
       .select(col("_nid"), col("_nq"), col("_nnorm"),
-        explode(array((0 until numTables).map(t =>
+        explode(array((0 until LshTables).map(t =>
           struct(lit(t).as("tbl"), col(s"_b$t").as("bucket"))): _*)).as("tb"))
       .select(col("_nid"), col("_nq"), col("_nnorm"),
         col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
@@ -1216,52 +1219,10 @@ object Similarity {
     * lists shard by cluster and only nProbe lists are scanned per query.
     */
   def ivfAssign(embeddings: DataFrame, idCol: String, vecCol: String,
-      numClusters: Int): DataFrame = {
-    // the cluster count AND a fingerprint of the centroid set ride as
-    // column metadata (survives parquet, the shingle-artifact pattern)
-    // so a staged assignment carries its own compatibility proof —
-    // ivfTopK's precomputedAssignments hook require-checks the count
-    // against the probe-time numClusters and the fingerprint against
-    // the centroids of the PROBE-TIME embeddings: an assignment whose
-    // centroid set no longer matches the live corpus would silently
-    // select the wrong inverted lists (the count alone can't see that)
-    val centLocal = ivfCentroids(embeddings, idCol, vecCol, numClusters)
-      .collect() // numClusters rows — KBs
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("graft.ivf.numClusters", numClusters.toLong)
-      .putLong("graft.ivf.centroidFp", centroidFingerprint(centLocal))
-      .build()
+      numClusters: Int): DataFrame =
     assignToCentroids(embeddings, idCol, vecCol,
       ivfCentroids(embeddings, idCol, vecCol, numClusters))
-      .select(col(idCol), col(vecCol), col("cluster").as("cluster", meta))
-  }
-
-  /** Order-independent-of-collection, bit-exact fingerprint of a
-    * centroid relation (FNV-1a over (id, raw vector bits), rows folded
-    * in id order). The same (corpus prefix, numClusters) always hashes
-    * the same; a corpus whose first `numClusters` vectors changed —
-    * the exact drift that re-seeds [[ivfCentroids]] and invalidates a
-    * staged assignment — always hashes differently.
-    */
-  private def centroidFingerprint(
-      rows: Array[org.apache.spark.sql.Row]): Long = {
-    var h = 0xcbf29ce484222325L
-    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-    def idBits(v: Any): Long = v match {
-      case l: Long => l
-      case i: Int => i.toLong
-      case other => other.hashCode.toLong // value-based, deterministic
-    }
-    rows.sortBy(r => idBits(r.get(0))).foreach { r =>
-      mix(idBits(r.get(0)))
-      r.getSeq[Any](1).foreach {
-        case f: Float => mix(java.lang.Float.floatToRawIntBits(f).toLong)
-        case d: Double => mix(java.lang.Double.doubleToRawLongBits(d))
-        case other => mix(idBits(other))
-      }
-    }
-    h
-  }
+      .select(col(idCol), col(vecCol), col("cluster"))
 
   def ivfCentroids(embeddings: DataFrame, idCol: String, vecCol: String,
       numClusters: Int): DataFrame =
@@ -1270,74 +1231,20 @@ object Similarity {
 
   /** ANN via IVF: rank the query's nProbe nearest clusters, score only
     * vectors assigned to them. Recall measured against [[bruteForceTopK]]
-    * in the spec.
-    *
-    * `precomputedAssignments` is the staged-index deployment shape: the
-    * [[ivfAssign]] relation built once (the index), persisted or written
-    * to the cluster store, and probed by every query — per-query cost
-    * drops to centroid ranking + nProbe inverted-list scans instead of a
-    * full corpus re-assignment. The artifact is VALIDATED: exact
-    * (idCol, vecCol, cluster) schema, [[ivfAssign]]'s numClusters stamp,
-    * AND its centroid fingerprint must match the centroids of the
-    * probe-time `embeddings` — a cluster-count mismatch or a stale
-    * index (corpus drifted since the assignment was built, so the live
-    * centroid set differs) silently probes the wrong lists otherwise.
-    * The fingerprint check costs nothing extra: the staged path needs
-    * the centroid set collected for ranking anyway (numClusters rows).
-    * What the stamp CANNOT see: rows added since the build that do not
-    * displace a centroid — they are simply absent from the staged
-    * index; refreshing the assignment on ingest is the deployment's
-    * freshness contract, as with any external index.
+    * in the spec. Building the plan runs no job: the assignment and the
+    * probe ranking are both relations of `embeddings`.
     */
   def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, k: Int, numClusters: Int = 16, nProbe: Int = 4,
-      precomputedAssignments: Option[DataFrame] = None): DataFrame = {
-    precomputedAssignments.foreach { pre =>
-      require(pre.columns.toSeq == Seq(idCol, vecCol, "cluster"),
-        s"precomputedAssignments must be the ivfAssign() relation with " +
-          s"schema ($idCol, $vecCol, cluster); got (${pre.columns.mkString(", ")})")
-      val md = pre.schema("cluster").metadata
-      require(md.contains("graft.ivf.numClusters"),
-        "precomputedAssignments carry no numClusters stamp — build them " +
-          "with ivfAssign()")
-      require(md.getLong("graft.ivf.numClusters") == numClusters.toLong,
-        s"precomputedAssignments were built with numClusters=" +
-          s"${md.getLong("graft.ivf.numClusters")}, but this probe was " +
-          s"asked for numClusters=$numClusters")
-    }
-    val assigned = precomputedAssignments
-      .getOrElse(ivfAssign(embeddings, idCol, vecCol, numClusters))
+      queryId: Long, k: Int, numClusters: Int = 16, nProbe: Int = 4): DataFrame = {
     val query = embeddings.filter(col(idCol) === queryId)
       .select(col(vecCol).as("_qvec"))
-    val centRel = ivfCentroids(embeddings, idCol, vecCol, numClusters)
-    val probedBase = precomputedAssignments match {
-      case Some(pre) =>
-        // staged path: the centroid set is collected (numClusters rows)
-        // both to verify the artifact's fingerprint against the LIVE
-        // corpus and to rank probes from a local relation — one tiny
-        // sort-limit job, no second corpus scan
-        val centLocal = centRel.collect()
-        val fp = centroidFingerprint(centLocal)
-        val md = pre.schema("cluster").metadata
-        require(md.contains("graft.ivf.centroidFp"),
-          "precomputedAssignments carry no centroid fingerprint — " +
-            "rebuild them with ivfAssign()")
-        require(md.getLong("graft.ivf.centroidFp") == fp,
-          "precomputedAssignments are STALE: the live corpus's centroid " +
-            "set no longer matches the one this assignment was built " +
-            "against — probing it would select wrong inverted lists; " +
-            "rebuild the assignment with ivfAssign()")
-        embeddings.sparkSession.createDataFrame(
-          java.util.Arrays.asList(centLocal: _*), centRel.schema)
-      case None => centRel
-    }
-    val probed = probedBase
+    val probed = ivfCentroids(embeddings, idCol, vecCol, numClusters)
       .join(broadcast(query))
       .select(col("_cid"), cosine(col("_cvec"), col("_qvec")).as("_qsim"))
       .orderBy(col("_qsim").desc, col("_cid"))
       .limit(nProbe)
       .select(col("_cid").as("cluster"))
-    assigned
+    ivfAssign(embeddings, idCol, vecCol, numClusters)
       .join(broadcast(probed), Seq("cluster"), "left_semi")
       .join(broadcast(query))
       .filter(col(idCol) =!= queryId)
@@ -1346,33 +1253,29 @@ object Similarity {
       .limit(k)
   }
 
-  /** ANN via sign-LSH: score only candidates sharing one of the probe
-    * buckets, then exact-cosine rank. `probeHamming = 0` is classic
-    * single-probe; `1` (default) is multi-probe — also scan the buckets
-    * whose code differs from the query's by one bit (the most likely
-    * boundary misses), which multiplies recall at (numPlanes+1)x candidate
-    * cost, still a bucket equi-join (no scan of the full collection).
-    * Recall < 1 by construction; measured against [[bruteForceTopK]] in
-    * the spec.
+  /** ANN via sign-LSH, multi-probe: score only candidates whose bucket
+    * is the query's or differs from it by one bit (the most likely
+    * boundary misses), then exact-cosine rank. Probing the one-bit
+    * neighbours multiplies recall at (numPlanes+1)x candidate cost, still
+    * a bucket equi-join (no scan of the full collection). Recall < 1 by
+    * construction; measured against [[bruteForceTopK]] in the spec.
     */
   def lshTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, numPlanes: Int = 12,
-      probeHamming: Int = 1, dim: Option[Int] = None): DataFrame = {
+      dim: Option[Int] = None): DataFrame = {
     val planes = hyperplanes(resolveDim(embeddings, vecCol, dim, "lshTopK"), numPlanes)
     val bucketed = embeddings.withColumn("_bucket", lshBucket(col(vecCol), planes))
-    val probeCols = col("_bucket") +: (if (probeHamming >= 1)
+    val probeCols = col("_bucket") +:
       (0 until numPlanes).map(i => col("_bucket").bitwiseXOR(shiftleft(lit(1L), i)))
-      else Seq.empty)
     val query = bucketed.filter(col(idCol) === queryId)
       .select(explode(array(probeCols: _*)).as("_qbucket"), col(vecCol).as("_qvec"))
     bucketed
       .join(broadcast(query), col("_bucket") === col("_qbucket"))
       .filter(col(idCol) =!= queryId)
       .select(col(idCol), cosine(col(vecCol), col("_qvec")).as("cosine"))
-      // at probeHamming <= 1 every probe bucket is distinct, so a candidate
-      // (one bucket per row) matches at most once and this distinct is a
-      // no-op; it future-proofs probeHamming > 1, where multi-bit probes
-      // could enumerate the same bucket twice
+      // the probe buckets are distinct, so a candidate (one bucket per
+      // row) matches at most once while ids are unique; nothing enforces
+      // that, so keep the distinct
       .distinct()
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)

@@ -28,33 +28,32 @@ object Layout {
 
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
+  private val BitsPerDim = 31
+
   /** Morton (Z-order) key of two non-negative integer columns: bit i of
     * each key lands at interleaved positions 2i / 2i+1, so sorting by the
     * key clusters rows that are close in BOTH dimensions — the layout
     * that makes min/max file statistics selective for 2-D range
     * predicates (lat/lon tiles, (user, day) slices). Each input
-    * contributes its low `bitsPerDim` bits (≤ 31: the interleaved result
+    * contributes its low [[BitsPerDim]] = 31 bits (the interleaved result
     * stays in the positive BIGINT range at 62 bits).
     *
     * A pure bitwise scan expression — shift/and/or only, no hash, no
     * shuffle — identical in any engine, so the key (and therefore the
     * layout) is reproducible ([[zorderKeySql]]).
     */
-  def zorderKey(x: Column, y: Column, bitsPerDim: Int = 31): Column = {
-    require(bitsPerDim >= 1 && bitsPerDim <= 31,
-      s"zorderKey: bitsPerDim must be in [1, 31], got $bitsPerDim")
-    (0 until bitsPerDim).map { i =>
+  def zorderKey(x: Column, y: Column): Column =
+    (0 until BitsPerDim).map { i =>
       val xb = shiftleft(shiftrightunsigned(x.cast("long"), i).bitwiseAND(lit(1L)),
         2 * i)
       val yb = shiftleft(shiftrightunsigned(y.cast("long"), i).bitwiseAND(lit(1L)),
         2 * i + 1)
       xb.bitwiseOR(yb)
     }.reduce(_ bitwiseOR _)
-  }
 
   /** DuckDB twin of [[zorderKey]] (same shifts, same OR-fold). */
-  def zorderKeySql(x: String, y: String, bitsPerDim: Int = 31): String =
-    (0 until bitsPerDim).map { i =>
+  def zorderKeySql(x: String, y: String): String =
+    (0 until BitsPerDim).map { i =>
       s"(((CAST($x AS BIGINT) >> $i) & 1) << ${2 * i}) | " +
         s"(((CAST($y AS BIGINT) >> $i) & 1) << ${2 * i + 1})"
     }.map(t => s"($t)").mkString(" | ")
@@ -67,9 +66,8 @@ object Layout {
     * stats, which plain single-column sorting only provides for one
     * dimension.
     */
-  def zorderBy(df: DataFrame, x: Column, y: Column,
-      bitsPerDim: Int = 31): DataFrame =
-    df.withColumn("_graft_zkey", zorderKey(x, y, bitsPerDim))
+  def zorderBy(df: DataFrame, x: Column, y: Column): DataFrame =
+    df.withColumn("_graft_zkey", zorderKey(x, y))
       .orderBy(col("_graft_zkey"))
       .drop("_graft_zkey")
 

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
-/** Pluggable data sources, mirroring the reference's deleted layered design
-  * (`util/data_source.pyc`, SURVEY.md §1.4): the ABCs `OccurrenceSource` /
-  * `TaxonomicSource` become traits over DataFrames; the REST API
+/** Data sources: the reference's REST API
   * (`gbif_helper.py:86-88,17-19,35-42`) becomes local Parquet/CSV scans with
-  * Catalyst predicate pushdown replacing the server-side query params.
+  * Catalyst predicate pushdown replacing the server-side query params, and
+  * its pluggable source ABCs (`util/data_source.pyc`, SURVEY.md §1.4)
+  * become plain DataFrame readers.
   *
   * Expected schemas (FIXTURES.md §3):
   *  - occurrence: taxonKey long, decimalLatitude double, decimalLongitude
@@ -17,17 +17,6 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *    string, taxonomicStatus string, acceptedKey long?, higherTaxonKeys
   *    array<long>, habitat string?
   */
-trait OccurrenceSource { def occurrences(spark: SparkSession): DataFrame }
-trait TaxonomicSource { def backbone(spark: SparkSession): DataFrame }
-
-final case class ParquetOccurrenceSource(path: String) extends OccurrenceSource {
-  def occurrences(spark: SparkSession): DataFrame = spark.read.parquet(path)
-}
-
-final case class ParquetTaxonomicSource(path: String) extends TaxonomicSource {
-  def backbone(spark: SparkSession): DataFrame = spark.read.parquet(path)
-}
-
 object Sources {
 
   /** S1 csv-scan (`apply_gbif_filter.py:102-104`): header = schema, all
@@ -103,17 +92,19 @@ object Sources {
   def readAvro(spark: SparkSession, path: String): DataFrame =
     spark.read.format(AvroFormat).load(path)
 
+  private val XmlRowTag = "row"
+
   /** XML sink/source pair (Spark 4 ships the former spark-xml natively,
-    * shortname registered). Reading back with an explicit schema, like
-    * JSON — inference would widen always-null columns.
+    * shortname registered), one `<row>` element per row. Reading back
+    * with an explicit schema, like JSON — inference would widen
+    * always-null columns.
     */
-  def writeXml(df: DataFrame, path: String, rowTag: String = "row"): Unit =
-    df.write.mode("overwrite").option("rowTag", rowTag).xml(path)
+  def writeXml(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("rowTag", XmlRowTag).xml(path)
 
   def readXml(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rowTag: String = "row"): DataFrame =
-    spark.read.schema(schema).option("rowTag", rowTag).xml(path)
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).option("rowTag", XmlRowTag).xml(path)
 
   /** Hive-style partitioned parquet layout: one directory per value of
     * `partitionCols`. An equality filter on a partition column prunes at

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, LocalFileSystem,
+  Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Maintenance for the RETRY-SAFE batchId-keyed sink layout
@@ -29,8 +29,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      explicit path list anyway);
   *   2. the tmp dir is renamed to `merged=<upTo>` — still invisible,
   *      because readers only consult `merged=<marker>`;
-  *   3. the marker is replaced via an ATOMIC_MOVE of a freshly written
-  *      temp file — the one instant the reader's view switches;
+  *   3. the marker is replaced by an atomic overwriting rename of a
+  *      freshly written temp file — the one instant the reader's view
+  *      switches;
   *   4. absorbed inputs (the old merged dir and the folded `batch=` dirs)
   *      are garbage-collected.
   * A crash before (3) leaves the reader on the old view (stale tmp/orphan
@@ -47,6 +48,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every staged artifact here follows), never concurrently with a live
   * query writing the same sink.
   *
+  * The sink root may be a plain path or a URI (`file:`, `hdfs://`,
+  * `s3a://`, ...): every listing, read, rename and delete goes through
+  * the root's Hadoop FileSystem, as [[graft.ops.Parallelism.inputBytes]]
+  * does.
+  *
   * At 100 TB this is the file-compaction half of what table formats
   * (Delta/Iceberg) provide transactionally; on a plain object store the
   * marker protocol above is the standard single-writer commit pattern.
@@ -59,39 +65,69 @@ object EpochLayout {
   final case class CompactionReport(upTo: Long, mergedEpochs: Int,
       filesBefore: Long, filesAfter: Long)
 
-  /** The committed compaction horizon, if any. */
-  def compactedUpTo(sinkRoot: String): Option[Long] = {
-    val f = new File(sinkRoot, MarkerName)
-    if (!f.isFile) None
-    else scala.util.Try(
-      new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        .trim.toLong).toOption
+  /** The root's file system and the root qualified on it. The local file
+    * system is used raw: no checksum side files, and its rename is the
+    * POSIX one, which replaces an existing target atomically.
+    */
+  private def resolve(spark: SparkSession, root: String): (FileSystem, Path) = {
+    val path = new Path(root)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case local: LocalFileSystem => local.getRaw
+      case other => other
+    }
+    (fs, fs.makeQualified(path))
   }
 
-  private def subDirs(sinkRoot: String, prefix: String): Seq[(Long, File)] =
-    Option(new File(sinkRoot).listFiles()).getOrElse(Array.empty[File]).toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
-      .flatMap(f => scala.util.Try(
-        f.getName.stripPrefix(prefix).toLong).toOption.map(_ -> f))
+  /** `p`'s status, None when it does not exist; any other listing
+    * error propagates (a store that cannot be read is not an empty sink). */
+  private def status(fs: FileSystem, p: Path): Option[FileStatus] =
+    try Some(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  private def isDir(fs: FileSystem, p: Path): Boolean =
+    status(fs, p).exists(_.isDirectory)
+
+  /** The committed compaction horizon, if any. */
+  def compactedUpTo(spark: SparkSession, sinkRoot: String): Option[Long] = {
+    val (fs, root) = resolve(spark, sinkRoot)
+    val marker = new Path(root, MarkerName)
+    if (!status(fs, marker).exists(_.isFile)) None
+    else {
+      val in = fs.open(marker)
+      try scala.util.Try(new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        .trim.toLong).toOption
+      finally in.close()
+    }
+  }
+
+  private def subDirs(fs: FileSystem, root: Path,
+      prefix: String): Seq[(Long, Path)] =
+    if (!isDir(fs, root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .flatMap(st => scala.util.Try(
+        st.getPath.getName.stripPrefix(prefix).toLong).toOption.map(_ -> st.getPath))
 
   /** Live (not-yet-compacted) epoch directories. */
-  def liveEpochDirs(sinkRoot: String): Seq[(Long, File)] = {
-    val upTo = compactedUpTo(sinkRoot)
-    subDirs(sinkRoot, "batch=").filter { case (id, _) =>
-      upTo.forall(id > _)
-    }
+  def liveEpochDirs(spark: SparkSession, sinkRoot: String): Seq[(Long, Path)] = {
+    val (fs, root) = resolve(spark, sinkRoot)
+    val upTo = compactedUpTo(spark, sinkRoot)
+    subDirs(fs, root, "batch=").filter { case (id, _) => upTo.forall(id > _) }
   }
 
   /** Data files (non-hidden, recursive) under a directory — the file
     * count the compaction exists to shrink.
     */
-  def dataFileCount(dir: File): Long = {
-    def walk(f: File): Long =
-      if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L
-      else if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[File]).map(walk).sum
-      else 1L
-    if (dir.exists()) walk(dir) else 0L
+  def dataFileCount(spark: SparkSession, dir: String): Long = {
+    val (fs, root) = resolve(spark, dir)
+    def walk(p: Path): Long =
+      fs.listStatus(p).toSeq.map { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) 0L
+        else if (st.isDirectory) walk(st.getPath)
+        else 1L
+      }.sum
+    if (isDir(fs, root)) walk(root) else 0L
   }
 
   /** Marker-aware read-back of an epoch sink: the committed merged dir
@@ -104,11 +140,12 @@ object EpochLayout {
     */
   def readEpochSink(spark: SparkSession, sinkRoot: String,
       emptyLike: => DataFrame): DataFrame = {
-    val merged = compactedUpTo(sinkRoot)
-      .map(u => new File(sinkRoot, s"merged=$u"))
-      .filter(_.isDirectory)
-    val paths = (merged.toSeq ++ liveEpochDirs(sinkRoot).map(_._2))
-      .map(_.getAbsolutePath)
+    val (fs, root) = resolve(spark, sinkRoot)
+    val merged = compactedUpTo(spark, sinkRoot)
+      .map(u => new Path(root, s"merged=$u"))
+      .filter(isDir(fs, _))
+    val paths = (merged.toSeq ++ liveEpochDirs(spark, sinkRoot).map(_._2))
+      .map(_.toString)
     if (paths.isEmpty) emptyLike.limit(0)
     else spark.read.option("recursiveFileLookup", "true")
       .parquet(paths: _*)
@@ -123,49 +160,59 @@ object EpochLayout {
     */
   def compactEpochSink(spark: SparkSession,
       sinkRoot: String): Option[CompactionReport] = {
-    val root = new File(sinkRoot)
-    if (!root.isDirectory) return None
-    val prior = compactedUpTo(sinkRoot)
+    val (fs, root) = resolve(spark, sinkRoot)
+    if (!isDir(fs, root)) return None
+    val prior = compactedUpTo(spark, sinkRoot)
+    val tmp = new Path(root, "_compact_tmp")
     // (0) GC leftovers of any earlier run: temp dirs, orphan merged dirs
     // (committed marker != their id), and stale absorbed epochs a crash
     // left behind after the commit point
-    deleteRecursively(new File(root, "_compact_tmp"))
-    subDirs(sinkRoot, "merged=").foreach { case (id, f) =>
-      if (!prior.contains(id)) deleteRecursively(f)
+    fs.delete(tmp, true)
+    subDirs(fs, root, "merged=").foreach { case (id, p) =>
+      if (!prior.contains(id)) fs.delete(p, true)
     }
-    subDirs(sinkRoot, "batch=").foreach { case (id, f) =>
-      if (prior.exists(id <= _)) deleteRecursively(f)
+    subDirs(fs, root, "batch=").foreach { case (id, p) =>
+      if (prior.exists(id <= _)) fs.delete(p, true)
     }
-    val live = liveEpochDirs(sinkRoot)
+    val live = liveEpochDirs(spark, sinkRoot)
     val target = (live.map(_._1) ++ prior).foldLeft(Long.MinValue)(math.max)
     val toMerge = live.sortBy(_._1)
     if (toMerge.isEmpty) return None
-    val inputs = prior.map(u => new File(root, s"merged=$u")).toSeq ++
+    val inputs = prior.map(u => new Path(root, s"merged=$u")).toSeq ++
       toMerge.map(_._2)
-    val filesBefore = inputs.map(dataFileCount).sum
+    val filesBefore = inputs.map(p => dataFileCount(spark, p.toString)).sum
     // (1) write the fold to a hidden temp dir
-    val tmp = new File(root, "_compact_tmp")
-    val merged = spark.read.option("recursiveFileLookup", "true")
-      .parquet(inputs.map(_.getAbsolutePath): _*)
-    merged.coalesce(1)
-      .write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    spark.read.option("recursiveFileLookup", "true")
+      .parquet(inputs.map(_.toString): _*)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(tmp.toString)
     // (2) rename into place — still invisible (marker not yet switched)
-    val dst = new File(root, s"merged=$target")
-    deleteRecursively(dst)
-    Files.move(tmp.toPath, dst.toPath)
+    val dst = new Path(root, s"merged=$target")
+    fs.delete(dst, true)
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"compactEpochSink: could not rename $tmp to $dst")
     // (3) COMMIT: atomically replace the marker
-    val markerTmp = Paths.get(sinkRoot, s".$MarkerName.tmp")
-    Files.write(markerTmp, target.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(markerTmp, Paths.get(sinkRoot, MarkerName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val markerTmp = new Path(root, s".$MarkerName.tmp")
+    val out = fs.create(markerTmp, true)
+    try out.write(target.toString.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    replaceAtomically(spark, fs, markerTmp, new Path(root, MarkerName))
     // (4) GC the absorbed inputs
-    inputs.foreach(deleteRecursively)
+    inputs.foreach(fs.delete(_, true))
     Some(CompactionReport(target, toMerge.size + prior.size,
-      filesBefore, dataFileCount(dst)))
+      filesBefore, dataFileCount(spark, dst.toString)))
   }
 
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+  /** Rename `src` over `dst` in one step: the raw local file system's
+    * rename is POSIX (replaces the target atomically); elsewhere the
+    * FileContext overwriting rename, atomic on HDFS.
+    */
+  private def replaceAtomically(spark: SparkSession, fs: FileSystem,
+      src: Path, dst: Path): Unit = fs match {
+    case _: RawLocalFileSystem =>
+      if (!fs.rename(src, dst))
+        throw new java.io.IOException(s"compactEpochSink: could not rename $src to $dst")
+    case _ => FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
+      .rename(src, dst, Options.Rename.OVERWRITE)
   }
 }

@@ -36,12 +36,22 @@ object StreamingOps {
   def valueCents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     floor(c * 100 + 0.5)
 
+  /** Tumbling window of the windowed event stats, batch and streaming. */
+  private val WindowDuration = "1 hour"
+
+  /** How far after a click a purchase still joins it, batch and streaming. */
+  private val JoinHorizon = "30 minutes"
+
+  /** How far past the last real event [[writeFiniteSource]]'s sentinel
+    * sits: 7 days, beyond any window or watermark here. */
+  private val SentinelAdvanceMillis = 7L * 24 * 3600 * 1000
+
   /** Tumbling-window event stats (batch form). Window start is exposed as
     * a plain timestamp column so results align with `date_trunc`.
     */
-  def windowedEventStats(events: DataFrame, windowDuration: String = "1 hour"): DataFrame =
+  def windowedEventStats(events: DataFrame): DataFrame =
     events
-      .groupBy(window(col("ts"), windowDuration), col("event_type"))
+      .groupBy(window(col("ts"), WindowDuration), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(valueCents(col("value"))).as("value_cents"))
       .select(col("window.start").as("window_start"), col("event_type"),
@@ -52,15 +62,14 @@ object StreamingOps {
     * watermark is dropped; output mode `update`/`append` chosen by caller.
     */
   def streamingWindowedEventStats(spark: SparkSession, sourcePath: String,
-      schemaFrom: DataFrame, windowDuration: String = "1 hour",
-      watermark: String = "2 hours",
+      schemaFrom: DataFrame, watermark: String = "2 hours",
       sourceOptions: Map[String, String] = Map.empty): DataFrame =
     spark.readStream
       .options(sourceOptions)
       .schema(schemaFrom.schema)
       .parquet(sourcePath)
       .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDuration), col("event_type"))
+      .groupBy(window(col("ts"), WindowDuration), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(valueCents(col("value"))).as("value_cents"))
       .select(col("window.start").as("window_start"), col("event_type"),
@@ -127,16 +136,15 @@ object StreamingOps {
     * future watermark/output-mode change could silently leak it into the
     * oracle comparison. Any flushed window at or before the max REAL
     * event time is legitimate; the sentinel's window starts ≥ its
-    * advance (default 7 days) past that. Bound rides a broadcast 1-row
-    * stats relation — no driver action, no effect on the streaming plan.
+    * advance (7 days) past that. Bound rides a broadcast 1-row stats
+    * relation — no driver action, no effect on the streaming plan.
     */
-  def dropSentinelWindows(sink: DataFrame, src: DataFrame,
-      windowCol: String = "window_start"): DataFrame = {
+  def dropSentinelWindows(sink: DataFrame, src: DataFrame): DataFrame = {
     val cutoff = src
       .filter(!(col("event_type") <=> SentinelEventType))
       .agg(max(col("ts")).as("_max_real_ts"))
     sink.crossJoin(broadcast(cutoff))
-      .filter(col(windowCol) <= col("_max_real_ts"))
+      .filter(col("window_start") <= col("_max_real_ts"))
       .drop("_max_real_ts")
   }
 
@@ -156,14 +164,14 @@ object StreamingOps {
     */
   def streamStaticEnriched(spark: SparkSession, sourcePath: String,
       schemaFrom: DataFrame, dim: DataFrame, dimKey: String, dimAttr: String,
-      windowDuration: String = "1 hour", watermark: String = "2 hours"): DataFrame =
+      watermark: String = "2 hours"): DataFrame =
     spark.readStream
       .schema(schemaFrom.schema)
       .parquet(sourcePath)
       .withWatermark("ts", watermark)
       .join(broadcast(dim.select(col(dimKey), col(dimAttr))),
         col("user_id") === col(dimKey))
-      .groupBy(window(col("ts"), windowDuration), col(dimAttr))
+      .groupBy(window(col("ts"), WindowDuration), col(dimAttr))
       .agg(count(lit(1)).as("n_events"),
         sum(valueCents(col("value"))).as("value_cents"))
       .select(col("window.start").as("window_start"), col(dimAttr),
@@ -396,7 +404,7 @@ object StreamingOps {
         // folded by EpochLayout.compactEpochSink is absorbed by SKIP —
         // its rows live inside the merged dir
         if (idempotentBatchPaths) {
-          if (!EpochLayout.compactedUpTo(s"$outRoot/data").exists(batchId <= _))
+          if (!EpochLayout.compactedUpTo(spark, s"$outRoot/data").exists(batchId <= _))
             survivors.write.mode("overwrite")
               .parquet(s"$outRoot/data/batch=$batchId")
         } else survivors.write.mode("append").parquet(s"$outRoot/data")
@@ -554,14 +562,14 @@ object StreamingOps {
           // would ignore a rewritten batch= dir at that id anyway — two
           // independent layers of replay safety
           Future {
-            if (!EpochLayout.compactedUpTo(s"$outRoot/valid")
+            if (!EpochLayout.compactedUpTo(batch.sparkSession, s"$outRoot/valid")
                 .exists(batchId <= _))
               graft.ops.Validate.valid(batch, rules)
                 .write.mode("overwrite")
                 .parquet(s"$outRoot/valid/batch=$batchId")
           },
           Future {
-            if (!EpochLayout.compactedUpTo(s"$outRoot/quarantine")
+            if (!EpochLayout.compactedUpTo(batch.sparkSession, s"$outRoot/quarantine")
                 .exists(batchId <= _))
               graft.ops.Validate.violationRows(batch, idCol, rules)
                 .write.mode("overwrite")
@@ -608,15 +616,14 @@ object StreamingOps {
     * unbounded and ordered by arrival; this staging exists to execute the
     * real streaming operators on driver-checkable finite data.
     */
-  def writeFiniteSource(events: DataFrame, srcRoot: String,
-      sentinelAdvanceMillis: Long = 7L * 24 * 3600 * 1000): Unit = {
+  def writeFiniteSource(events: DataFrame, srcRoot: String): Unit = {
     deleteRecursively(new java.io.File(srcRoot))
     val slim = events.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"), col("value"))
     val maxTs = slim.agg(max(col("ts"))).head().getTimestamp(0)
     val sentinel = slim.sparkSession.range(1).select(
       lit(-1L).as("event_id"),
-      timestamp_millis(lit(maxTs.getTime + sentinelAdvanceMillis)).as("ts"),
+      timestamp_millis(lit(maxTs.getTime + SentinelAdvanceMillis)).as("ts"),
       lit(-1L).as("user_id"),
       lit(SentinelEventType).as("event_type"),
       lit(0.0).as("value"))
@@ -901,15 +908,14 @@ object StreamingOps {
   }
 
   /** Watermarked stream-stream inner join: clicks joined to the purchases
-    * that follow within `horizon`, per user. Both sides carry watermarks
+    * that follow within 30 minutes, per user. Both sides carry watermarks
     * and the join condition bounds the time range in BOTH directions, so
     * the engine can evict buffered rows once the watermark passes —
     * bounded state, the requirement for an unbounded 100 TB/day stream
     * (an unconstrained stream-stream join would buffer forever).
     */
   def streamStreamJoin(spark: SparkSession, sourcePath: String,
-      schemaFrom: DataFrame, horizon: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame = {
+      schemaFrom: DataFrame, watermark: String = "2 hours"): DataFrame = {
     def side(eventType: String, prefix: String) = spark.readStream
       .schema(schemaFrom.schema)
       .parquet(sourcePath)
@@ -922,13 +928,13 @@ object StreamingOps {
     side("click", "click").join(side("purchase", "purch"),
       expr(s"""click_user = purch_user AND
               |purch_ts >= click_ts AND
-              |purch_ts <= click_ts + INTERVAL $horizon""".stripMargin))
+              |purch_ts <= click_ts + INTERVAL $JoinHorizon""".stripMargin))
       .select(col("click_id"), col("purch_id"), col("click_user").as("user_id"),
         col("click_ts"), col("purch_ts"), col("purch_value"))
   }
 
   /** Batch twin of [[streamStreamJoin]] for equivalence checks. */
-  def clickPurchaseJoinBatch(events: DataFrame, horizon: String = "30 minutes"): DataFrame = {
+  def clickPurchaseJoinBatch(events: DataFrame): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
@@ -938,7 +944,7 @@ object StreamingOps {
     clicks.join(purchases,
       expr(s"""user_id = purch_user AND
               |purch_ts >= click_ts AND
-              |purch_ts <= click_ts + INTERVAL $horizon""".stripMargin))
+              |purch_ts <= click_ts + INTERVAL $JoinHorizon""".stripMargin))
       .select(col("click_id"), col("purch_id"), col("user_id"),
         col("click_ts"), col("purch_ts"), col("purch_value"))
   }

@@ -13,21 +13,29 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Keep documents that are (a) identified as `lang`, (b) at least
-    * `minTokens` tokens, (c) under `maxRepetition` repeated-3-gram ratio,
+  // the gates of [[basicCuration]] and [[ruleFilter]], shared with their
+  // DuckDB twins
+  private val Lang = "en"
+  private val MinTokens = 30
+  private val MaxRepetition = 0.2
+  private val MinWords = 40
+  private val MaxWords = 100000
+  private val MinAvgWordLen = 3.0
+  private val MaxAvgWordLen = 10.0
+
+  /** Keep documents that are (a) identified as English, (b) at least
+    * 30 tokens, (c) under a 0.2 repeated-3-gram ratio,
     * then (d) the minimum-id survivor per exact text group. Output keeps
     * the quality signals alongside the row for downstream weighting.
     */
-  def basicCuration(df: DataFrame, idCol: String, textCol: String,
-      lang: String = "en", minTokens: Int = 30,
-      maxRepetition: Double = 0.2): DataFrame = {
+  def basicCuration(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val gated = df
       .withColumn("lang_id", TextFunctions.langId(col(textCol)))
       .withColumn("n_tokens", TextFunctions.tokenCount(col(textCol)).cast("long"))
       .withColumn("repetition", Dedup.repeatedNgramRatio(col(textCol), 3))
-      .filter(col("lang_id") === lang &&
-        col("n_tokens") >= minTokens &&
-        col("repetition") < maxRepetition)
+      .filter(col("lang_id") === Lang &&
+        col("n_tokens") >= MinTokens &&
+        col("repetition") < MaxRepetition)
     Dedup.exactDedup(gated, idCol, textCol)
   }
 
@@ -37,9 +45,7 @@ object Curation {
     * survivor selection mirrors `exactDedup`'s window. Keep
     * formula-identical to the Column versions.
     */
-  def basicCurationSql(table: String, idCol: String, textCol: String,
-      lang: String = "en", minTokens: Int = 30,
-      maxRepetition: Double = 0.2): String =
+  def basicCurationSql(table: String, idCol: String, textCol: String): String =
     s"""WITH toks AS (
        |  SELECT $idCol, $textCol, string_split(trim($textCol), ' ') AS t FROM $table),
        |ng AS (SELECT DISTINCT $idCol, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS ngram
@@ -54,8 +60,8 @@ object Curation {
        |    END AS repetition
        |  FROM toks tk LEFT JOIN cnt c ON tk.$idCol = c.$idCol),
        |gated AS (
-       |  SELECT * FROM sig WHERE lang_id = '$lang' AND n_tokens >= $minTokens
-       |    AND repetition < $maxRepetition)
+       |  SELECT * FROM sig WHERE lang_id = '$Lang' AND n_tokens >= $MinTokens
+       |    AND repetition < $MaxRepetition)
        |SELECT $idCol, lang_id, n_tokens, repetition FROM gated
        |QUALIFY row_number() OVER (PARTITION BY md5($textCol) ORDER BY $idCol) = 1""".stripMargin
 
@@ -65,8 +71,8 @@ object Curation {
     *   - terminal punctuation: the document must end in `.` `!` or `?`
     *   - no curly braces (code fragments)
     *   - no boilerplate phrases ("lorem ipsum", "click here")
-    *   - word count within [minWords, maxWords]
-    *   - mean word length within [minAvgWordLen, maxAvgWordLen]
+    *   - word count within [40, 100000]
+    *   - mean word length within [3.0, 10.0]
     *
     * Every signal is a pure scan expression (codegen, no shuffle, no
     * UDF) — at 100 TB this runs at scan speed and the keep flag pipelines
@@ -75,9 +81,7 @@ object Curation {
     * (identical op order — the repo determinism convention), so the
     * DuckDB twin replays every decision bit-for-bit.
     */
-  def ruleFilter(df: DataFrame, idCol: String, textCol: String,
-      minWords: Int = 40, maxWords: Int = 100000,
-      minAvgWordLen: Double = 3.0, maxAvgWordLen: Double = 10.0): DataFrame = {
+  def ruleFilter(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col(textCol)
     val sig = df.select(col(idCol),
       TextFunctions.tokenCount(t).cast("long").as("n_words"),
@@ -88,9 +92,9 @@ object Curation {
         .as("has_boilerplate"))
     sig.withColumn("keep",
       col("ends_punct") && !col("has_brace") && !col("has_boilerplate") &&
-        col("n_words") >= minWords && col("n_words") <= maxWords &&
-        col("avg_word_len") >= minAvgWordLen &&
-        col("avg_word_len") <= maxAvgWordLen)
+        col("n_words") >= MinWords && col("n_words") <= MaxWords &&
+        col("avg_word_len") >= MinAvgWordLen &&
+        col("avg_word_len") <= MaxAvgWordLen)
   }
 
   /** DuckDB twin of [[ruleFilter]] — formula-identical signals over a
@@ -100,8 +104,6 @@ object Curation {
     * WITH clauses is a parse error).
     */
   def ruleFilterSql(table: String, idCol: String, textCol: String,
-      minWords: Int = 40, maxWords: Int = 100000,
-      minAvgWordLen: Double = 3.0, maxAvgWordLen: Double = 10.0,
       ctes: Seq[String] = Nil): String =
     s"""WITH ${ctes.map(_ + ",\n").mkString}sig AS (
        |  SELECT $idCol,
@@ -113,7 +115,7 @@ object Curation {
        |  FROM $table)
        |SELECT *,
        |  (ends_punct AND NOT has_brace AND NOT has_boilerplate
-       |    AND n_words >= $minWords AND n_words <= $maxWords
-       |    AND avg_word_len >= $minAvgWordLen AND avg_word_len <= $maxAvgWordLen) AS keep
+       |    AND n_words >= $MinWords AND n_words <= $MaxWords
+       |    AND avg_word_len >= $MinAvgWordLen AND avg_word_len <= $MaxAvgWordLen) AS keep
        |FROM sig""".stripMargin
 }

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * spill, 13.5× wall for 10× docs from spill onset alone. This
   * expression encodes in the scan: no explode, no join, no exchange —
   * the output is bit-identical to [[Vocabulary.encode]] (order preserved
-  * by construction; OOV and null tokens → `oovId`, matching the left
+  * by construction; OOV and null tokens → [[Vocabulary.OovId]], matching the left
   * join's unmatched-coalesce semantics).
   *
   * The vocabulary ships INSIDE the expression (≤ `size` entries — the
@@ -30,8 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * executor builds its UTF8String-keyed hash table once per deserialized
   * instance, so per-token lookups are zero-copy.
   */
-case class VocabEncodeExpr(child: Expression, vocab: Map[String, Long],
-    oovId: Long) extends UnaryExpression {
+case class VocabEncodeExpr(child: Expression, vocab: Map[String, Long])
+    extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_vocab_encode"
@@ -50,7 +50,7 @@ case class VocabEncodeExpr(child: Expression, vocab: Map[String, Long],
     while (i < n) {
       val t = arr.getUTF8String(i)
       val id = if (t == null) null else table.get(t)
-      out(i) = if (id == null) oovId else id.longValue()
+      out(i) = if (id == null) Vocabulary.OovId else id.longValue()
       i += 1
     }
     new GenericArrayData(out)
@@ -70,9 +70,9 @@ case class VocabEncodeExpr(child: Expression, vocab: Map[String, Long],
 }
 
 object VocabEncodeExpr {
-  def encodeCol(tokens: Column, vocab: Map[String, Long], oovId: Long): Column =
+  def encodeCol(tokens: Column, vocab: Map[String, Long]): Column =
     GraftColumnBridge.column(
-      VocabEncodeExpr(GraftColumnBridge.expression(tokens), vocab, oovId))
+      VocabEncodeExpr(GraftColumnBridge.expression(tokens), vocab))
 }
 
 /** Token-array → `[n_matched, Σ weight(token)]` under an EMBEDDED

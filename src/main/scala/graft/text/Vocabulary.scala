@@ -49,12 +49,15 @@ object Vocabulary {
        |  CAST(row_number() OVER (ORDER BY freq DESC, token) - 1 AS BIGINT) AS token_id
        |FROM c ORDER BY freq DESC, token LIMIT $size""".stripMargin
 
+  /** The id every encode form gives an out-of-vocabulary token. */
+  private[text] val OovId = -1L
+
   /** Encode each document as its token-id sequence under `vocab`
-    * (out-of-vocabulary → `oovId`). The vocab side broadcasts; token
+    * (out-of-vocabulary → [[OovId]]). The vocab side broadcasts; token
     * order is preserved via posexplode + array_sort on (pos, id).
     */
-  def encode(df: DataFrame, idCol: String, textCol: String, vocab: DataFrame,
-      oovId: Long = -1L): DataFrame =
+  def encode(df: DataFrame, idCol: String, textCol: String,
+      vocab: DataFrame): DataFrame =
     // NO spreadIfNarrow here (r16 verdict item 1): the driver's in-suite
     // map showed the added shuffle costs more than the light per-row
     // compute it parallelizes (x_vocab_encode 0.47 → 0.86 s) — this path
@@ -64,7 +67,7 @@ object Vocabulary {
       .join(broadcast(vocab.select(col("token"), col("token_id"))),
         Seq("token"), "left")
       .select(col(idCol), col("pos"),
-        coalesce(col("token_id"), lit(oovId)).as("tid"))
+        coalesce(col("token_id"), lit(OovId)).as("tid"))
       .groupBy(col(idCol))
       .agg(array_sort(collect_list(struct(col("pos"), col("tid")))).as("_pt"))
       .select(col(idCol), expr("transform(_pt, x -> x.tid)").as("token_ids"))
@@ -76,8 +79,8 @@ object Vocabulary {
     * Library callers wanting the typed sequence use [[encode]].
     */
   def encodeJoined(df: DataFrame, idCol: String, textCol: String,
-      vocab: DataFrame, oovId: Long = -1L): DataFrame =
-    encode(df, idCol, textCol, vocab, oovId)
+      vocab: DataFrame): DataFrame =
+    encode(df, idCol, textCol, vocab)
       .select(col(idCol),
         array_join(transform(col("token_ids"), _.cast("string")), " ")
           .as("token_ids"))
@@ -94,7 +97,7 @@ object Vocabulary {
     * per-row text signal.
     */
   def encodeInRow(df: DataFrame, idCol: String, textCol: String,
-      vocab: DataFrame, oovId: Long = -1L): DataFrame = {
+      vocab: DataFrame): DataFrame = {
     // vocab-bounded driver collect (same staging bound as the DSIR
     // weights map); deterministic content, so every consumer agrees
     val entries = vocab.select(col("token"), col("token_id")).collect()
@@ -106,13 +109,13 @@ object Vocabulary {
     df.filter(col(textCol).isNotNull)
       .select(col(idCol),
         VocabEncodeExpr.encodeCol(TextFunctions.tokens(col(textCol)),
-          entries, oovId).as("token_ids"))
+          entries).as("token_ids"))
   }
 
   /** [[encodeInRow]] in the gated space-joined form of [[encodeJoined]]. */
   def encodeInRowJoined(df: DataFrame, idCol: String, textCol: String,
-      vocab: DataFrame, oovId: Long = -1L): DataFrame =
-    encodeInRow(df, idCol, textCol, vocab, oovId)
+      vocab: DataFrame): DataFrame =
+    encodeInRow(df, idCol, textCol, vocab)
       .select(col(idCol),
         array_join(transform(col("token_ids"), _.cast("string")), " ")
           .as("token_ids"))
@@ -212,47 +215,6 @@ object Vocabulary {
       .orderBy(col("distinct_terms").desc, col("matches").desc, col(idCol))
       .limit(k)
 
-  /** BM25-ranked keyword search — the float upgrade of [[searchByTokens]]
-    * on the SAME plan shape: IN-filtered token scan → per-(doc, term) tf
-    * agg → broadcast term/corpus statistics → per-doc score sum → ordered
-    * limit. `score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))`
-    * with `idf(t) = ln(1 + (N−df+0.5)/(df+0.5))`.
-    *
-    * Spec-checked against an independent driver-side computation, but NOT
-    * gated: `ln` is not guaranteed bit-identical across engines (JVM
-    * `Math.log` vs DuckDB's libm are each ≤1 ulp, not equal), so a
-    * hash-matching oracle would be a coin flip — [[bm25SearchFixed]] is
-    * the gated form (same ranking, exact integer fixed-point arithmetic).
-    *
-    * Scale shape: corpus stats (N, avgdl) are a 1-row broadcast; per-term
-    * df is a ≤|query|-row broadcast; the only wide ops are the tf agg and
-    * the final per-doc sum, both map-side combined on doc id.
-    */
-  def bm25Search(df: DataFrame, idCol: String, textCol: String,
-      query: Seq[String], k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val docLens = df.select(col(idCol),
-      TextFunctions.tokenCount(col(textCol)).cast("double").as("_dl"))
-    val stats = docLens.agg(count(lit(1)).cast("double").as("_n"),
-      (sum(col("_dl")) / count(lit(1))).as("_avgdl"))
-    val tf = df.select(col(idCol),
-      explode(TextFunctions.tokens(col(textCol))).as("_term"))
-      .filter(col("_term").isin(query: _*))
-      .groupBy(col(idCol), col("_term"))
-      .agg(count(lit(1)).cast("double").as("_tf"))
-    val dft = tf.groupBy(col("_term")).agg(count(lit(1)).cast("double").as("_df"))
-    val idf = log(lit(1.0) + (col("_n") - col("_df") + lit(0.5)) /
-      (col("_df") + lit(0.5)))
-    val termScore = idf * (col("_tf") * lit(k1 + 1.0)) /
-      (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl")))
-    tf.join(docLens, Seq(idCol))
-      .join(broadcast(dft), Seq("_term"))
-      .join(broadcast(stats))
-      .groupBy(col(idCol))
-      .agg(sum(termScore).as("bm25"), count(lit(1)).as("distinct_terms"))
-      .orderBy(col("bm25").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Fixed-point log2 parameters shared by [[log2Fixed]], its Column twin
     * inside [[bm25SearchFixed]], and the DuckDB replay in
     * [[bm25SearchFixedSql]]: `MantBits`-bit mantissa, `FracBits` result
@@ -333,10 +295,13 @@ object Vocabulary {
       .drop("_e", "_m", "_msq", "_frac")
   }
 
-  /** BM25 ranked search as EXACT INTEGER arithmetic — the gated form of
-    * [[bm25Search]] (which stays float, for library callers): same plan
-    * shape, but every float source is replaced by a deterministic integer
-    * reformulation, so a DuckDB oracle hash-matches bit-for-bit.
+  /** BM25 ranked search as EXACT INTEGER arithmetic — the integer-scored
+    * upgrade of [[searchByTokens]]. `ln` is not bit-identical across
+    * engines (JVM `Math.log` vs DuckDB's libm are each ≤1 ulp, not equal),
+    * so a float BM25 could not hash-match an oracle; here every float
+    * source is replaced by a deterministic integer reformulation, so a
+    * DuckDB oracle hash-matches bit-for-bit. TextFunctionsSpec keeps the
+    * float formula as the ranking reference.
     *
     *  - `idf`: `ln(1 + (N−df+0.5)/(df+0.5)) = ln((2N+2)/(2df+1))` — an
     *    integer ratio. `ln` becomes [[log2Fixed]] (log2 = ln/ln 2 is a
@@ -350,7 +315,7 @@ object Vocabulary {
     *    floor per term, positive operands so DIV = floor in both engines);
     *    per doc: integer sum, ranked (score desc, id asc).
     *
-    * Scale shape is [[bm25Search]]'s: corpus stats are a 1-row broadcast,
+    * Scale shape: corpus stats are a 1-row broadcast,
     * per-term idf a ≤|query|-row broadcast; the wide ops are the tf agg
     * and the per-doc sum, both map-side combined. Magnitude bound:
     * `idf_fp·22·tf·SDL < 2^63` holds while `SDL·tf < 2^33` — a petabyte
@@ -1983,7 +1948,7 @@ object Vocabulary {
     * (token, pos) rows; the id sequence is space-joined so the result is
     * all-scalar (the driver's hash compare requirement).
     */
-  def encodeSql(size: Int, minCount: Long = 1L, oovId: Long = -1L): String =
+  def encodeSql(size: Int, minCount: Long = 1L): String =
     s"""WITH tokl AS (
        |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
        |tok AS (
@@ -1998,7 +1963,7 @@ object Vocabulary {
        |    CAST(row_number() OVER (ORDER BY freq DESC, token) - 1 AS BIGINT) AS token_id
        |  FROM tcnt ORDER BY freq DESC, token LIMIT $size)
        |SELECT t.doc_id,
-       |  string_agg(CAST(coalesce(v.token_id, CAST($oovId AS BIGINT)) AS VARCHAR),
+       |  string_agg(CAST(coalesce(v.token_id, CAST($OovId AS BIGINT)) AS VARCHAR),
        |    ' ' ORDER BY t.pos) AS token_ids
        |FROM tok t LEFT JOIN v ON t.token = v.token
        |GROUP BY t.doc_id""".stripMargin

@@ -1,6 +1,9 @@
 package graft
 
 import graft.dedup.Dedup
+import graft.text.TextFunctions
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupSpec extends AnyFunSuite with SparkTestBase {
@@ -60,13 +63,59 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(jac.isEmpty)
   }
 
+  /** Distinct selected fingerprints per doc, RELATIONAL form (gram
+    * occurrence explode + per-doc window min) — the formulation the
+    * DuckDB oracle replays, kept as the reference for the expression. */
+  private def winnowFingerprintsRelational(df: DataFrame, idCol: String,
+      textCol: String, k: Int, w: Int): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val occ = df
+      .select(col(idCol), TextFunctions.tokens(col(textCol)).as("_graft_toks"))
+      .withColumn("_graft_n", size(col("_graft_toks")).cast("long"))
+      .filter(col("_graft_n") >= k + w - 1)
+      .select(col(idCol), col("_graft_n"), posexplode(transform(
+        sequence(lit(0), (col("_graft_n") - k).cast("int")),
+        i => md5(array_join(slice(col("_graft_toks"), i + 1, lit(k)), " ")
+          .cast("binary")))))
+      .withColumnRenamed("pos", "_graft_pos")
+      .withColumnRenamed("col", "_graft_h")
+    val win = Window.partitionBy(col(idCol)).orderBy(col("_graft_pos"))
+      .rowsBetween(Window.currentRow, w - 1)
+    occ
+      .withColumn("_graft_wk", concat(col("_graft_h"),
+        lpad((lit(99999999L) - col("_graft_pos")).cast("string"), 8, "0")))
+      .withColumn("_graft_sel", min(col("_graft_wk")).over(win))
+      // full windows only: the tail frames see < w grams
+      .filter(col("_graft_pos") <= col("_graft_n") - k - (w - 1))
+      .select(col(idCol), substring(col("_graft_sel"), 1, 32).as("_graft_h"))
+      .distinct()
+  }
+
+  /** 64-bit SimHash, RELATIONAL form: explode distinct tokens, one groupBy
+    * with 64 conditional +/-1 sums, bit pack — the reference for the
+    * scan-speed expression. */
+  private def simhash64Relational(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val tok = df.select(col(idCol).as("_id"),
+      explode(array_distinct(TextFunctions.tokens(col(textCol)))).as("token"))
+      .withColumn("_h", xxhash64(col("token")))
+    val bitSums = (0 until 64).map(b =>
+      sum(when(shiftright(col("_h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"_b$b"))
+    val fingerprint = (0 until 64).map(b =>
+      when(col(s"_b$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L)))
+      .reduce((x, y) => x.bitwiseOR(y))
+    tok.groupBy(col("_id"))
+      .agg(bitSums.head, bitSums.tail: _*)
+      .select(col("_id"), fingerprint.as("simhash"))
+  }
+
   test("winnowing: scan-speed expression equals the relational window form") {
     val docs = DerivedModel.table(spark, "/root/testdata/sf0.001", "documents")
     for ((k, w) <- Seq((4, 4), (3, 5), (2, 1))) {
-      val rel = Dedup.winnowFingerprints(docs, "doc_id", "text", k, w)
+      val rel = winnowFingerprintsRelational(docs, "doc_id", "text", k, w)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      Persisted.unpersistAll()
-      val fast = Dedup.winnowFingerprintsFast(docs, "doc_id", "text", k, w)
+      val fast = Dedup.winnowFingerprints(docs, "doc_id", "text", k, w)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(fast == rel, s"k=$k w=$w: ${fast.size} vs ${rel.size} fingerprints")
     }
@@ -208,28 +257,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     } finally {
       sc.removeSparkListener(listener)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staged))
-    }
-  }
-
-  test("posting-list pair generation equals the self-join exactly") {
-    // both pair-generation forms must emit the identical (id_a, id_b,
-    // jaccard) rows — per-doc shingles are distinct by construction, so
-    // the in-list expansion counts the same exact intersections. Pinned
-    // with AND without the maxDf guard (the guard reshapes the posting
-    // lists the expansion runs over).
-    val docs = DerivedModel.table(spark, "/root/testdata/sf0.001", "documents")
-    for (guard <- Seq(None, Some(0.5))) {
-      val selfJoin = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-        tau = 0.8, maxDfFraction = guard)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      Persisted.unpersistAll()
-      val posting = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-        tau = 0.8, maxDfFraction = guard, postingListPairs = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      Persisted.unpersistAll()
-      assert(posting == selfJoin,
-        s"guard=$guard: posting-list ${posting.size} pairs vs self-join ${selfJoin.size}")
-      assert(selfJoin.nonEmpty, "test data should contain planted near-dups")
     }
   }
 
@@ -488,8 +515,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val docs = DerivedModel.table(spark, "/root/testdata/sf0.001", "documents")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val relational = canon(Dedup.simhash64(docs, "doc_id", "text"))
-    val expr = canon(Dedup.simhash64Fast(docs, "doc_id", "text"))
+    val relational = canon(simhash64Relational(docs, "doc_id", "text"))
+    val expr = canon(Dedup.simhash64(docs, "doc_id", "text"))
     assert(expr == relational)
     assert(expr.nonEmpty)
   }
@@ -560,7 +587,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("second-key bucket split finds exactly the flat banding's pairs") {
     val docs = DerivedModel.table(spark, "/root/testdata/sf0.001", "documents")
-    val hashes = Dedup.simhash64Fast(docs, "doc_id", "text")
+    val hashes = Dedup.simhash64(docs, "doc_id", "text")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val flat = canon(Dedup.simhashPairs(hashes, maxHamming = 3))

@@ -90,7 +90,6 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
 
   test("snapshotDiff: statuses exact, identical rows drop, boundary shifts detected") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val older = Seq(
       (1L, "same", "x"), (2L, "will change", "x"), (3L, "removed", "x"),
       (4L, "ab", "c")                          // boundary case

@@ -96,7 +96,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     val viaPayload = graft.multimodal.Multimodal.contentHash64(
       graft.multimodal.Multimodal.toMediaRecords(docs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaText = graft.dedup.Dedup.simhash64Fast(docs, "doc_id", "text")
+    val viaText = graft.dedup.Dedup.simhash64(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaPayload == viaText,
       "binary payload round-trips to the same content hash")

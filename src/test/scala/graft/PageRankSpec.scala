@@ -1,7 +1,6 @@
 package graft
 
 import graft.graph.PageRank
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class PageRankSpec extends AnyFunSuite with SparkTestBase {

@@ -579,9 +579,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     "text/Chunking.scala" ->
       (1, "per-(doc, chunk) token reassembly, bounded by chunkSize"),
     "dedup/Dedup.scala" ->
-      (4, "per-doc CDC chunk list (row-scaled); the OPT-IN " +
-        "postingListPairs arm (documented uniform-corpora-only, measured " +
-        "OOM cliff in TUNING); per-doc span list (row-scaled); the prefix " +
+      (3, "per-doc CDC chunk list (row-scaled); per-doc span list " +
+        "(row-scaled); the prefix " +
         "ssjoins' per-doc canonical token array (one document's shingles, " +
         "row-scaled)"),
     "sim/Similarity.scala" ->

@@ -47,13 +47,4 @@ class ProfileSpec extends AnyFunSuite with SparkTestBase {
       .as[(String, Long)].collect().toMap
     assert(audit === Map("rows" -> 4L, "small" -> 3L, "sum_v" -> 80L))
   }
-
-  test("approx-distinct profile avoids the Expand price") {
-    val exact = Profile.profile(df, Seq("id", "cat"))
-      .queryExecution.executedPlan.toString
-    val approx = Profile.profile(df, Seq("id", "cat"), approxDistinct = true)
-      .queryExecution.executedPlan.toString
-    assert(exact.contains("Expand"))
-    assert(!approx.contains("Expand"))
-  }
 }

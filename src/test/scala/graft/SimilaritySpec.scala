@@ -68,78 +68,33 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(partial.size == 10)
   }
 
-  test("IVF staged assignment: probe equals inline; incompatible artifacts rejected") {
-    val emb = DerivedModel.table(spark, dir, "embeddings")
-    val inline = Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 10,
-      numClusters = 8, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val staged = Similarity.ivfAssign(emb, "vec_id", "embedding", 8)
-    val viaHook = Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 10,
-      numClusters = 8, nProbe = 2, precomputedAssignments = Some(staged))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(viaHook == inline)
-    // the numClusters stamp survives a parquet round-trip (the
-    // staged-index path) and still probes identically
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_spec_ivf_" +
-      s"${ProcessHandle.current().pid()}"
+  test("IVF top-k: building the DataFrame runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val emb = (0 until 40).map(i => (i.toLong,
+      Array.tabulate(4)(d => ((i * 7 + d * 3) % 11).toFloat - 5.0f)))
+      .toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    // job starts in bus order; a marker job in its own group proves every
+    // earlier start has been delivered
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        started.put(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
     try {
-      staged.write.mode("overwrite").parquet(out)
-      val back = spark.read.parquet(out)
-      val viaParquet = Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 10,
-        numClusters = 8, nProbe = 2, precomputedAssignments = Some(back))
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(viaParquet == inline)
-      // wrong cluster count and wrong/unstamped schema must be rejected
-      // AT CONSTRUCTION, not probe the wrong inverted lists
-      intercept[IllegalArgumentException] {
-        Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 10,
-          numClusters = 16, nProbe = 2, precomputedAssignments = Some(back))
-      }
-      intercept[IllegalArgumentException] {
-        Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 10,
-          numClusters = 8, nProbe = 2,
-          precomputedAssignments = Some(emb.select(
-            org.apache.spark.sql.functions.col("vec_id"),
-            org.apache.spark.sql.functions.col("embedding"))))
-      }
-      intercept[IllegalArgumentException] {
-        Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 10,
-          numClusters = 8, nProbe = 2,
-          precomputedAssignments = Some(back.select(
-            org.apache.spark.sql.functions.col("vec_id"),
-            org.apache.spark.sql.functions.col("embedding"),
-            org.apache.spark.sql.functions.col("cluster")
-              .as("cluster", org.apache.spark.sql.types.Metadata.empty))))
-      }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out)): Unit
-    }
-  }
-
-  test("IVF staged assignment: a STALE index (live centroid set drifted) " +
-    "is rejected; non-centroid drift passes per the documented contract") {
-    import org.apache.spark.sql.functions._
-    val emb = DerivedModel.table(spark, dir, "embeddings")
-    val staged = Similarity.ivfAssign(emb, "vec_id", "embedding", 8)
-    // perturb vec 0 — a centroid seed (lowest 8 ids) — so the live
-    // corpus's centroid set no longer matches the build-time fingerprint
-    val centroidDrift = emb.select(col("vec_id"),
-      when(col("vec_id") === 0L,
-        expr("transform(embedding, x -> x + CAST(1.0 AS FLOAT))"))
-        .otherwise(col("embedding")).as("embedding"))
-    intercept[IllegalArgumentException] {
-      Similarity.ivfTopK(centroidDrift, "vec_id", "embedding", 1L, 10,
-        numClusters = 8, nProbe = 2, precomputedAssignments = Some(staged))
-    }
-    // drift OUTSIDE the centroid seed set is invisible to the stamp by
-    // design (the scaladoc's freshness contract) — the probe must run
-    val tailDrift = emb.select(col("vec_id"),
-      when(col("vec_id") === 500L,
-        expr("transform(embedding, x -> x + CAST(1.0 AS FLOAT))"))
-        .otherwise(col("embedding")).as("embedding"))
-    assert(Similarity.ivfTopK(tailDrift, "vec_id", "embedding", 0L, 10,
-      numClusters = 8, nProbe = 2,
-      precomputedAssignments = Some(staged)).count() == 10)
+      val out = Similarity.ivfTopK(emb, "vec_id", "embedding", 0L, 5,
+        numClusters = 4, nProbe = 2)
+      sc.setJobGroup("graft-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val jobs = Iterator.continually(
+          started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(g => g != null && g != "graft-marker").size
+      assert(jobs == 0, s"building ivfTopK started $jobs job(s)")
+      assert(out.collect().length == 5)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("random projection: basis vectors read off the sign matrix, dot " +

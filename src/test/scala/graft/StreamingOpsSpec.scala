@@ -419,7 +419,6 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     // the flat append (fine for the gates' immutable AvailableNow
     // staging) must visibly double — both claims pinned here
     import graft.ops.Validate
-    import org.apache.spark.sql.functions._
     val root = s"$base/validate_retry"
     locally {
       import scala.jdk.CollectionConverters._
@@ -597,8 +596,8 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     val wantQRows = qPre.collect().map(_.toSeq).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap
     val validRoot = s"$root/sink/valid"
-    val filesBefore = EpochLayout.dataFileCount(new java.io.File(validRoot))
-    assert(EpochLayout.liveEpochDirs(validRoot).size == 4,
+    val filesBefore = EpochLayout.dataFileCount(spark, validRoot)
+    assert(EpochLayout.liveEpochDirs(spark, validRoot).size == 4,
       "4 staged files under maxFilesPerTrigger=1 must give 4 epochs")
     // compact both sinks; the read-back relation must be IDENTICAL
     // (multiset equality) and the file count strictly smaller
@@ -618,8 +617,8 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       "compaction must preserve the valid relation exactly")
     assert(multiset(readBack("quarantine")) == wantQRows,
       "compaction must preserve the quarantine relation exactly")
-    assert(EpochLayout.compactedUpTo(validRoot).contains(3L))
-    assert(EpochLayout.liveEpochDirs(validRoot).isEmpty,
+    assert(EpochLayout.compactedUpTo(spark, validRoot).contains(3L))
+    assert(EpochLayout.liveEpochDirs(spark, validRoot).isEmpty,
       "folded epoch dirs must be GC'd")
     // a REPLAY of an absorbed epoch is skipped — sinks unchanged
     graft.streaming.StreamingOps.writeValidatedBatch(
@@ -645,6 +644,33 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     // idempotence: nothing live -> no-op
     assert(EpochLayout.compactEpochSink(spark, validRoot).isEmpty)
     corrupt.unpersist(): Unit
+  }
+
+  test("epoch compaction and read-back work on a file: URI sink root") {
+    import graft.streaming.EpochLayout
+    import spark.implicits._
+    // the root as a URI, the way a cluster deployment names its sink
+    // (hdfs://, s3a://): every step must resolve it through Hadoop
+    val dirPath = s"$base/epoch_uri"
+    val uri = s"file:$dirPath"
+    Seq(0L, 1L, 2L).foreach { e =>
+      (0L until 5L).map(i => (e * 10 + i, s"row$i")).toDF("id", "v")
+        .write.mode("overwrite").parquet(s"$uri/batch=$e")
+    }
+    def rows() = EpochLayout.readEpochSink(spark, uri,
+        Seq.empty[(Long, String)].toDF("id", "v"))
+      .as[(Long, String)].collect().toSet
+    val before = rows()
+    assert(before.size == 15, s"3 epochs x 5 rows must read back: $before")
+    val rep = EpochLayout.compactEpochSink(spark, uri)
+    assert(rep.exists(r => r.upTo == 2L && r.mergedEpochs == 3),
+      s"a URI root must compact, not read as 'not a directory': $rep")
+    assert(EpochLayout.compactedUpTo(spark, uri).contains(2L))
+    assert(EpochLayout.liveEpochDirs(spark, uri).isEmpty)
+    assert(EpochLayout.dataFileCount(spark, uri) == 1L)
+    assert(rows() == before, "compaction must preserve the relation")
+    assert(new java.io.File(dirPath, "merged=2").isDirectory &&
+      !new java.io.File(dirPath, "batch=0").exists())
   }
 
   test("zero-epoch sources read back as empty, correctly-shaped " +

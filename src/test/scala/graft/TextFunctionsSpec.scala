@@ -280,7 +280,6 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
   test("bpeSegmentStatsInRow == bpeSegmentStats (embedded word-length " +
       "table vs relational), incl. row presence on null text and on the " +
       "documents corpus") {
-    import spark.implicits._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // same tiny corpus as the relational test + a NULL-text doc: both
@@ -571,6 +570,39 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
     graft.Persisted.unpersistAll()
   }
 
+  /** Float BM25 over the same plan shape as the gated fixed-point form:
+    * IN-filtered token scan → per-(doc, term) tf agg → broadcast term and
+    * corpus statistics → per-doc score sum → ordered limit, with
+    * `score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))`,
+    * `idf(t) = ln(1 + (N−df+0.5)/(df+0.5))`, k1 = 1.2, b = 0.75 — the
+    * ranking reference for `Vocabulary.bm25SearchFixed`.
+    */
+  private def bm25Search(df: org.apache.spark.sql.DataFrame, idCol: String,
+      textCol: String, query: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
+    val (k1, b) = (1.2, 0.75)
+    val docLens = df.select(col(idCol),
+      TextFunctions.tokenCount(col(textCol)).cast("double").as("_dl"))
+    val stats = docLens.agg(count(lit(1)).cast("double").as("_n"),
+      (sum(col("_dl")) / count(lit(1))).as("_avgdl"))
+    val tf = df.select(col(idCol),
+      explode(TextFunctions.tokens(col(textCol))).as("_term"))
+      .filter(col("_term").isin(query: _*))
+      .groupBy(col(idCol), col("_term"))
+      .agg(count(lit(1)).cast("double").as("_tf"))
+    val dft = tf.groupBy(col("_term")).agg(count(lit(1)).cast("double").as("_df"))
+    val idf = log(lit(1.0) + (col("_n") - col("_df") + lit(0.5)) /
+      (col("_df") + lit(0.5)))
+    val termScore = idf * (col("_tf") * lit(k1 + 1.0)) /
+      (col("_tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl")))
+    tf.join(docLens, Seq(idCol))
+      .join(broadcast(dft), Seq("_term"))
+      .join(broadcast(stats))
+      .groupBy(col(idCol))
+      .agg(sum(termScore).as("bm25"), count(lit(1)).as("distinct_terms"))
+      .orderBy(col("bm25").desc, col(idCol))
+      .limit(k)
+  }
+
   test("bm25 search matches an independent driver-side computation") {
     import spark.implicits._
     val docs = Seq(
@@ -602,14 +634,14 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
         }
       }.sum
     }
-    val got = graft.text.Vocabulary.bm25Search(docs, "doc_id", "text", query, 10)
+    val got = bm25Search(docs, "doc_id", "text", query, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got.keySet == Set(1L, 2L, 3L), s"doc 4 matches nothing: $got")
     got.foreach { case (id, s) =>
       assert(math.abs(s - score(id)) < 1e-9, s"doc $id: got $s want ${score(id)}")
     }
     // and the ranking follows the scores
-    val order = graft.text.Vocabulary.bm25Search(docs, "doc_id", "text", query, 10)
+    val order = bm25Search(docs, "doc_id", "text", query, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(order == order.sortBy(id => (-got(id), id)), s"ranking order: $order")
   }
@@ -676,8 +708,7 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
     }
     // ranking follows (score desc, id asc) and agrees with float bm25's
     assert(got == got.sortBy { case (id, s) => (-s, id) }, s"order: $got")
-    val floatOrder = graft.text.Vocabulary
-      .bm25Search(docs, "doc_id", "text", query, 10)
+    val floatOrder = bm25Search(docs, "doc_id", "text", query, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(got.map(_._1) == floatOrder,
       s"fixed ranking ${got.map(_._1)} != float ranking $floatOrder")
