@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *    plans' output partitioning to EnsureRequirements (tfidfKeyTerms'
   *    one-exchange plan depends on the cached repartition staying
   *    visible; see TUNING "Session");
+  *  - the RocksDB state store for stateful streaming queries: the one
+  *    store `transformWithState` supports, and the one a large deployment
+  *    wants (state spills off-heap and snapshots to the checkpoint), so
+  *    no operator has to switch the provider on a shared session;
   *  - the custom expressions through [[GraftExtensions]], the one
   *    registration path;
   *  - log level WARN.
@@ -78,6 +82,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .withExtensions(new GraftExtensions)
     conf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()

@@ -1660,19 +1660,13 @@ object SparkEntry {
     // sink + checkpoint) and returns the sink read back, so the driver's
     // DuckDB oracle checks the code path a production stream deploys —
     // not the batch twin. Source staging (single file + far-future
-    // sentinel): StreamingOps.writeFiniteSource scaladoc. Each gate runs
-    // its StreamingQuery under withShufflePartitions(4): the state-store
-    // commit floor is per-partition per-batch, and toy-state queries at
-    // 32 partitions paid ~22 s of pure commit overhead (r4 measurement;
-    // rationale at StreamingOps.withShufflePartitions).
+    // sentinel): StreamingOps.writeFiniteSource scaladoc.
     "x_stream_window_exec" -> ((s, dir) => {
       val srcPath = stagedEventsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runToParquetSink(
-          graft.streaming.StreamingOps.streamingWindowedEventStats(
-            s, srcPath, src), s"${tmpPath(dir, "stream_exec_win")}/sink")
-      }
+      graft.streaming.StreamingOps.runToParquetSink(
+        graft.streaming.StreamingOps.streamingWindowedEventStats(
+          s, srcPath, src), s"${tmpPath(dir, "stream_exec_win")}/sink")
         // null-safe: a NULL-event_type row is real and must survive
         .filter(!(col("event_type") <=>
           graft.streaming.StreamingOps.SentinelEventType))
@@ -1686,11 +1680,9 @@ object SparkEntry {
     "x_stream_sketch_exec" -> ((s, dir) => {
       val srcPath = stagedEventsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      val sink = graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runToParquetSink(
-          graft.streaming.StreamingOps.streamingHourlyValueHistogram(
-            s, srcPath, src), s"${tmpPath(dir, "stream_exec_hist")}/sink")
-      }
+      val sink = graft.streaming.StreamingOps.runToParquetSink(
+        graft.streaming.StreamingOps.streamingHourlyValueHistogram(
+          s, srcPath, src), s"${tmpPath(dir, "stream_exec_hist")}/sink")
       // event_type is aggregated away by the histogram grouping, so the
       // sentinel guard is a window-time bound on the sink (see
       // StreamingOps.dropSentinelWindows: a pre-agg filter would be
@@ -1706,11 +1698,9 @@ object SparkEntry {
     "x_stream_sessionize_exec" -> ((s, dir) => {
       val srcPath = stagedEventsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runToParquetSink(
-          graft.streaming.StreamingOps.streamingSessionize(
-            s, srcPath, src), s"${tmpPath(dir, "stream_exec_sess")}/sink")
-      }
+      graft.streaming.StreamingOps.runToParquetSink(
+        graft.streaming.StreamingOps.streamingSessionize(
+          s, srcPath, src), s"${tmpPath(dir, "stream_exec_sess")}/sink")
         .filter(col("user_id") =!= -1L)
         .withColumn("session_start", unix_millis(col("session_start")))
     }),
@@ -1724,12 +1714,10 @@ object SparkEntry {
       val src = s.read.parquet(srcPath)
       val dim = DerivedModel.table(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runToParquetSink(
-          graft.streaming.StreamingOps.streamStaticEnriched(
-            s, srcPath, src, dim, "c_custkey", "c_mktsegment"),
-          s"${tmpPath(dir, "stream_exec_static")}/sink")
-      }
+      graft.streaming.StreamingOps.runToParquetSink(
+        graft.streaming.StreamingOps.streamStaticEnriched(
+          s, srcPath, src, dim, "c_custkey", "c_mktsegment"),
+        s"${tmpPath(dir, "stream_exec_static")}/sink")
         .withColumn("window_start", unix_millis(col("window_start")))
     }),
 
@@ -1738,11 +1726,9 @@ object SparkEntry {
     "x_stream_dedup_exec" -> ((s, dir) => {
       val srcPath = stagedDoubledEventsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runToParquetSink(
-          graft.streaming.StreamingOps.streamingDedup(
-            s, srcPath, src), s"${tmpPath(dir, "stream_exec_dedup")}/sink")
-      }
+      graft.streaming.StreamingOps.runToParquetSink(
+        graft.streaming.StreamingOps.streamingDedup(
+          s, srcPath, src), s"${tmpPath(dir, "stream_exec_dedup")}/sink")
         // null-safe: a NULL-event_type row is real and must survive
         .filter(!(col("event_type") <=>
           graft.streaming.StreamingOps.SentinelEventType))
@@ -1822,12 +1808,7 @@ object SparkEntry {
     // the three rule inventories, and the one whose predicates evaluate
     // an array<float> column (size / exists lambdas / zero-vector
     // check), proving the stream-boundary split is payload-shape
-    // agnostic; same oracle as x_validate_embeddings. This gate also
-    // runs the RETRY-SAFE sink layout (idempotentBatchPaths: each epoch
-    // overwrites its own batch=<id> directory — the at-least-once
-    // foreachBatch posture a production deployment needs), so the
-    // idempotent mode has gate-level execution evidence, not just the
-    // StreamingOpsSpec retry twin
+    // agnostic; same oracle as x_validate_embeddings
     "x_stream_validate_embeddings_exec" -> ((s, dir) => {
       val srcPath = stagedCorruptEmbsSource(s, dir)
       val src = s.read.parquet(srcPath)
@@ -1835,12 +1816,11 @@ object SparkEntry {
         graft.streaming.StreamingOps.streamingValidateQuarantine(
           s, srcPath, src, "vec_id",
           graft.ops.Validate.embeddingRules("embedding", 64),
-          s"${tmpPath(dir, "stream_exec_validate_embs")}/sink",
-          idempotentBatchPaths = true)
+          s"${tmpPath(dir, "stream_exec_validate_embs")}/sink")
       quarantine.select(col("vec_id"), col("violation"))
     }),
 
-    // EPOCH COMPACTION through the idempotent layout (r15 verdict item
+    // EPOCH COMPACTION through the retry-safe layout (r15 verdict item
     // 2): a 4-epoch validation stream writes the batchId-keyed sinks,
     // EpochLayout.compactEpochSink folds every closed epoch of BOTH
     // sinks into one merged dir under the crash-safe marker protocol,
@@ -1856,7 +1836,7 @@ object SparkEntry {
       val (_, _) =
         graft.streaming.StreamingOps.streamingValidateQuarantine(
           s, srcPath, src, "event_id", rules, outRoot,
-          maxFilesPerTrigger = Some(1), idempotentBatchPaths = true)
+          maxFilesPerTrigger = Some(1))
       // the two sinks compact independently (disjoint dirs) — overlap
       // the two rewrite jobs (guide §2.6, the zoneMapSkipAudit pattern)
       locally {
@@ -1875,7 +1855,7 @@ object SparkEntry {
           .foreach(_.get)
       }
       graft.streaming.StreamingOps.readValidatedSink(s, outRoot,
-          "quarantine", "event_id", rules, src, idempotentBatchPaths = true)
+          "quarantine", "event_id", rules, src)
         .select(col("event_id"), col("violation"))
     }),
 
@@ -1965,11 +1945,9 @@ object SparkEntry {
     "x_stream_join_exec" -> ((s, dir) => {
       val srcPath = stagedEventsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runToParquetSink(
-          graft.streaming.StreamingOps.streamStreamJoin(
-            s, srcPath, src), s"${tmpPath(dir, "stream_exec_join")}/sink")
-      }
+      graft.streaming.StreamingOps.runToParquetSink(
+        graft.streaming.StreamingOps.streamStreamJoin(
+          s, srcPath, src), s"${tmpPath(dir, "stream_exec_join")}/sink")
         .select(col("click_id"), col("purch_id"), col("user_id"),
           unix_millis(col("click_ts")).as("click_ts_ms"),
           unix_millis(col("purch_ts")).as("purch_ts_ms"),
@@ -2072,32 +2050,17 @@ object SparkEntry {
         .select(col("doc_id"), col("position"))),
 
     // custom streaming STATE executed for real: transformWithState +
-    // ValueState on the RocksDB store (scoped to this query, as a
-    // deployment would set it session-wide), update-mode foreachBatch
-    // parquet sink, last-update-per-key read-back — closes the last
-    // streaming family that was only spec-checked
+    // ValueState on the session posture's RocksDB store, update-mode
+    // foreachBatch parquet sink, last-update-per-key read-back — closes
+    // the last streaming family that was only spec-checked
     "x_stream_state_exec" -> ((s, dir) => {
       val srcPath = stagedEventsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val sink = try {
-        graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-          graft.streaming.StreamingOps.runUpdateToParquetSink(
-            graft.streaming.StreamingOps.transformWithStateTotals(s, srcPath, src)
-              .toDF(),
-            s"${tmpPath(dir, "stream_exec_state")}/sink")
-        }
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      val lastUpdate = Window.partitionBy(col("user_id"))
-        .orderBy(col("_graft_batch_id").desc)
-      sink.withColumn("_graft_rn", row_number().over(lastUpdate))
-        .filter(col("_graft_rn") === 1 && col("user_id") =!= -1L)
+      graft.streaming.StreamingOps.runUpdateToParquetSink(
+        graft.streaming.StreamingOps.transformWithStateTotals(s, srcPath, src)
+          .toDF(),
+        s"${tmpPath(dir, "stream_exec_state")}/sink", Seq("user_id"))
+        .filter(col("user_id") =!= -1L)
         .select(col("user_id"), col("n_events"), col("value_cents"))
     }),
 
@@ -2108,26 +2071,11 @@ object SparkEntry {
     "x_stream_cdc_exec" -> ((s, dir) => {
       val srcPath = stagedEventsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val sink = try {
-        graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-          graft.streaming.StreamingOps.runUpdateToParquetSink(
-            graft.streaming.StreamingOps.streamingCompact(s, srcPath, src)
-              .toDF(),
-            s"${tmpPath(dir, "stream_exec_cdc")}/sink")
-        }
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      val lastUpdate = Window.partitionBy(col("user_id"))
-        .orderBy(col("_graft_batch_id").desc)
-      sink.withColumn("_graft_rn", row_number().over(lastUpdate))
-        .filter(col("_graft_rn") === 1 && col("user_id") =!= -1L &&
-          !col("is_delete"))
+      graft.streaming.StreamingOps.runUpdateToParquetSink(
+        graft.streaming.StreamingOps.streamingCompact(s, srcPath, src)
+          .toDF(),
+        s"${tmpPath(dir, "stream_exec_cdc")}/sink", Seq("user_id"))
+        .filter(col("user_id") =!= -1L && !col("is_delete"))
         .select(col("user_id"), col("event_id"), col("ts_ms"),
           col("event_type"), col("value"))
     }),
@@ -2441,22 +2389,10 @@ object SparkEntry {
       val k = 64
       val srcPath = stagedRawDocsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      // state-store commit floor is per partition per batch (see
-      // StreamingOps.withShufflePartitions) -- the update-mode sketch
-      // gates were the only stateful queries still running at the
-      // session's full shuffle-partition count (r16 optimization)
-      val upd = graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runUpdateToParquetSink(
-          graft.streaming.StreamingOps.streamingBucketMinSketch(
-            s, srcPath, src, "doc_id", k),
-          s"${tmpPath(dir, "stream_exec_kmv")}/sink")
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("bucket"))
-        .orderBy(col("_graft_batch_id").desc, col("min_h").asc)
-      val fin = upd.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select(col("bucket"), col("min_h"))
+      val fin = graft.streaming.StreamingOps.runUpdateToParquetSink(
+        graft.streaming.StreamingOps.streamingBucketMinSketch(
+          s, srcPath, src, "doc_id", k),
+        s"${tmpPath(dir, "stream_exec_kmv")}/sink", Seq("bucket"))
       val exact = src.agg(countDistinct(col("doc_id")).as("exact_distinct"))
       graft.sketch.Kmv.bucketMinEstimate(fin, k)
         .crossJoin(broadcast(exact))
@@ -2471,17 +2407,15 @@ object SparkEntry {
       val (m, k) = (131072L, 4)
       val srcPath = stagedRawDocsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      val upd = graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runUpdateToParquetSink(
-          graft.streaming.StreamingOps.streamingBloomPositions(
-            s, srcPath, src, "doc_id", m, k),
-          s"${tmpPath(dir, "stream_exec_bloom")}/sink")
-      }
+      val upd = graft.streaming.StreamingOps.runUpdateToParquetSink(
+        graft.streaming.StreamingOps.streamingBloomPositions(
+          s, srcPath, src, "doc_id", m, k),
+        s"${tmpPath(dir, "stream_exec_bloom")}/sink", Seq("pos"))
       graft.sketch.Bloom.bloomFprAudit(
         src.select(col("doc_id").as("v")).distinct(),
         src.select((col("doc_id") + 10000000L).as("v")).distinct(),
         mBits = m, kHashes = k,
-        precomputedPositions = Some(upd.select(col("pos")).distinct()))
+        precomputedPositions = Some(upd.select(col("pos"))))
     }),
 
     // streaming count-min maintenance (17th real StreamingQuery):
@@ -2491,17 +2425,10 @@ object SparkEntry {
       val widthBits = 8
       val srcPath = stagedRawDocsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      val upd = graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runUpdateToParquetSink(
-          graft.streaming.StreamingOps.streamingCmsSketch(
-            s, srcPath, src, "text", widthBits),
-          s"${tmpPath(dir, "stream_exec_cms")}/sink")
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("r"), col("bucket"))
-        .orderBy(col("_graft_batch_id").desc, col("cnt").desc)
-      upd.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
+      graft.streaming.StreamingOps.runUpdateToParquetSink(
+        graft.streaming.StreamingOps.streamingCmsSketch(
+          s, srcPath, src, "text", widthBits),
+        s"${tmpPath(dir, "stream_exec_cms")}/sink", Seq("r", "bucket"))
         .select(col("r"), col("bucket"), col("cnt"))
     }),
 
@@ -2514,20 +2441,12 @@ object SparkEntry {
       val p = 10
       val srcPath = stagedRawDocsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      val upd = graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runUpdateToParquetSink(
-          graft.streaming.StreamingOps.streamingHllRegisters(
-            s, srcPath, src, "doc_id", p),
-          s"${tmpPath(dir, "stream_exec_hll")}/sink")
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("bucket"))
-        .orderBy(col("_graft_batch_id").desc, col("register").desc)
-      // last update per bucket IS one row per bucket (the _rn filter) —
-      // grid-join it directly, empty buckets as 0
-      val fin = upd.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select(col("bucket"), col("register"))
+      // last update per bucket IS one row per bucket — grid-join it
+      // directly, empty buckets as 0
+      val fin = graft.streaming.StreamingOps.runUpdateToParquetSink(
+        graft.streaming.StreamingOps.streamingHllRegisters(
+          s, srcPath, src, "doc_id", p),
+        s"${tmpPath(dir, "stream_exec_hll")}/sink", Seq("bucket"))
       val regs = s.range(1L << p).select(col("id").as("bucket"))
         .join(fin, Seq("bucket"), "left")
         .select(col("bucket"), coalesce(col("register"), lit(0L)).as("register"))
@@ -2541,16 +2460,10 @@ object SparkEntry {
     "x_stream_card_exec" -> ((s, dir) => {
       val srcPath = stagedRawDocsSource(s, dir)
       val src = s.read.parquet(srcPath)
-      val upd = graft.streaming.StreamingOps.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingOps.runUpdateToParquetSink(
-          graft.streaming.StreamingOps.streamingSourceCounters(
-            s, srcPath, src, "source", "text"),
-          s"${tmpPath(dir, "stream_exec_card")}/sink")
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("_graft_batch_id").desc)
-      upd.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
+      graft.streaming.StreamingOps.runUpdateToParquetSink(
+        graft.streaming.StreamingOps.streamingSourceCounters(
+          s, srcPath, src, "source", "text"),
+        s"${tmpPath(dir, "stream_exec_card")}/sink", Seq("source"))
         .select(col("source"), col("n_docs"), col("n_tokens"), col("n_chars"))
     }),
 
@@ -2948,17 +2861,14 @@ object SparkEntry {
     // micro-batch probes the staged corpus dedup index inside
     // foreachBatch and survivors land in the sink — the dedup-on-ingest
     // deployment shape. Stateless across batches, so the oracle truth
-    // is x_dedup_incremental's (identical survivors). Runs the
-    // RETRY-SAFE batchId-keyed sink layout (idempotentBatchPaths), same
-    // at-least-once posture as the embeddings validation gate
+    // is x_dedup_incremental's (identical survivors)
     "x_stream_neardedup_exec" -> ((s, dir) => {
       val srcPath = stagedBatchDocsSource(s, dir)
       val src = s.read.parquet(srcPath)
       graft.streaming.StreamingOps.streamingIncrementalDedup(
         s, srcPath, src, "doc_id", "text",
         incrementalIndexDims(s, dir),
-        s"${tmpPath(dir, "stream_exec_neardedup")}/sink",
-        idempotentBatchPaths = true)
+        s"${tmpPath(dir, "stream_exec_neardedup")}/sink")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     }),
 
@@ -3766,7 +3676,7 @@ object SparkEntry {
            |FROM ppairs p
            |JOIN documents a ON a.doc_id = p.id_a
            |JOIN documents b ON b.doc_id = p.id_b
-           |WHERE 10 * levenshtein(a.text, b.text)
+           |WHERE ${graft.dedup.Dedup.EditDistanceCap} * levenshtein(a.text, b.text)
            |  <= greatest(strlen(a.text), strlen(b.text))""".stripMargin,
 
       "x_dedup_ngram_jaccard_maxdf" ->

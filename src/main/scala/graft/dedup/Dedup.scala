@@ -476,10 +476,15 @@ object Dedup {
         size(col("_common")).cast("long").as("n_inter"))
   }
 
+  /** The relative cap of [[editDistanceNearDup]]: a pair is kept when
+    * `EditDistanceCap · lev ≤ max(len_a, len_b)`. The
+    * `x_dedup_edit_distance` oracle interpolates this same value. */
+  val EditDistanceCap: Long = 10L
+
   /** CHARACTER-LEVEL near-duplicate verify: [[jaccardPrefixPairs]]
     * candidates at a loose token-set threshold, confirmed with exact
     * Levenshtein edit distance under a RELATIVE cap
-    * (`10·lev ≤ max(len_a, len_b)`, exact integers).
+    * (`EditDistanceCap·lev ≤ max(len_a, len_b)`, exact integers).
     *
     * Why both levels: token-set Jaccard is permutation-blind — a
     * shuffled bag of the same words scores 1.0 — while edit distance
@@ -526,7 +531,7 @@ object Dedup {
       .join(texts.select(col("_tid").as("id_b"), col("_txt").as("_tb"),
         col("_len").as("_lb")), Seq("id_b"))
       .withColumn("edit_dist", levenshtein(col("_ta"), col("_tb")).cast("long"))
-      .filter(lit(10L) * col("edit_dist") <= greatest(col("_la"), col("_lb")))
+      .filter(lit(EditDistanceCap) * col("edit_dist") <= greatest(col("_la"), col("_lb")))
       .select(col("id_a"), col("id_b"), col("edit_dist"))
   }
 

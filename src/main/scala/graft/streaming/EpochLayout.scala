@@ -1,14 +1,15 @@
 package graft.streaming
 
+import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, LocalFileSystem,
   Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Maintenance for the RETRY-SAFE batchId-keyed sink layout
-  * ([[StreamingOps.writeValidatedBatch]]): one `batch=<id>` directory per
-  * epoch per sink absorbs at-least-once replays by overwrite, but the
+/** Maintenance for the RETRY-SAFE batchId-keyed sink layout (the two
+  * `foreachBatch` sinks of [[StreamingOps]]): one `batch=<id>` directory
+  * per epoch per sink absorbs at-least-once replays by overwrite, but the
   * directory count grows without bound at production stream lifetimes
   * (epochs × shuffle-partition part files — at one epoch/minute and 32
   * partitions that is ~1.4M files/month/sink, which kills file listing
@@ -40,8 +41,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * run deletes). Re-running compaction is always safe and idempotent.
   *
   * REPLAY AFTER COMPACTION: a replayed epoch with id <= marker is
-  * ABSORBED — [[StreamingOps.writeValidatedBatch]] skips the write (its
-  * rows are already inside the merged dir), and even an unskipped write
+  * ABSORBED — [[StreamingOps]] skips the write (its rows are already
+  * inside the merged dir), and even an unskipped write
   * would be invisible because [[readEpochSink]] ignores `batch=` dirs at
   * or below the marker. Compaction itself must only cover CLOSED epochs:
   * run it between `Trigger.AvailableNow` runs (the re-staging cadence
@@ -67,9 +68,10 @@ object EpochLayout {
 
   /** The root's file system and the root qualified on it. The local file
     * system is used raw: no checksum side files, and its rename is the
-    * POSIX one, which replaces an existing target atomically.
+    * POSIX one, which replaces an existing target atomically. Also how
+    * [[StreamingOps]] clears a sink root before a fresh run.
     */
-  private def resolve(spark: SparkSession, root: String): (FileSystem, Path) = {
+  private[streaming] def resolve(spark: SparkSession, root: String): (FileSystem, Path) = {
     val path = new Path(root)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
       case local: LocalFileSystem => local.getRaw
@@ -82,7 +84,7 @@ object EpochLayout {
     * error propagates (a store that cannot be read is not an empty sink). */
   private def status(fs: FileSystem, p: Path): Option[FileStatus] =
     try Some(fs.getFileStatus(p))
-    catch { case _: java.io.FileNotFoundException => None }
+    catch { case _: FileNotFoundException => None }
 
   private def isDir(fs: FileSystem, p: Path): Boolean =
     status(fs, p).exists(_.isDirectory)
@@ -190,7 +192,7 @@ object EpochLayout {
     val dst = new Path(root, s"merged=$target")
     fs.delete(dst, true)
     if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"compactEpochSink: could not rename $tmp to $dst")
+      throw new IOException(s"compactEpochSink: could not rename $tmp to $dst")
     // (3) COMMIT: atomically replace the marker
     val markerTmp = new Path(root, s".$MarkerName.tmp")
     val out = fs.create(markerTmp, true)
@@ -211,7 +213,7 @@ object EpochLayout {
       src: Path, dst: Path): Unit = fs match {
     case _: RawLocalFileSystem =>
       if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"compactEpochSink: could not rename $src to $dst")
+        throw new IOException(s"compactEpochSink: could not rename $src to $dst")
     case _ => FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
       .rename(src, dst, Options.Rename.OVERWRITE)
   }

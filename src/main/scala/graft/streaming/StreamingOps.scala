@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
 /** A CDC change row flowing through [[StreamingOps.streamingCompact]].
@@ -16,7 +16,7 @@ final case class ChangeRow(user_id: Long, event_id: Long, ts_ms: Long,
     event_type: String, value: Option[Double], is_delete: Boolean)
 
 /** Per-user running totals carried as explicit state (see
-  * [[StreamingOps.statefulUserTotals]]). */
+  * [[StreamingOps.transformWithStateTotals]]). */
 final case class UserRunningTotal(user_id: Long, n_events: Long, value_cents: Long)
 
 /** Streaming operators over the `events` table shape (event_id, ts,
@@ -30,6 +30,27 @@ final case class UserRunningTotal(user_id: Long, n_events: Long, value_cents: Lo
   * `floor(value*100 + 0.5)` *before* aggregation, so sums are exact
   * integers regardless of aggregation order — deterministic at any
   * parallelism (doubles summed in shuffle order are not).
+  *
+  * RUNNING A STREAM. This object is the only code that knows how a
+  * query is run, where its sink lives and how the sink is read back:
+  *  - one runner ([[runAvailableNow]]) clears the sink root through the
+  *    root's Hadoop FileSystem (a `file:`, `hdfs://` or `s3a://` root
+  *    clears like a plain path), checkpoints under `<root>/ckpt`, starts
+  *    the query under `Trigger.AvailableNow` and waits at most
+  *    [[QueryTimeoutMs]]; a query still running then is stopped and the
+  *    run fails by name;
+  *  - append-mode queries land in a parquet file sink
+  *    ([[runToParquetSink]]);
+  *  - the two `foreachBatch` sinks (validation, ingest dedup) have one
+  *    layout, the retry-safe one: each epoch OVERWRITES its own
+  *    `batch=<id>` directory, so an at-least-once replay rewrites exactly
+  *    its own output, and read-back is always [[EpochLayout.readEpochSink]];
+  *  - update-mode queries append each epoch stamped with its batch id,
+  *    and [[readUpdateSink]] returns the latest row per key
+  *    ([[runUpdateToParquetSink]]).
+  * No operator changes session config. Stateful queries run on the state
+  * store the session's posture names: [[graft.GraftSession]] fixes the
+  * RocksDB provider, the one `transformWithState` supports.
   */
 object StreamingOps {
 
@@ -365,7 +386,7 @@ object StreamingOps {
   /** Ingest-time near-dedup as a REAL StreamingQuery: every arriving
     * micro-batch is cleaned against the STAGED corpus dedup index
     * ([[graft.dedup.Dedup.CorpusDedupIndex]] — the persisted, appendable
-    * deployment artifact) and survivors append to the parquet sink. The
+    * deployment artifact) and survivors land in the retry-safe epoch sink. The
     * per-batch probe is [[graft.dedup.Dedup.incrementalDedup]]'s O(batch)
     * equi-join plan, run inside `foreachBatch` — required because the
     * probe composes joins and aggregations append-mode streaming cannot
@@ -385,58 +406,35 @@ object StreamingOps {
       schemaFrom: DataFrame, idCol: String, textCol: String,
       index: graft.dedup.Dedup.CorpusDedupIndex, outRoot: String,
       n: Int = 3, tau: Double = 0.8, numHashes: Int = 32,
-      rowsPerBand: Int = 2, maxFilesPerTrigger: Option[Int] = None,
-      timeoutMs: Long = 600000L,
-      idempotentBatchPaths: Boolean = false): DataFrame = {
-    deleteRecursively(new java.io.File(outRoot))
+      rowsPerBand: Int = 2,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val emptyCorpus = schemaFrom.limit(0)
     val reader = spark.readStream.schema(schemaFrom.schema)
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    val sq = reader.parquet(sourcePath)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    runAvailableNow(spark, reader.parquet(sourcePath).writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val survivors = graft.dedup.Dedup.incrementalDedup(emptyCorpus,
           batch, idCol, textCol, n, tau, numHashes, rowsPerBand, Some(index))
         // same at-least-once posture as streamingValidateQuarantine:
         // keep/drop is a pure function of (document, frozen index), so a
         // replayed epoch recomputes identical survivors and the
-        // batchId-keyed overwrite absorbs it exactly. An epoch already
-        // folded by EpochLayout.compactEpochSink is absorbed by SKIP —
-        // its rows live inside the merged dir
-        if (idempotentBatchPaths) {
-          if (!EpochLayout.compactedUpTo(spark, s"$outRoot/data").exists(batchId <= _))
-            survivors.write.mode("overwrite")
-              .parquet(s"$outRoot/data/batch=$batchId")
-        } else survivors.write.mode("append").parquet(s"$outRoot/data")
+        // batchId-keyed overwrite absorbs it exactly
+        writeEpoch(survivors, batchId, s"$outRoot/data")
       }
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$outRoot/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!sq.awaitTermination(timeoutMs)) {
-      sq.stop()
-      throw new IllegalStateException(
-        s"streaming query did not terminate within ${timeoutMs} ms")
-    }
-    // a zero-epoch source leaves the sink dir nonexistent in both
-    // layouts — return the empty survivor relation, not a reader error
-    if (idempotentBatchPaths)
-      EpochLayout.readEpochSink(spark, s"$outRoot/data", schemaFrom)
-    else if (!new java.io.File(s"$outRoot/data").isDirectory)
-      schemaFrom.limit(0)
-    else spark.read.parquet(s"$outRoot/data")
+      .outputMode(OutputMode.Append()), outRoot, resume = false)
+    EpochLayout.readEpochSink(spark, s"$outRoot/data", schemaFrom)
   }
 
   /** Ingest VALIDATION as a REAL StreamingQuery — the stream-boundary
     * deployment of [[graft.ops.Validate]]: every arriving micro-batch is
-    * split row-by-row into the validated stream (appended to the `valid`
-    * sink — the input every downstream operator's contract assumes) and
-    * the per-(row, violation) quarantine audit (appended to the
-    * `quarantine` sink, violation names attached, so "why was this row
-    * dropped" stays answerable at ingest time, not in a post-mortem
-    * rescan). The rules are pure scan expressions (no join, no
-    * watermark, no state store), so the split is a pure function of each
-    * row and ANY micro-batch decomposition equals the batch
+    * split row-by-row into the validated stream (the `valid` sink — the
+    * input every downstream operator's contract assumes) and the
+    * per-(row, violation) quarantine audit (the `quarantine` sink,
+    * violation names attached, so "why was this row dropped" stays
+    * answerable at ingest time, not in a post-mortem rescan). The rules
+    * are pure scan expressions (no join, no watermark, no state store),
+    * so the split is a pure function of each row and ANY micro-batch
+    * decomposition equals the batch
     * [[graft.ops.Validate.valid]]/[[graft.ops.Validate.violationRows]]
     * partition exactly (spec-asserted under `maxFilesPerTrigger = 1`).
     *
@@ -444,33 +442,25 @@ object StreamingOps {
     * Structured Streaming multi-sink idiom; the batch is persisted so
     * the source scan is paid once, not once per sink.
     *
-    * RETRY SAFETY (`idempotentBatchPaths`): foreachBatch gives
-    * at-least-once delivery — if an executor dies after the `valid`
-    * write but before the epoch commits, the engine REPLAYS the batch
-    * and a plain append double-counts every row of the first attempt.
-    * With `idempotentBatchPaths = true` each batch OVERWRITES its own
-    * `batch=<id>` directory under each sink ([[writeValidatedBatch]]),
+    * RETRY SAFETY: foreachBatch gives at-least-once delivery — if an
+    * executor dies after the `valid` write but before the epoch commits,
+    * the engine REPLAYS the batch. Each batch therefore OVERWRITES its
+    * own `batch=<id>` directory under each sink ([[writeValidatedBatch]]),
     * so a replay of batch N rewrites exactly batch N's output and the
     * sinks stay a function of the committed offsets — the standard
     * batchId-keyed idempotence pattern for file sinks behind
-    * foreachBatch. Read-back is marker-aware via
+    * foreachBatch (a flat append would double-count every row of the
+    * first attempt). Read-back is marker-aware via
     * [[EpochLayout.readEpochSink]] (the `batch=` directories are retry
     * epochs, not data partitions — they must not surface as a column;
     * epochs folded by [[EpochLayout.compactEpochSink]] are read from the
-    * merged dir instead). The default stays the flat append: the gated
-    * `AvailableNow` runs over an immutable staging have no retry window
-    * to protect, and a flat sink is what the batch twins' readers
-    * expect on disk — though two gates
-    * (`x_stream_validate_embeddings_exec`, `x_stream_neardedup_exec`)
-    * and the compaction gate deliberately opt INTO the idempotent
-    * layout so that mode has gate-level execution coverage, not just
-    * its spec twins.
+    * merged dir instead).
     *
     * RESTART (`resumeFromCheckpoint = true`): keep the existing
     * checkpoint and sinks instead of starting fresh — the recovery path
     * after a failed run. The engine replays the uncommitted epoch with
     * the SAME batchId and data (offsets were logged before the attempt),
-    * which is exactly the window `idempotentBatchPaths` protects.
+    * which is exactly the window the batchId-keyed layout protects.
     *
     * `afterBatchWrite` runs inside `foreachBatch` AFTER the sink writes
     * of each epoch — a metrics/fault-injection seam: a hook that throws
@@ -482,66 +472,43 @@ object StreamingOps {
       schemaFrom: DataFrame, idCol: String,
       rules: Seq[(String, org.apache.spark.sql.Column)], outRoot: String,
       maxFilesPerTrigger: Option[Int] = None,
-      timeoutMs: Long = 600000L,
-      idempotentBatchPaths: Boolean = false,
       resumeFromCheckpoint: Boolean = false,
       afterBatchWrite: Long => Unit = _ => ()): (DataFrame, DataFrame) = {
-    if (!resumeFromCheckpoint) deleteRecursively(new java.io.File(outRoot))
     val reader = spark.readStream.schema(schemaFrom.schema)
     maxFilesPerTrigger.foreach(m => reader.option("maxFilesPerTrigger", m))
-    val sq = reader.parquet(sourcePath)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeValidatedBatch(batch, batchId, idCol, rules, outRoot,
-          idempotentBatchPaths)
+    runAvailableNow(spark, reader.parquet(sourcePath).writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        writeValidatedBatch(batch, batchId, idCol, rules, outRoot)
         afterBatchWrite(batchId)
       }
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$outRoot/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!sq.awaitTermination(timeoutMs)) {
-      sq.stop()
-      throw new IllegalStateException(
-        s"streaming query did not terminate within ${timeoutMs} ms")
-    }
-    (readValidatedSink(spark, outRoot, "valid", idCol, rules, schemaFrom,
-      idempotentBatchPaths),
-      readValidatedSink(spark, outRoot, "quarantine", idCol, rules,
-        schemaFrom, idempotentBatchPaths))
+      .outputMode(OutputMode.Append()), outRoot, resume = resumeFromCheckpoint)
+    (readValidatedSink(spark, outRoot, "valid", idCol, rules, schemaFrom),
+      readValidatedSink(spark, outRoot, "quarantine", idCol, rules, schemaFrom))
   }
 
-  /** Read one of [[streamingValidateQuarantine]]'s sinks back, in either
-    * layout. A source that yielded zero epochs leaves the sink dir
-    * nonexistent — return the correctly-shaped EMPTY relation (the batch
-    * split of zero rows) instead of an unhelpful reader error.
+  /** Read one of [[streamingValidateQuarantine]]'s sinks back. A source
+    * that yielded zero epochs leaves the sink dir nonexistent — return the
+    * correctly-shaped EMPTY relation (the batch split of zero rows)
+    * instead of an unhelpful reader error.
     */
   private[graft] def readValidatedSink(spark: SparkSession, outRoot: String,
       name: String, idCol: String,
       rules: Seq[(String, org.apache.spark.sql.Column)],
-      schemaFrom: DataFrame, idempotentBatchPaths: Boolean): DataFrame = {
-    def emptyLike: DataFrame =
+      schemaFrom: DataFrame): DataFrame =
+    EpochLayout.readEpochSink(spark, s"$outRoot/$name",
       if (name == "valid") graft.ops.Validate.valid(schemaFrom.limit(0), rules)
-      else graft.ops.Validate.violationRows(schemaFrom.limit(0), idCol, rules)
-    if (idempotentBatchPaths)
-      EpochLayout.readEpochSink(spark, s"$outRoot/$name", emptyLike)
-    else if (!new java.io.File(s"$outRoot/$name").isDirectory)
-      emptyLike.limit(0)
-    else spark.read.parquet(s"$outRoot/$name")
-  }
+      else graft.ops.Validate.violationRows(schemaFrom.limit(0), idCol, rules))
 
   /** The per-batch dual-sink write behind
     * [[streamingValidateQuarantine]], factored out so the RETRY path is
-    * directly testable: calling it twice with the SAME `batchId` in
-    * idempotent mode must leave the sinks exactly as one call would (a
-    * replayed epoch overwrites its own `batch=<id>` directories), while
-    * append mode double-writes — which is why at-least-once foreachBatch
-    * deployments key their writes by batchId.
+    * directly testable: calling it twice with the SAME `batchId` must
+    * leave the sinks exactly as one call would (a replayed epoch
+    * overwrites its own `batch=<id>` directories).
     */
   private[graft] def writeValidatedBatch(
-      batch: Dataset[org.apache.spark.sql.Row], batchId: Long, idCol: String,
-      rules: Seq[(String, org.apache.spark.sql.Column)], outRoot: String,
-      idempotentBatchPaths: Boolean): Unit = {
+      batch: Dataset[Row], batchId: Long, idCol: String,
+      rules: Seq[(String, org.apache.spark.sql.Column)],
+      outRoot: String): Unit = {
     batch.persist()
     try {
       // the two sink writes are independent jobs over disjoint dirs fed
@@ -553,37 +520,11 @@ object StreamingOps {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      val writes: Seq[Future[Unit]] =
-        if (idempotentBatchPaths) Seq(
-          // an epoch at or below a sink's EpochLayout compaction marker
-          // is absorbed by SKIP: its rows already live inside the merged
-          // dir (replays are deterministic — the checkpoint fixes the
-          // epoch's offsets and the split is row-pure), and readEpochSink
-          // would ignore a rewritten batch= dir at that id anyway — two
-          // independent layers of replay safety
-          Future {
-            if (!EpochLayout.compactedUpTo(batch.sparkSession, s"$outRoot/valid")
-                .exists(batchId <= _))
-              graft.ops.Validate.valid(batch, rules)
-                .write.mode("overwrite")
-                .parquet(s"$outRoot/valid/batch=$batchId")
-          },
-          Future {
-            if (!EpochLayout.compactedUpTo(batch.sparkSession, s"$outRoot/quarantine")
-                .exists(batchId <= _))
-              graft.ops.Validate.violationRows(batch, idCol, rules)
-                .write.mode("overwrite")
-                .parquet(s"$outRoot/quarantine/batch=$batchId")
-          })
-        else Seq(
-          Future {
-            graft.ops.Validate.valid(batch, rules)
-              .write.mode("append").parquet(s"$outRoot/valid")
-          },
-          Future {
-            graft.ops.Validate.violationRows(batch, idCol, rules)
-              .write.mode("append").parquet(s"$outRoot/quarantine")
-          })
+      val writes: Seq[Future[Unit]] = Seq(
+        Future(writeEpoch(graft.ops.Validate.valid(batch, rules), batchId,
+          s"$outRoot/valid")),
+        Future(writeEpoch(graft.ops.Validate.violationRows(batch, idCol, rules),
+          batchId, s"$outRoot/quarantine")))
       // await ALL writes before rethrowing the first failure (r16
       // ADVICE): rethrowing on the first failed future would leave the
       // sibling write running detached past the batch's unpersist, and
@@ -594,10 +535,17 @@ object StreamingOps {
     } finally { batch.unpersist(); () }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
+  /** One epoch of a retry-safe sink: `rows` overwrite
+    * `<sinkRoot>/batch=<batchId>`. An epoch at or below the sink's
+    * [[EpochLayout]] compaction marker is absorbed by SKIP: its rows
+    * already live inside the merged dir (replays are deterministic — the
+    * checkpoint fixes the epoch's offsets and the per-row work is pure),
+    * and [[EpochLayout.readEpochSink]] would ignore a rewritten `batch=`
+    * dir at that id anyway — two independent layers of replay safety.
+    */
+  private def writeEpoch(rows: DataFrame, batchId: Long, sinkRoot: String): Unit =
+    if (!EpochLayout.compactedUpTo(rows.sparkSession, sinkRoot).exists(batchId <= _))
+      rows.write.mode("overwrite").parquet(s"$sinkRoot/batch=$batchId")
 
   /** Stage a finite event set as a streaming file source that FLUSHES:
     * append-mode sinks only emit windows/sessions the watermark has passed,
@@ -617,7 +565,6 @@ object StreamingOps {
     * real streaming operators on driver-checkable finite data.
     */
   def writeFiniteSource(events: DataFrame, srcRoot: String): Unit = {
-    deleteRecursively(new java.io.File(srcRoot))
     val slim = events.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"), col("value"))
     val maxTs = slim.agg(max(col("ts"))).head().getTimestamp(0)
@@ -631,58 +578,54 @@ object StreamingOps {
       .write.mode("overwrite").parquet(srcRoot)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the prior value after (set-and-restore — never a
-    * silent session mutation). Why: every micro-batch commits one state
-    * store PER shuffle partition regardless of data volume, so a
-    * stateful streaming query's floor cost is partitions x
-    * per-store-commit. The gated finite-source queries carry toy state;
-    * at 32 partitions the commit floor dominated their wall time
-    * (~22 s across the five `_exec` gates, measured r4). A production
-    * deployment sizes this to real key cardinality instead.
+  /** How long [[runAvailableNow]] waits for a query to drain its source. */
+  private val QueryTimeoutMs = 600000L
+
+  /** The one way a query here is run: clear `outRoot` through its Hadoop
+    * FileSystem (unless `resume`, which keeps the checkpoint and sinks of
+    * an earlier run), checkpoint under `<outRoot>/ckpt`, start `writer`
+    * under `Trigger.AvailableNow` and wait at most [[QueryTimeoutMs]]. A
+    * query still running then is stopped and the run fails by name; a
+    * failed query rethrows its error here.
     */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private def runAvailableNow(spark: SparkSession, writer: DataStreamWriter[Row],
+      outRoot: String, resume: Boolean): Unit = {
+    if (!resume) {
+      val (fs, root) = EpochLayout.resolve(spark, outRoot)
+      fs.delete(root, true): Unit
+    }
+    val sq = writer.option("checkpointLocation", s"$outRoot/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    if (!sq.awaitTermination(QueryTimeoutMs)) {
+      sq.stop()
+      throw new IllegalStateException(
+        s"streaming query did not terminate within ${QueryTimeoutMs} ms")
     }
   }
 
   /** Run a (finite) streaming DataFrame end-to-end as a REAL
-    * `StreamingQuery`: `Trigger.AvailableNow`, append mode, durable
-    * parquet sink + checkpoint — the exactly-once file-sink shape a
-    * production pipeline deploys — then return the sink read back.
-    * Throws if the query does not terminate in `timeoutMs` or fails.
+    * `StreamingQuery`: append mode into a durable parquet sink +
+    * checkpoint — the exactly-once file-sink shape a production pipeline
+    * deploys — then return the sink read back.
     */
-  def runToParquetSink(streaming: DataFrame, outRoot: String,
-      timeoutMs: Long = 600000L): DataFrame = {
+  def runToParquetSink(streaming: DataFrame, outRoot: String): DataFrame = {
     val spark = streaming.sparkSession
-    deleteRecursively(new java.io.File(outRoot))
-    val sq = streaming.writeStream
+    runAvailableNow(spark, streaming.writeStream
       .format("parquet")
       .option("path", s"$outRoot/data")
-      .option("checkpointLocation", s"$outRoot/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!sq.awaitTermination(timeoutMs)) {
-      sq.stop()
-      throw new IllegalStateException(
-        s"streaming query did not terminate within ${timeoutMs} ms")
-    }
+      .outputMode(OutputMode.Append()), outRoot, resume = false)
     spark.read.parquet(s"$outRoot/data")
   }
 
-  /** [[runToParquetSink]] for UPDATE-mode queries (custom state emits a
-    * refreshed row per key per batch; file sinks only accept append):
-    * `foreachBatch` appends each micro-batch stamped with its batch id —
-    * the idempotent-upsert consumption shape for update output. Readers
-    * take the max-batch row per key ([[runUpdateToParquetSink]]'s caller);
-    * with a single-file finite source there is exactly one update batch.
+  /** The batch-id stamp of an update-mode sink's rows. */
+  private val BatchIdCol = "_graft_batch_id"
+
+  /** [[runToParquetSink]] for UPDATE-mode queries (custom state and
+    * update aggregations emit a refreshed row per key per batch; file
+    * sinks only accept append): `foreachBatch` appends each micro-batch
+    * stamped with its batch id, and the result is [[readUpdateSink]] —
+    * the latest row per `keys`, without the stamp.
     *
     * REPLAY DECISION (r16): this sink deliberately KEEPS the stamped
     * append — file-level idempotence (the `batch=<id>` overwrite layout)
@@ -690,35 +633,37 @@ object StreamingOps {
     * at-least-once replays. A replayed epoch re-emits byte-identical
     * rows: the state store is versioned per batch, so the retry loads
     * state version N−1 and recomputes epoch N deterministically, and the
-    * stamp is the same batchId. The consumer's latest-batch-wins
-    * window (max `_graft_batch_id` per key, ties arbitrary among
-    * IDENTICAL rows) therefore returns the same snapshot whether an
-    * epoch's rows appear once or twice — duplicated files cost dead
-    * bytes until compaction, never wrong answers. Spec-pinned by
-    * duplicating an epoch's stamped output and asserting the consumed
-    * snapshot is unchanged ([[StreamingOpsSpec]]). Contrast with the
-    * validate/dedup sinks, whose readers consume raw rows (counts would
-    * double) — those are the sinks that need [[EpochLayout]].
+    * stamp is the same batchId. Latest-batch-wins (max stamp per key,
+    * ties arbitrary among IDENTICAL rows) therefore returns the same
+    * snapshot whether an epoch's rows appear once or twice — duplicated
+    * files cost dead bytes until compaction, never wrong answers.
+    * Spec-pinned by duplicating an epoch's stamped output and re-reading
+    * ([[StreamingOpsSpec]]). Contrast with the validate/dedup sinks,
+    * whose readers consume raw rows (counts would double) — those are
+    * the sinks that need [[EpochLayout]].
     */
   def runUpdateToParquetSink(streaming: DataFrame, outRoot: String,
-      timeoutMs: Long = 600000L): DataFrame = {
+      keys: Seq[String]): DataFrame = {
     val spark = streaming.sparkSession
-    deleteRecursively(new java.io.File(outRoot))
-    val sq = streaming.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.withColumn("_graft_batch_id", lit(batchId))
+    runAvailableNow(spark, streaming.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        batch.withColumn(BatchIdCol, lit(batchId))
           .write.mode("append").parquet(s"$outRoot/data")
       }
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", s"$outRoot/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!sq.awaitTermination(timeoutMs)) {
-      sq.stop()
-      throw new IllegalStateException(
-        s"streaming query did not terminate within ${timeoutMs} ms")
-    }
+      .outputMode(OutputMode.Update()), outRoot, resume = false)
+    readUpdateSink(spark, outRoot, keys)
+  }
+
+  /** [[runUpdateToParquetSink]]'s read-back: per `keys`, the row of the
+    * highest batch id, stamp dropped. */
+  private[graft] def readUpdateSink(spark: SparkSession, outRoot: String,
+      keys: Seq[String]): DataFrame = {
+    val latest = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(BatchIdCol).desc)
     spark.read.parquet(s"$outRoot/data")
+      .withColumn("_graft_rn", row_number().over(latest))
+      .filter(col("_graft_rn") === 1)
+      .drop("_graft_rn", BatchIdCol)
   }
 
   /** Sessionization (batch form): a new session starts when the gap to the
@@ -757,46 +702,13 @@ object StreamingOps {
       .withWatermark("ts", watermark)
       .dropDuplicates("event_id")
 
-  /** Custom streaming state via `flatMapGroupsWithState`: per-user running
-    * totals that survive across micro-batches. The state is an explicit
-    * case class per key — the general tool when built-in
-    * windows/session_window can't express the semantics (escalating
-    * counters, custom eviction, cross-event machines). Update-mode output
-    * emits the refreshed total for each user seen in the batch.
-    */
-  def statefulUserTotals(spark: SparkSession, sourcePath: String,
-      schemaFrom: DataFrame): Dataset[UserRunningTotal] = {
-    import spark.implicits._
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .parquet(sourcePath)
-      .select(col("user_id"), col("value"))
-      // Option value: the oracle is count(*) + SUM(cents) and SQL SUM
-      // skips NULLs — a null-value event counts but contributes 0 cents
-      .as[(Long, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[UserRunningTotal, UserRunningTotal](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, events: Iterator[(Long, Option[Double])],
-            state: GroupState[UserRunningTotal]) =>
-          val prev = state.getOption.getOrElse(UserRunningTotal(uid, 0L, 0L))
-          var n = prev.n_events
-          var cents = prev.value_cents
-          events.foreach { case (_, v) =>
-            n += 1
-            cents += v.map(x => math.floor(x * 100 + 0.5).toLong).getOrElse(0L)
-          }
-          val next = UserRunningTotal(uid, n, cents)
-          state.update(next)
-          Iterator(next)
-      }
-  }
-
-  /** The per-user totals logic of [[StreamingOps.statefulUserTotals]] on
-    * Spark 4's `transformWithState` API: explicit named state slots
-    * ([[ValueState]]) with optional TTL, timers, and multiple state
-    * variables per key — the successor to `flatMapGroupsWithState` for
-    * custom streaming state. Requires the RocksDB state store provider.
+  /** Custom streaming state: per-user running totals that survive across
+    * micro-batches, on Spark 4's `transformWithState` API — explicit named
+    * state slots ([[ValueState]]) with optional TTL, timers, and multiple
+    * state variables per key, the successor to `flatMapGroupsWithState`
+    * for semantics built-in windows can't express (escalating counters,
+    * custom eviction, cross-event machines). Requires the RocksDB state
+    * store provider.
     */
   class UserTotalsProcessor
       extends StatefulProcessor[Long, (Long, Option[Double]), UserRunningTotal] {
@@ -821,12 +733,14 @@ object StreamingOps {
     }
   }
 
-  /** [[statefulUserTotals]] rebuilt on `transformWithState` (see
-    * [[UserTotalsProcessor]]). The caller must run with
+  /** Per-user running totals as update-mode custom state (see
+    * [[UserTotalsProcessor]]). The new state API only supports the
+    * RocksDB store, which [[graft.GraftSession]] fixes in the session
+    * posture (it is also the store a 100 TB deployment wants: state
+    * spills off-heap and snapshots to the checkpoint location); a
+    * caller's own session must name
     * `spark.sql.streaming.stateStore.providerClass =
-    * ...RocksDBStateStoreProvider` — the new state API only supports the
-    * RocksDB store (which is also the store a 100 TB deployment wants:
-    * state spills off-heap and snapshots to the checkpoint location).
+    * ...RocksDBStateStoreProvider` itself.
     */
   def transformWithStateTotals(spark: SparkSession, sourcePath: String,
       schemaFrom: DataFrame): Dataset[UserRunningTotal] = {

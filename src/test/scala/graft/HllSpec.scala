@@ -89,13 +89,8 @@ class HllSpec extends AnyFunSuite with SparkTestBase {
       graft.streaming.StreamingOps.streamingHllRegisters(
         spark, src, batchDf, "v", P,
         sourceOptions = Map("maxFilesPerTrigger" -> "1")),
-      s"$dir/sink")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bucket"))
-      .orderBy(col("_graft_batch_id").desc, col("register").desc)
-    val got = upd.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      s"$dir/sink", Seq("bucket"))
+    val got = upd.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected,
       s"streaming registers diverge: ${got.size} vs ${expected.size} buckets")
   }

@@ -41,13 +41,8 @@ class KmvSpec extends AnyFunSuite with SparkTestBase {
         .option("maxFilesPerTrigger", "1").parquet(src)
         .select(Kmv.kmvHashCol(col("v")).as("h"))
         .groupBy((col("h") % 32).as("bucket")).agg(min(col("h")).as("min_h")),
-      s"$dir/sink")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("bucket"))
-      .orderBy(col("_graft_batch_id").desc, col("min_h").asc)
-    val got = upd.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      s"$dir/sink", Seq("bucket"))
+    val got = upd.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected,
       s"streaming minima diverge: ${got.size} vs ${expected.size} buckets")
   }

@@ -651,6 +651,24 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       s"build sessions through GraftSession, not the bare builder: $builders")
   }
 
+  test("no session-config flips in main code, and streaming paths go through Hadoop") {
+    // a conf.set on the shared session races every other thread planning
+    // on it; settings belong in GraftSession's posture
+    val flip = "\\.conf\\s*\\.\\s*(set|unset)\\s*\\(".r
+    val flips = codeUnder("src/main").collect {
+      case (f, code) if flip.findFirstIn(code).nonEmpty => f
+    }
+    assert(flips.isEmpty, s"session config set/unset in main code: $flips")
+    // java.io.File sees a file:/hdfs:/s3a: URI root as a missing relative
+    // path; sink and source roots resolve through their Hadoop FileSystem
+    val jfile = "java\\.io\\.(File\\b|\\{[^}]*\\bFile\\b)".r
+    val local = codeUnder("src/main").collect {
+      case (f, code) if f.startsWith("streaming") &&
+        jfile.findFirstIn(code).nonEmpty => f
+    }
+    assert(local.isEmpty, s"java.io.File under streaming/: $local")
+  }
+
   test("test scope has two mains: diagnostics are modes of ExplainMain or VerifyUnder") {
     val pat = "def\\s+main\\s*\\(|extends\\s+App\\b".r
     val mains = codeUnder("src/test").collect {

@@ -44,7 +44,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
       .start()
-    sq.awaitTermination(120000)
+    assert(sq.awaitTermination(120000), "query must terminate")
     val got = spark.table("graft_win_test").collect().map(_.toSeq).toSet
     assert(got == expected,
       s"streaming (${got.size} rows) != batch (${expected.size} rows)")
@@ -84,7 +84,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
       .start()
-    sq.awaitTermination(120000)
+    assert(sq.awaitTermination(120000), "query must terminate")
     val got = spark.table("graft_hist_test").collect().map(_.toSeq).toSet
     assert(got == expected,
       s"streaming (${got.size} rows) != batch (${expected.size} rows)")
@@ -181,10 +181,14 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
         assert(dst.setLastModified(1700000000000L + i * 10000L))
     }
     val idx = Dedup.buildCorpusDedupIndex(corpus, "doc_id", "text")
-    val got = graft.streaming.StreamingOps.streamingIncrementalDedup(
+    val sink = graft.streaming.StreamingOps.streamingIncrementalDedup(
       spark, s"$root/src", arriving, "doc_id", "text", idx,
       s"$root/sink", maxFilesPerTrigger = Some(1))
-      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    // the batch= epoch dirs of the retry-safe layout never surface as a
+    // column
+    assert(sink.columns.toSet == arriving.columns.toSet,
+      s"batch= epoch dirs leaked into the schema: ${sink.columns.toSeq}")
+    val got = sink.select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val want = Dedup.incrementalDedup(corpus, arriving, "doc_id", "text",
         precomputedIndex = Some(idx))
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
@@ -194,20 +198,6 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       s"streaming survivors != batch: only-stream=${got -- want}, " +
         s"only-batch=${want -- got}")
     assert(got.nonEmpty, "degenerate fixture: no survivors at all")
-    // retry-safe layout twin: the batchId-keyed overwrite sinks carry
-    // the identical survivor set (keep/drop is a pure function of
-    // (document, frozen index) — same property that makes a replayed
-    // epoch a no-op), and the epoch dirs never surface as a column
-    val gotIdem = graft.streaming.StreamingOps.streamingIncrementalDedup(
-      spark, s"$root/src", arriving, "doc_id", "text", idx,
-      s"$root/sink_idem", maxFilesPerTrigger = Some(1),
-      idempotentBatchPaths = true)
-    Persisted.unpersistAll()
-    assert(gotIdem.columns.toSet == arriving.columns.toSet,
-      s"batch= epoch dirs leaked into the schema: ${gotIdem.columns.toSeq}")
-    assert(gotIdem.select(col("doc_id")).collect().map(_.getLong(0)).toSet
-        == want,
-      "idempotent-layout survivors != batch survivors")
   }
 
   test("streaming rule filter == batch filter, per-file batches") {
@@ -411,13 +401,10 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     corrupt.unpersist(): Unit
   }
 
-  test("streaming validate/quarantine RETRY: idempotentBatchPaths makes a " +
-      "replayed epoch a no-op where plain append double-counts") {
+  test("streaming validate/quarantine RETRY: a replayed epoch is a no-op") {
     // foreachBatch is at-least-once: an epoch can be REPLAYED after a
     // failure between the sink write and the offset commit. The
-    // batchId-keyed overwrite layout must absorb the replay exactly;
-    // the flat append (fine for the gates' immutable AvailableNow
-    // staging) must visibly double — both claims pinned here
+    // batchId-keyed overwrite layout must absorb the replay exactly
     import graft.ops.Validate
     val root = s"$base/validate_retry"
     locally {
@@ -432,11 +419,11 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     val rules = Validate.eventRules()
     val wantValid = Validate.valid(corrupt, rules).count()
     val wantQ = Validate.violationRows(corrupt, "event_id", rules).count()
-    // idempotent mode: write epoch 7, then REPLAY epoch 7
+    // write epoch 7, then REPLAY epoch 7
     graft.streaming.StreamingOps.writeValidatedBatch(
-      corrupt, 7L, "event_id", rules, s"$root/idem", idempotentBatchPaths = true)
+      corrupt, 7L, "event_id", rules, s"$root/idem")
     graft.streaming.StreamingOps.writeValidatedBatch(
-      corrupt, 7L, "event_id", rules, s"$root/idem", idempotentBatchPaths = true)
+      corrupt, 7L, "event_id", rules, s"$root/idem")
     val idemValid = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$root/idem/valid")
     val idemQ = spark.read.option("recursiveFileLookup", "true")
@@ -449,16 +436,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     // surface them as a column)
     assert(idemValid.schema == corrupt.schema,
       s"batch= epoch dirs leaked into the schema: ${idemValid.schema}")
-    // append mode: the same replay double-counts — the failure mode the
-    // idempotent layout exists to remove
-    graft.streaming.StreamingOps.writeValidatedBatch(
-      corrupt, 7L, "event_id", rules, s"$root/app", idempotentBatchPaths = false)
-    graft.streaming.StreamingOps.writeValidatedBatch(
-      corrupt, 7L, "event_id", rules, s"$root/app", idempotentBatchPaths = false)
-    assert(spark.read.parquet(s"$root/app/valid").count() == 2 * wantValid,
-      "plain append must double on replay (this is the documented hazard)")
-    // and the end-to-end idempotent STREAM (the embeddings gate's
-    // posture) still equals the batch partition across micro-batches
+    // and the end-to-end STREAM still equals the batch partition
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/src"))
     locally {
       val tmp = s"$root/_stage"
@@ -471,10 +449,10 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     val (validSink, quarantineSink) =
       graft.streaming.StreamingOps.streamingValidateQuarantine(
         spark, s"$root/src", corrupt, "event_id", rules,
-        s"$root/sink", idempotentBatchPaths = true)
+        s"$root/sink")
     assert(validSink.count() == wantValid &&
       quarantineSink.count() == wantQ,
-      "idempotent-mode stream sinks must equal the batch partition")
+      "stream sinks must equal the batch partition")
     corrupt.unpersist(): Unit
   }
 
@@ -503,9 +481,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("CRASH-INJECTED engine retry: foreachBatch fails AFTER the sink " +
-      "write, restart from checkpoint — idempotent layout == batch " +
-      "relation, plain append double-counts the replayed epoch") {
+  test("CRASH-INJECTED engine retry: restart from checkpoint == batch relation") {
     // the r15 verdict item 1: prove the at-least-once hazard THROUGH the
     // engine, not by calling writeValidatedBatch twice by hand. The
     // afterBatchWrite hook throws once on epoch 0 — after its sink
@@ -523,53 +499,37 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     val rules = Validate.eventRules()
     val wantValid = Validate.valid(corrupt, rules).count()
     val wantQ = Validate.violationRows(corrupt, "event_id", rules).count()
-    val valid0 = Validate.valid(file0, rules).count()
-    val q0 = Validate.violationRows(file0, "event_id", rules).count()
     def crashOnce() = new (Long => Unit) {
       private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
       def apply(batchId: Long): Unit =
         if (batchId == 0L && fired.compareAndSet(false, true))
           throw new RuntimeException("planted crash after epoch-0 sink write")
     }
-    def runCrashed(out: String, idem: Boolean): Unit = {
-      val thrown = intercept[Throwable] {
-        graft.streaming.StreamingOps.streamingValidateQuarantine(
-          spark, s"$root/src", corrupt, "event_id", rules, out,
-          maxFilesPerTrigger = Some(1), idempotentBatchPaths = idem,
-          afterBatchWrite = crashOnce())
-      }
-      def hasPlanted(t: Throwable): Boolean = t != null &&
-        (Option(t.getMessage).exists(_.contains("planted crash")) ||
-          hasPlanted(t.getCause))
-      assert(hasPlanted(thrown),
-        s"query must fail with the planted crash, got $thrown")
-      // epoch 0's writes LANDED before the failure — the at-least-once
-      // window is real, not simulated
-      val sinkDir = new java.io.File(s"$out/valid")
-      assert(sinkDir.isDirectory, "epoch-0 valid write must have landed")
-    }
-    def restart(out: String, idem: Boolean) =
+    val out = s"$root/sink"
+    val thrown = intercept[Throwable] {
       graft.streaming.StreamingOps.streamingValidateQuarantine(
         spark, s"$root/src", corrupt, "event_id", rules, out,
-        maxFilesPerTrigger = Some(1), idempotentBatchPaths = idem,
-        resumeFromCheckpoint = true)
-    // (a) idempotent layout: replayed epoch 0 overwrites its own dirs —
-    // the final sinks equal the batch relation EXACTLY
-    runCrashed(s"$root/idem", idem = true)
-    val (validI, qI) = restart(s"$root/idem", idem = true)
+        maxFilesPerTrigger = Some(1), afterBatchWrite = crashOnce())
+    }
+    def hasPlanted(t: Throwable): Boolean = t != null &&
+      (Option(t.getMessage).exists(_.contains("planted crash")) ||
+        hasPlanted(t.getCause))
+    assert(hasPlanted(thrown),
+      s"query must fail with the planted crash, got $thrown")
+    // epoch 0's writes LANDED before the failure — the at-least-once
+    // window is real, not simulated
+    assert(new java.io.File(s"$out/valid/batch=0").isDirectory,
+      "epoch-0 valid write must have landed")
+    // the replayed epoch 0 overwrites its own dirs — the final sinks
+    // equal the batch relation EXACTLY
+    val (validI, qI) = graft.streaming.StreamingOps.streamingValidateQuarantine(
+      spark, s"$root/src", corrupt, "event_id", rules, out,
+      maxFilesPerTrigger = Some(1), resumeFromCheckpoint = true)
     assert(validI.count() == wantValid && qI.count() == wantQ,
-      s"idempotent sinks after engine retry must equal the batch " +
+      s"sinks after engine retry must equal the batch " +
         s"relation (${validI.count()}/$wantValid, ${qI.count()}/$wantQ)")
     assert(validI.collect().map(_.getLong(0)).toSet ==
       Validate.valid(corrupt, rules).collect().map(_.getLong(0)).toSet)
-    // (b) plain append: the replay double-counts exactly epoch 0 — the
-    // documented hazard reproduced through a real engine retry
-    runCrashed(s"$root/app", idem = false)
-    val (validA, qA) = restart(s"$root/app", idem = false)
-    assert(validA.count() == wantValid + valid0 && qA.count() == wantQ + q0,
-      s"append sinks must double-count the replayed epoch " +
-        s"(${validA.count()} vs ${wantValid + valid0}, " +
-        s"${qA.count()} vs ${wantQ + q0})")
     corrupt.unpersist(): Unit
   }
 
@@ -590,7 +550,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     val (validPre, qPre) =
       graft.streaming.StreamingOps.streamingValidateQuarantine(
         spark, s"$root/src", corrupt, "event_id", rules, s"$root/sink",
-        maxFilesPerTrigger = Some(1), idempotentBatchPaths = true)
+        maxFilesPerTrigger = Some(1))
     val wantValidRows = validPre.collect().map(_.toSeq).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap
     val wantQRows = qPre.collect().map(_.toSeq).toSeq
@@ -609,7 +569,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       s"compaction must shrink files (${repV.get.filesAfter}/$filesBefore)")
     def readBack(name: String) = graft.streaming.StreamingOps
       .readValidatedSink(spark, s"$root/sink", name, "event_id", rules,
-        corrupt, idempotentBatchPaths = true)
+        corrupt)
     def multiset(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq.groupBy(identity).view
         .mapValues(_.size).toMap
@@ -623,15 +583,14 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     // a REPLAY of an absorbed epoch is skipped — sinks unchanged
     graft.streaming.StreamingOps.writeValidatedBatch(
       corrupt.filter(col("event_id") % 4 === 2), 2L, "event_id", rules,
-      s"$root/sink", idempotentBatchPaths = true)
+      s"$root/sink")
     assert(multiset(readBack("valid")) == wantValidRows &&
       !new java.io.File(s"$validRoot/batch=2").exists(),
       "replay of a compacted epoch must be absorbed by skip")
     // a NEW epoch after compaction lands and is read alongside merged
     val extra = corrupt.limit(7)
     graft.streaming.StreamingOps.writeValidatedBatch(
-      extra, 9L, "event_id", rules, s"$root/sink",
-      idempotentBatchPaths = true)
+      extra, 9L, "event_id", rules, s"$root/sink")
     val validPlus = readBack("valid").count()
     assert(validPlus ==
       wantValidRows.values.sum + Validate.valid(extra, rules).count(),
@@ -680,20 +639,16 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     import graft.ops.Validate
     val rules = Validate.eventRules()
     val events = DerivedModel.events(spark, dir).limit(10)
-    Seq(true, false).foreach { idem =>
-      val validEmpty = graft.streaming.StreamingOps.readValidatedSink(
-        spark, s"$base/nonexistent_root_$idem", "valid", "event_id",
-        rules, events, idempotentBatchPaths = idem)
-      assert(validEmpty.count() == 0L &&
-        validEmpty.schema == events.schema,
-        s"empty valid read-back (idem=$idem) must be schema-shaped")
-      val qEmpty = graft.streaming.StreamingOps.readValidatedSink(
-        spark, s"$base/nonexistent_root_$idem", "quarantine", "event_id",
-        rules, events, idempotentBatchPaths = idem)
-      assert(qEmpty.count() == 0L &&
-        qEmpty.columns.toSeq == Seq("event_id", "violation"),
-        s"empty quarantine read-back (idem=$idem) must be audit-shaped")
-    }
+    val validEmpty = graft.streaming.StreamingOps.readValidatedSink(
+      spark, s"$base/nonexistent_root", "valid", "event_id", rules, events)
+    assert(validEmpty.count() == 0L && validEmpty.schema == events.schema,
+      "empty valid read-back must be schema-shaped")
+    val qEmpty = graft.streaming.StreamingOps.readValidatedSink(
+      spark, s"$base/nonexistent_root", "quarantine", "event_id", rules,
+      events)
+    assert(qEmpty.count() == 0L &&
+      qEmpty.columns.toSeq == Seq("event_id", "violation"),
+      "empty quarantine read-back must be audit-shaped")
   }
 
   test("streaming validate/quarantine RESTART from checkpoint ingests " +
@@ -731,33 +686,15 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     land(early, "f0.parquet", 1700000000000L)
     val rules = Validate.eventRules()
     // first run commits the early file and terminates (AvailableNow);
-    // note streamingValidateQuarantine deletes outRoot on entry, so the
-    // restart must NOT call it again — it re-runs the same query shape
-    // against the same checkpoint by hand
-    val (_, _) = graft.streaming.StreamingOps.streamingValidateQuarantine(
+    // the restart resumes the same checkpoint and sinks
+    val (validFirst, _) = graft.streaming.StreamingOps.streamingValidateQuarantine(
       spark, s"$root/src", corrupt, "event_id", rules, s"$root/sink")
-    val validAfterFirst = spark.read.parquet(s"$root/sink/valid").count()
+    val validAfterFirst = validFirst.count()
     land(late, "f1.parquet", 1700000060000L)
-    locally {
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-      val sq = spark.readStream.schema(corrupt.schema)
-        .parquet(s"$root/src")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Validate.valid(batch, rules)
-            .write.mode("append").parquet(s"$root/sink/valid")
-          Validate.violationRows(batch, "event_id", rules)
-            .write.mode("append").parquet(s"$root/sink/quarantine")
-          ()
-        }
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", s"$root/sink/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      assert(sq.awaitTermination(600000L), "restart run timed out")
-    }
-    val validSink = spark.read.parquet(s"$root/sink/valid")
-    val quarantineSink = spark.read.parquet(s"$root/sink/quarantine")
+    val (validSink, quarantineSink) =
+      graft.streaming.StreamingOps.streamingValidateQuarantine(
+        spark, s"$root/src", corrupt, "event_id", rules, s"$root/sink",
+        resumeFromCheckpoint = true)
     // the restart only added the late file's valid rows
     val wantValid = Validate.valid(corrupt, rules)
     assert(validSink.count() == wantValid.count() &&
@@ -794,12 +731,8 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       graft.streaming.StreamingOps.streamingSourceCounters(
         spark, s"$root/src", srcDf, "source", "text",
         sourceOptions = Map("maxFilesPerTrigger" -> "1")),
-      s"$root/sink")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source")).orderBy(col("_graft_batch_id").desc)
-    val got = upd.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .collect().map(r => r.getString(0) ->
+      s"$root/sink", Seq("source"))
+    val got = upd.collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val want = srcDf.groupBy(col("source"))
       .agg(count(lit(1)), sum(graft.text.TextFunctions.tokenCount(col("text"))
@@ -817,8 +750,8 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     // the r15 verdict item 3 decision, pinned: runUpdateToParquetSink
     // keeps the stamped append because replayed epochs re-emit
     // byte-identical rows (versioned state store + deterministic stamp),
-    // so the consumer's max-_graft_batch_id-per-key window absorbs
-    // duplicates — dead bytes, never wrong answers
+    // so readUpdateSink's latest-batch-per-key read absorbs duplicates —
+    // dead bytes, never wrong answers
     import org.apache.spark.sql.functions._
     val root = s"$base/update_replay"
     val docs = DerivedModel.table(spark, dir, "documents").limit(300).cache()
@@ -831,27 +764,27 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       graft.streaming.StreamingOps.streamingSourceCounters(
         spark, s"$root/src", srcDf, "source", "text",
         sourceOptions = Map("maxFilesPerTrigger" -> "1")),
-      s"$root/sink")
-    def consume(df: org.apache.spark.sql.DataFrame) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("_graft_batch_id").desc)
-      df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    }
+      s"$root/sink", Seq("source"))
+    def consume(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val snapshot = consume(upd)
     assert(snapshot.nonEmpty)
     // REPLAY epoch 1: append the stamped rows of batch 1 a second time
     // (exactly what an at-least-once retry of that epoch writes — the
     // state store reloads version 0, recomputes epoch 1 identically,
     // stamps the same batchId)
-    val epoch1 = upd.filter(col("_graft_batch_id") === 1L)
-    assert(epoch1.count() > 0, "fixture must have a non-trivial epoch 1")
+    val stamped = spark.read.parquet(s"$root/sink/data")
+    val stampedRows = stamped.count()
+    val epoch1 = stamped.filter(col("_graft_batch_id") === 1L)
+    val epoch1Rows = epoch1.count()
+    assert(epoch1Rows > 0, "fixture must have a non-trivial epoch 1")
     epoch1.write.mode("append").parquet(s"$root/sink/data")
-    val afterReplay = spark.read.parquet(s"$root/sink/data")
-    assert(afterReplay.count() == upd.count() + epoch1.count(),
+    assert(spark.read.parquet(s"$root/sink/data").count() ==
+      stampedRows + epoch1Rows,
       "the duplicate epoch's rows are physically present (dead bytes)")
-    assert(consume(afterReplay) == snapshot,
+    assert(consume(graft.streaming.StreamingOps.readUpdateSink(
+        spark, s"$root/sink", Seq("source"))) == snapshot,
       "latest-batch-wins consumption must be unchanged by a replayed epoch")
     docs.unpersist(): Unit
   }
@@ -915,7 +848,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    sq.awaitTermination(120000)
+    assert(sq.awaitTermination(120000), "query must terminate")
     val got = spark.table("graft_dedup_test").count()
     assert(got == batchDf.count(),
       s"doubled source must dedup back to ${batchDf.count()} events, got $got")
@@ -942,27 +875,46 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-    sq.awaitTermination(120000)
+    assert(sq.awaitTermination(120000), "query must terminate")
     val got = spark.read.parquet(s"$outRoot/data")
     assert(got.count() == batchDf.count(),
       "file sink must hold exactly the deduped event set")
     assert(got.select("event_id").distinct().count() == batchDf.count())
   }
 
-  test("flatMapGroupsWithState running totals equal batch aggregation") {
+  test("runToParquetSink into a reused file: URI root keeps only the latest run") {
+    import spark.implicits._
+    // the sink root as a URI, the way a cluster deployment names it
+    // (hdfs://, s3a://): a root left in place would resume its old
+    // checkpoint and the file sink would keep the earlier run's rows
+    val root = s"$base/uri_rerun"
+    def run(ids: Seq[Long]): Set[Long] = {
+      ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(s"$root/src")
+      StreamingOps.runToParquetSink(
+          spark.readStream.schema("id BIGINT").parquet(s"$root/src"),
+          s"file:$root/sink")
+        .as[Long].collect().toSet
+    }
+    assert(run(Seq(1L, 2L, 3L)) == Set(1L, 2L, 3L))
+    assert(run(Seq(10L, 20L)) == Set(10L, 20L),
+      "a fresh run must clear the root: no resumed checkpoint, no old rows")
+  }
+
+  test("transformWithState running totals equal batch aggregation") {
     val batchDf = spark.read.parquet(eventsMicros)
-    val sq = StreamingOps.statefulUserTotals(spark, eventsMicros, batchDf)
+    // the new state API only runs on the RocksDB store, which the session
+    // posture fixes
+    val sq = StreamingOps.transformWithStateTotals(spark, eventsMicros, batchDf)
       .writeStream
       .format("memory")
-      .queryName("graft_state_test")
+      .queryName("graft_tws_test")
       .outputMode("update")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    sq.awaitTermination(120000)
-    // keep the LAST update per user (multiple micro-batches emit multiple)
+    assert(sq.awaitTermination(120000), "query must terminate")
     val got = spark.sql(
       """SELECT user_id, max(n_events) AS n, max(value_cents) AS cents
-        |FROM graft_state_test GROUP BY user_id""".stripMargin)
+        |FROM graft_tws_test GROUP BY user_id""".stripMargin)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val expected = batchDf.groupBy("user_id")
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"),
@@ -970,39 +922,6 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
           StreamingOps.valueCents(org.apache.spark.sql.functions.col("value"))).as("cents"))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
-  }
-
-  test("transformWithState running totals equal batch aggregation") {
-    val batchDf = spark.read.parquet(eventsMicros)
-    // the new state API only runs on the RocksDB store; scope the provider
-    // to this query and restore afterwards
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sq = StreamingOps.transformWithStateTotals(spark, eventsMicros, batchDf)
-        .writeStream
-        .format("memory")
-        .queryName("graft_tws_test")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination(120000)
-      val got = spark.sql(
-        """SELECT user_id, max(n_events) AS n, max(value_cents) AS cents
-          |FROM graft_tws_test GROUP BY user_id""".stripMargin)
-        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-      val expected = batchDf.groupBy("user_id")
-        .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"),
-          org.apache.spark.sql.functions.sum(
-            StreamingOps.valueCents(org.apache.spark.sql.functions.col("value"))).as("cents"))
-        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-      assert(got == expected)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   /** Multi-batch ingestion — the production arrival regime the gated
@@ -1133,7 +1052,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-    sq.awaitTermination(120000)
+    assert(sq.awaitTermination(120000), "query must terminate")
     val got = spark.table("graft_ssj_test").collect().map(_.toSeq).toSet
     assert(got == expected,
       s"stream-stream join (${got.size} rows) != batch join (${expected.size} rows)")
@@ -1149,7 +1068,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
       .start()
-    sq.awaitTermination(120000)
+    assert(sq.awaitTermination(120000), "query must terminate")
     val streamed = spark.table("graft_sess_test")
     val batch = StreamingOps.sessionize(batchDf, gapMillis = 30L * 60 * 1000)
     // session_window merges by gap exactly like the lag/cumsum batch form:
@@ -1196,38 +1115,29 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestBase {
     }
     rm(new java.io.File(tmp))
     val schemaFrom = spark.read.parquet(s"$root/b00.parquet")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sq = StreamingOps.streamingCompact(spark, root, schemaFrom,
-          sourceOptions = Map("maxFilesPerTrigger" -> "1"))
-        .writeStream.format("memory").queryName("graft_cdc_test")
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      assert(sq.awaitTermination(120000), "query must terminate")
-      assert(sq.recentProgress.map(_.batchId).distinct.length >= 3,
-        "each staged file must be its own micro-batch")
-      // final state per key = emission with max (ts_ms, event_id) — the
-      // processor's state is monotone in the version order
-      val got = spark.sql(
-        """SELECT user_id, event_type, is_delete FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY user_id
-          |    ORDER BY ts_ms DESC, event_id DESC) AS rn
-          |  FROM graft_cdc_test) WHERE rn = 1 AND NOT is_delete""".stripMargin)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got === Map(2L -> "view", 3L -> "purchase"),
-        "delete must tombstone user 1; out-of-order older update must not resurrect it")
-      // and it IS the batch compaction of the same change set
-      val expected = graft.ops.Merge.compact(
-          spark.read.parquet(root), "user_id", "ts", "event_id",
-          col("event_type") === "error")
-        .select(col("user_id"), col("event_type"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got === expected)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val sq = StreamingOps.streamingCompact(spark, root, schemaFrom,
+        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+      .writeStream.format("memory").queryName("graft_cdc_test")
+      .outputMode("update").trigger(Trigger.AvailableNow()).start()
+    assert(sq.awaitTermination(120000), "query must terminate")
+    assert(sq.recentProgress.map(_.batchId).distinct.length >= 3,
+      "each staged file must be its own micro-batch")
+    // final state per key = emission with max (ts_ms, event_id) — the
+    // processor's state is monotone in the version order
+    val got = spark.sql(
+      """SELECT user_id, event_type, is_delete FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY user_id
+        |    ORDER BY ts_ms DESC, event_id DESC) AS rn
+        |  FROM graft_cdc_test) WHERE rn = 1 AND NOT is_delete""".stripMargin)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got === Map(2L -> "view", 3L -> "purchase"),
+      "delete must tombstone user 1; out-of-order older update must not resurrect it")
+    // and it IS the batch compaction of the same change set
+    val expected = graft.ops.Merge.compact(
+        spark.read.parquet(root), "user_id", "ts", "event_id",
+        col("event_type") === "error")
+      .select(col("user_id"), col("event_type"))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got === expected)
   }
 }
